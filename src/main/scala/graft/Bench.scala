@@ -1,5 +1,7 @@
 package graft
 
+import graft.Measure.num
+
 /** Benchmark main (driver contract): runs the headline query set on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -48,7 +50,7 @@ object Bench {
   /** 1 unmeasured JIT warmup + 3 samples, median. */
   private[graft] def calibrate(): Double = {
     calibrationOnce()
-    Seq.fill(3)(calibrationOnce()).sorted.apply(1)
+    Measure.median(Seq.fill(3)(calibrationOnce()))
   }
 
   /** The same kernel run `threads`-way CONCURRENTLY: wall seconds for
@@ -61,16 +63,35 @@ object Bench {
     * while the single-core kernel read a healthy 0.713/factor 1.01;
     * VERDICT r14 "what's wrong" #5). Emitted as `calib_mc_sec` next
     * to `calibration_sec` so every artifact carries both axes.
+    * A worker thread's failure is rethrown here (the first one wins),
+    * so a broken kernel fails the bench instead of reading as a fast
+    * round. `kernel` is the per-thread work; specs pass their own.
     */
-  private[graft] def calibrationMulti(threads: Int): Double = {
+  private[graft] def calibrationMulti(threads: Int,
+      kernel: () => Unit = () => { calibrationOnce(); () }): Double = {
     def once(): Double = {
-      val t0 = System.nanoTime()
-      val ts = Seq.fill(threads)(new Thread(() => { calibrationOnce(); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val dt = Measure.timed {
+        val ts = Seq.fill(threads)(new Thread(() =>
+          try kernel() catch { case e: Throwable => failure.compareAndSet(null, e); () }))
+        ts.foreach(_.start()); ts.foreach(_.join())
+      }
+      Option(failure.get).foreach(e => throw e)
+      dt
     }
-    Seq.fill(3)(once()).sorted.apply(1)
+    Measure.median(Seq.fill(3)(once()))
   }
+
+  /** Threads for [[calibrationMulti]], or 0 to skip it (reported as
+    * -1 s): subset and runs=1 probes are never compared suite-wide,
+    * and three rounds of the kernel on every core would dominate a
+    * one-query run.
+    */
+  private[graft] def mcThreads(subset: Boolean, runs: Int,
+      cpus: String): Int =
+    if (subset || runs == 1) 0
+    else math.max(1, cpus.toIntOption.getOrElse(
+      Runtime.getRuntime.availableProcessors()))
 
   /** Kernel seconds on the round-13 reference host (quiet; three JVM
     * runs measured 0.714/0.718/0.737 — ±2%). A run's normalization
@@ -102,7 +123,7 @@ object Bench {
     // measures is exactly what Verify oracle-checks and PlanDump
     // dumps. The r14 bench-only preferSortMergeJoin=false flag is
     // gone (reverted to the Spark default) — rationale and the
-    // 183-query A/B in Sessions' scaladoc and OPTIMIZATION_r15.md.
+    // 183-query A/B in the Sessions scaladoc.
     val spark = Sessions.local(cpus).getOrCreate()
     // ERROR, not WARN: bounded-window queries emit harmless WindowExec
     // WARNs that flood the driver's 2000-char stdout tail capture and can
@@ -123,15 +144,12 @@ object Bench {
     val specs = SparkEntry.registry.filterNot(q => excluded(q.name))
       .filter(q => only.forall(_(q.name)))
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def once(name: String): Double =
+      try Measure.timed(SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // host-speed calibration BEFORE any query: the factor rescales all
     // totals so cross-round comparison survives VM changes and driver-
@@ -140,12 +158,12 @@ object Bench {
     val calibFactor = calibrationRef / calib
     // companion multi-core kernel: detects N-way throughput degradation
     // the single-core number is structurally blind to (see scaladoc)
-    val calibMc = calibrationMulti(
-      math.max(1, cpus.toIntOption.getOrElse(
-        Runtime.getRuntime.availableProcessors())))
+    val calibMcThreads = mcThreads(only.nonEmpty, runsPerQuery, cpus)
+    val calibMc =
+      if (calibMcThreads == 0) -1.0 else calibrationMulti(calibMcThreads)
     System.err.println(f"[bench] calibration kernel $calib%.3f s " +
       f"(ref $calibrationRef%.3f, factor $calibFactor%.3f), " +
-      f"${cpus}-way concurrent $calibMc%.3f s")
+      f"$calibMcThreads-way concurrent $calibMc%.3f s")
 
     // warm the session (parquet footers, codegen infra) off the clock —
     // skipped on runs=1 decade probes, where re-executing a minutes-long
@@ -215,11 +233,6 @@ object Bench {
 
     val results = stats.toSeq.map { case (n, (med, _, _)) => n -> med }
     val divergent = stats.collect { case (n, (_, _, true)) => n }.toSeq
-    // Locale.ROOT: the f-interpolator honors the JVM default locale —
-    // a comma decimal separator would make the JSON line unparseable
-    def num(v: Double, places: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${places}f",
-        Double.box(v))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v, 4) }
       .mkString("{", ",", "}")
     val qsNorm = results
@@ -235,7 +248,7 @@ object Bench {
     // runs=1 decade probes report the lone sample, not a median —
     // label honestly so artifact consumers don't mix the two (ADVICE r13)
     val agg = if (runsPerQuery == 1) "single" else "median"
-    val full = s"""{"metric":"total","value":$totalS,"value_norm":${num(total * calibFactor, 3)},"calibration_sec":${num(calib, 4)},"calibration_ref":${num(calibrationRef, 4)},"calib_factor":${num(calibFactor, 4)},"calib_mc_sec":${num(calibMc, 4)},"unit":"sec","queries":$qs,"queries_norm":$qsNorm,"queries_min":$qsMin,"sf":"$sfDir","runs":$runsPerQuery,"agg":"$agg","divergent":$div,"subset":${only.nonEmpty}}"""
+    val full = s"""{"metric":"total","value":$totalS,"value_norm":${num(total * calibFactor, 3)},"calibration_sec":${num(calib, 4)},"calibration_ref":${num(calibrationRef, 4)},"calib_factor":${num(calibFactor, 4)},"calib_mc_sec":${num(calibMc, 4)},"calib_mc_threads":$calibMcThreads,"unit":"sec","queries":$qs,"queries_norm":$qsNorm,"queries_min":$qsMin,"sf":"$sfDir","runs":$runsPerQuery,"agg":"$agg","divergent":$div,"subset":${only.nonEmpty}}"""
     // every run writes its full map to the RUN-SCOPED artifact; the
     // committed quiet reference BENCH_FULL.json is refreshed ONLY by an
     // explicit opt-in — the driver's per-round run and a judge's subset
@@ -262,7 +275,7 @@ object Bench {
     // as fit a hard 1500-char budget; the complete map lives in
     // BENCH_FULL.json.
     val line = renderLine(results, divergent, sfDir, calib, runsPerQuery,
-      calibMc)
+      calibMc, calibMcThreads)
     if (line.length > 1850) System.err.println(
       s"[bench] WARNING stdout line is ${line.length} chars — may exceed the driver's 2000-char tail capture")
     println(line)
@@ -292,9 +305,7 @@ object Bench {
   private[graft] def renderLine(results: Seq[(String, Double)],
       divergent: Seq[String], sfDir: String,
       calibrationSec: Double = calibrationRef, runs: Int = 3,
-      calibMcSec: Double = -1.0): String = {
-    def num(v: Double, places: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
+      calibMcSec: Double = -1.0, calibMcThreads: Int = 0): String = {
     val factor = calibrationRef / calibrationSec
     // divergent is the only unbounded core field (normally empty; a
     // sustained-load round could list dozens) — cap it at 400 chars
@@ -318,10 +329,11 @@ object Bench {
     val calibS = num(calibrationSec, 3)
     val factorS = num(factor, 3)
     val agg = if (runs == 1) "single" else "median"
-    // -1 = not measured (pure spec calls); a real bench always has it
+    // -1 sec / 0 threads = not measured (subset or runs=1 runs, and
+    // pure spec calls)
     val mcS = num(calibMcSec, 3)
     def frame(shownQs: String, nShown: Int): String =
-      s"""{"metric":"total","value":$totalS,"value_norm":$normS,"calibration_sec":$calibS,"calib_factor":$factorS,"calib_mc_sec":$mcS,"unit":"sec","sf":"$sfDir","runs":$runs,"agg":"$agg","n_queries":${results.size},"divergent":$div,"full":"BENCH_LAST.json","queries_shown":$nShown,"queries":$shownQs}"""
+      s"""{"metric":"total","value":$totalS,"value_norm":$normS,"calibration_sec":$calibS,"calib_factor":$factorS,"calib_mc_sec":$mcS,"calib_mc_threads":$calibMcThreads,"unit":"sec","sf":"$sfDir","runs":$runs,"agg":"$agg","n_queries":${results.size},"divergent":$div,"full":"BENCH_LAST.json","queries_shown":$nShown,"queries":$shownQs}"""
     var room = lineBudget - frame("{}", results.size).length
     val bySlowest = results.sortBy(-_._2)
     val shown = scala.collection.mutable.ListBuffer.empty[String]

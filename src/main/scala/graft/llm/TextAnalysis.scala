@@ -428,7 +428,8 @@ object TextAnalysis {
     * a vocabulary-keyed full-outer join, MATERIALIZED once
     * (localCheckpoint) because both the totals aggregate and the
     * scoring pass read it — without that, Catalyst plans the corpus
-    * scans twice (4 scans instead of 2, verified via PlanAudit).
+    * scans twice (4 scans instead of 2, verified in the formatted plan
+    * that `graft.tools.PlanDump` writes).
     * Totals then ride as a broadcast 1-row aggregate and the top-k is
     * a TakeOrderedAndProject over the vocabulary-sized frame, never
     * the corpus.

@@ -312,8 +312,9 @@ object Relational {
     // spills (131.5 s, SCALING r13). One select+distinct per aggregate
     // dedups map-side BEFORE its exchange, so three small shuffles move
     // only per-partition-distinct pairs; measured 99.5 s vs 111.8 s on
-    // the same 600 M-row corpus with identical results
-    // (tools/DistinctProbe asserts equality), and the spill-pressure
+    // the same 600 M-row corpus with identical results (asserted by
+    // the DistinctProbe tool, since removed; its numbers stay in
+    // SCALING.md), and the spill-pressure
     // profile is what matters at 100 TB. The oracle keeps the
     // declarative count(distinct) SQL — the two formulations check
     // each other.
@@ -900,8 +901,9 @@ object Relational {
   * declarative `count(distinct ...)` alternative plans as an Expand
   * that replicates every row once per aggregate through one shuffle
   * (1.8 B rows / ~25 GB write at the 1000× corpus); measured 99.5 s
-  * vs 111.8 s at 600 M rows with identical output
-  * (tools/DistinctProbe asserts equality each run).
+  * vs 111.8 s at 600 M rows with identical output (asserted each run
+  * by the DistinctProbe tool, since removed; its numbers stay in
+  * SCALING.md).
   */
 object MultiDistinct {
   def preAgg(li: DataFrame): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.util.concurrent.{Executors, TimeUnit}
-import org.apache.spark.sql.SparkSession
 
 /** Concurrent-execution probe: N threads race registry queries through
   * ONE SparkSession — the multi-tenant / notebook-server shape (Spark
@@ -23,13 +22,7 @@ object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val nThreads = args.headOption.map(_.toInt).getOrElse(8)
     val rounds = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("16").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
@@ -44,21 +37,22 @@ object ConcurrencyProbe {
     val pool = Executors.newFixedThreadPool(nThreads)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     (1 to rounds).foreach { r =>
-      val t0 = System.nanoTime()
-      val tasks = scala.util.Random.shuffle(specs).map { q =>
-        pool.submit(new Runnable {
-          override def run(): Unit =
-            try {
-              val n = q.run(spark, sf).count()
-              if (n != baseline(q.name))
-                failures.add(s"${q.name}: got $n rows, single-threaded ${baseline(q.name)}")
-            } catch { case e: Throwable =>
-              failures.add(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(120)}")
-            }
-        })
+      val dt = graft.Measure.timed {
+        val tasks = scala.util.Random.shuffle(specs).map { q =>
+          pool.submit(new Runnable {
+            override def run(): Unit =
+              try {
+                val n = q.run(spark, sf).count()
+                if (n != baseline(q.name))
+                  failures.add(s"${q.name}: got $n rows, single-threaded ${baseline(q.name)}")
+              } catch { case e: Throwable =>
+                failures.add(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(120)}")
+              }
+          })
+        }
+        tasks.foreach(_.get())
       }
-      tasks.foreach(_.get())
-      println(f"[conc] round $r: ${specs.size} queries x $nThreads threads, ${(System.nanoTime() - t0) / 1e9}%.1f s, failures so far: ${failures.size()}")
+      println(f"[conc] round $r: ${specs.size} queries x $nThreads threads, $dt%.1f s, failures so far: ${failures.size()}")
     }
     pool.shutdown(); pool.awaitTermination(1, TimeUnit.MINUTES)
     failures.forEach(f => println(s"  FAIL $f"))

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, num, timed}
 import graft.graph.{CodeNode, GraphManifest, GraphRunner, NodeContext, Packaging}
 import graft.llm.Corpus
 
@@ -29,33 +29,12 @@ object GraphProbe {
     val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docsRows = graft.Fixtures.table(spark, corpusDir, "documents").count()
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
-    val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-    def fresh(prefix: String): String = {
-      val p = Files.createTempDirectory(prefix); roots += p; p.toString
-    }
-    def cleanup(): Unit = roots.foreach { r =>
-      val s = Files.walk(r)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
+    val dirs = new TempDirs
 
     def corpusAndBench(dir: String) = {
       val docs = graft.Fixtures.table(spark, dir, "documents")
@@ -91,7 +70,7 @@ object GraphProbe {
 
     /** Author the component, zip it into a registry, return a resolver. */
     def packagedResolver(): String => Option[GraphManifest] = {
-      val comp = fresh("graphprobe-comp")
+      val comp = dirs.fresh("graphprobe-comp")
       Files.writeString(Paths.get(comp, "graph.yml"),
         s"""title: curation chain
            |functions:
@@ -106,7 +85,7 @@ object GraphProbe {
            |stores:
            |  - table: dispositions
            |""".stripMargin)
-      val registry = fresh("graphprobe-reg")
+      val registry = dirs.fresh("graphprobe-reg")
       Files.createDirectories(Paths.get(registry, "acme", "curation"))
       Packaging.packageGraphTo(comp, s"$registry/acme/curation/v1.zip")
       Packaging.componentResolverFromZips(registry)
@@ -114,7 +93,7 @@ object GraphProbe {
 
     // ---- fused baseline: identical plans, plain parquet sinks --------
     val fusedS = median((1 to runs).map { _ =>
-      val out = fresh("graphprobe-fused")
+      val out = dirs.fresh("graphprobe-fused")
       timed {
         val dispo = curate(corpusDir)
         dispo.write.mode("overwrite").parquet(s"$out/dispositions.parquet")
@@ -126,7 +105,7 @@ object GraphProbe {
     // ---- full graph path: package + resolve + compile + run ----------
     var rowsOut = 0L
     val graphS = median((1 to runs).map { _ =>
-      val host = fresh("graphprobe-host")
+      val host = dirs.fresh("graphprobe-host")
       Files.writeString(Paths.get(host, "graph.yml"),
         """functions:
           |  - uses: acme/curation@v1
@@ -135,7 +114,7 @@ object GraphProbe {
           |  - table: dispositions
           |  - table: dispo_counts
           |""".stripMargin)
-      val wh = fresh("graphprobe-wh")
+      val wh = dirs.fresh("graphprobe-wh")
       timed {
         val resolver = packagedResolver()
         val runner = new GraphRunner(spark, GraphManifest.load(host), wh,
@@ -148,12 +127,10 @@ object GraphProbe {
     })
 
     try {
-      def num(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
       spark.sparkContext.setLogLevel("OFF")
       spark.stop()
       println(s"""{"probe":"graph_e2e","corpus":"$corpusDir","docs_rows":$docsRows,"dispo_rows":$rowsOut,"runs":$runs,"fused_s":${num(fusedS)},"graph_s":${num(graphS)},"overhead_s":${num(graphS - fusedS)}}""")
       System.out.flush()
-    } finally cleanup()
+    } finally dirs.deleteAll()
   }
 }

@@ -2,46 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan audit: prints the formatted physical plan of selected registry
-  * queries and greps for the properties that matter at 100 TB —
-  * parquet PushedFilters, pruned ReadSchema, broadcast joins, and
-  * whole-stage codegen coverage.
-  * Run: sbt "runMain graft.tools.PlanAudit [query ...]"
-  */
-object PlanAudit {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.01"
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("q02_filter", "q04_join_broadcast", "q10_agg_tpch1",
-        "q15_window_rank", "l05_cosine_knn", "q09_join_asof",
-        "l02_minhash_lsh", "l12b_embed_neardup_lsh", "l13_neardup_clusters")
-    names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println(s"\n========== $n ==========")
-      println(plan)
-      val pushed = "PushedFilters: \\[[^\\]]+\\]".r.findAllIn(plan).toList
-      val schemas = "ReadSchema: [^\n]+".r.findAllIn(plan).toList
-      val bhj = plan.split("\n").count(_.contains("BroadcastHashJoin"))
-      val smj = plan.split("\n").count(_.contains("SortMergeJoin"))
-      val wsc = "WholeStageCodegen".r.findAllIn(plan).length
-      println(s"--- summary[$n]: pushedFilters=${pushed.size} " +
-        s"broadcastJoins=$bhj sortMergeJoins=$smj codegenSpans=$wsc")
-      pushed.foreach(p => println(s"    $p"))
-      schemas.foreach(s => println(s"    ${s.take(120)}"))
-    }
-    spark.stop()
-  }
-}
-
 /** Normalized physical-plan fingerprints for the headline queries — a
   * regression tripwire for the plan properties that matter at 100 TB:
   * a future change that un-broadcasts a join, adds a shuffle, or drops
@@ -250,11 +210,9 @@ object PlanDigest {
     }.mkString("{\n", ",\n", "\n}\n")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shared config at the spec session's 4 cores: the digests
+    // PlanDigestSpec compares against are taken under the same session
+    val spark = graft.Sessions.local("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = render(headline.map(n => n -> digestFor(spark, sf, n)))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Degenerate-input robustness sweep: every registry query against
@@ -30,6 +30,7 @@ import org.apache.spark.sql.functions._
   * so regressions fail `sbt test`, not a probe someone has to re-run.
   *
   * Usage: runMain graft.tools.RobustnessProbe [empty|nulls|ragged|both]
+  * (any other argument prints usage and exits 2)
   */
 object RobustnessProbe {
 
@@ -112,43 +113,32 @@ object RobustnessProbe {
   private def rootCause(e: Throwable): Throwable =
     if (e.getCause == null || (e.getCause eq e)) e else rootCause(e.getCause)
 
+  /** (mode, report label, corpus builder), in sweep order. */
+  private val corpora: Seq[(String, String, (SparkSession, String, String) => Unit)] = Seq(
+    ("empty", "EMPTY corpus", buildEmpty),
+    ("nulls", "NULL-heavy corpus", buildNulls(_, _, _)),
+    ("ragged", "RAGGED-embeddings corpus", buildRagged))
+
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("both") // empty | nulls | ragged | both
+    val mode = args.headOption.getOrElse("both")
+    val picked = corpora.filter(c => mode == "both" || mode == c._1)
+    if (picked.isEmpty || args.length > 1) {
+      System.err.println("usage: RobustnessProbe [empty|nulls|ragged|both]")
+      sys.exit(2)
+    }
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def report(label: String, dir: String): Int = {
-      val t0 = System.nanoTime()
-      val fails = sweep(spark, dir)
-      val dt = (System.nanoTime() - t0) / 1e9
+    val total = picked.map { case (m, label, build) =>
+      val dir = s"/tmp/graft_degen/$m"
+      build(spark, base, dir)
+      var fails = Seq.empty[(String, String)]
+      val dt = graft.Measure.timed { fails = sweep(spark, dir) }
       println(f"\n== $label: ${graft.SparkEntry.registry.size} queries, ${fails.size} failures ($dt%.1f s) ==")
       fails.foreach { case (n, err) => println(s"  FAIL $n — $err") }
       fails.size
-    }
-
-    var total = 0
-    if (mode == "empty" || mode == "both") {
-      val dir = "/tmp/graft_degen/empty"
-      buildEmpty(spark, base, dir)
-      total += report("EMPTY corpus", dir)
-    }
-    if (mode == "nulls" || mode == "both") {
-      val dir = "/tmp/graft_degen/nulls"
-      buildNulls(spark, base, dir)
-      total += report("NULL-heavy corpus", dir)
-    }
-    if (mode == "ragged" || mode == "both") {
-      val dir = "/tmp/graft_degen/ragged"
-      buildRagged(spark, base, dir)
-      total += report("RAGGED-embeddings corpus", dir)
-    }
+    }.sum
     spark.stop()
     if (total > 0) sys.exit(1)
   }

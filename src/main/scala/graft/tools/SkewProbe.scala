@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Measure.{median, timed}
 
 /** Skew probe: does a hot join key pin the engine to one straggler
   * task, and do the two documented mitigations — AQE's runtime
@@ -33,13 +35,7 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -90,17 +86,11 @@ object SkewProbe {
     conf("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     def timeIt(label: String)(mk: => DataFrame): (Double, Long) = {
-      var n = -1L
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val df = mk
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        n = mk.count()
-        dt
-      }.sorted
-      println(f"[skew] $label%-12s median ${runs(1)}%6.2f s  (min ${runs.head}%5.2f max ${runs.last}%5.2f)  rows=$n")
-      (runs(1), n)
+      val runs = Seq.fill(3)(timed(
+        mk.write.format("noop").mode("overwrite").save()))
+      val (med, n) = (median(runs), mk.count())
+      println(f"[skew] $label%-12s median $med%6.2f s  (min ${runs.min}%5.2f max ${runs.max}%5.2f)  rows=$n")
+      (med, n)
     }
 
     def plainJoin(l: DataFrame): DataFrame =

@@ -1,10 +1,8 @@
 package graft.tools
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, num, timed}
 import graft.core.{Catalog, TableHandle}
 import graft.streaming.StreamingBridge
 
@@ -31,7 +29,8 @@ import graft.streaming.StreamingBridge
   *               (a reused checkpoint would make reruns no-ops)
   *   phases    — comma list of dedup,curated,neardup,session (default
   *               all; phase-split runs let a multi-minute decade probe
-  *               survive a single-arm failure — r14 lesson)
+  *               survive a single-arm failure — r14 lesson); an
+  *               unknown name prints usage and exits 2
   *
   * Prints one JSON line; prep (corpus append, one-time near-dup index
   * build — the cost [[graft.llm.TextDedup.buildNearDupIndex]] pays
@@ -42,16 +41,17 @@ object StreamProbe {
     val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batchDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val runs = if (args.length > 2) args(2).toInt else 3
+    val allPhases = Set("dedup", "curated", "neardup", "session")
     val phases: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet
-      else Set("dedup", "curated", "neardup", "session")
+      else allPhases
+    if (args.length > 4 || !phases.subsetOf(allPhases)) {
+      System.err.println("usage: StreamProbe [corpusDir] [batchDir] [runs] " +
+        "[phases: comma list of dedup,curated,neardup,session]")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Sessions.local(cpus)
       // the decade lesson (r14): the default HDFSBackedStateStore holds
       // every open session IN HEAP — the 100 M-event sessionize drain
       // OOMed a single availableNow micro-batch at 8 g. RocksDB is the
@@ -59,7 +59,6 @@ object StreamProbe {
       // configuration any 100 TB streaming deployment runs with.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -74,26 +73,10 @@ object StreamProbe {
     val batchRows = batchDocs.count()
     val eventRows = events.count()
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
-    val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-    def freshRoot(): String = {
-      val p = Files.createTempDirectory("streamprobe")
-      roots += p
-      p.toString
-    }
     // each run stages a full corpus copy (1.7 GB of parquet at the
     // 100x corpus) — delete them on exit or 9 runs fill /tmp
-    def cleanup(): Unit = roots.foreach { r =>
-      import java.nio.file.{Files => F}
-      val s = F.walk(r)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => F.deleteIfExists(p))
-      finally s.close()
-    }
+    val dirs = new TempDirs
+    def freshRoot(): String = dirs.fresh("streamprobe")
 
     /** (prep seconds, drain seconds) medians for one ingest mode. */
     def probeIngest(mode: String): (Double, Double) = {
@@ -154,10 +137,8 @@ object StreamProbe {
           if (phases("neardup")) probeIngest("neardup") else (-1.0, -1.0)
         val s = if (phases("session")) probeSession() else -1.0
         (d, c, ndP, ndD, s)
-      } finally cleanup()
+      } finally dirs.deleteAll()
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
     println(s"""{"probe":"streaming","corpus":"$corpusDir","corpus_rows":$corpusRows,"batch_rows":$batchRows,"event_rows":$eventRows,"runs":$runs,"dedup_drain_s":${num(dedupS)},"curated_drain_s":${num(curatedS)},"neardup_index_build_s":${num(ndPrepS)},"neardup_drain_s":${num(ndDrainS)},"session_drain_s":${num(sessionS)}}""")

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, num, timed}
 import graft.core.{Catalog, TableHandle}
 
 /** Upsert/catalog scale probe (SCALING.md evidence for §2.1 S5): the
@@ -44,14 +44,7 @@ object UpsertProbe {
     val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val corpus = graft.Fixtures.table(spark, corpusDir, "orders")
@@ -74,21 +67,8 @@ object UpsertProbe {
     val (b8, b64, b256) = (batch(8), batch(64), batch(Buckets))
     val batchRows = b8.count()
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
-    val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-    def freshRoot(): String = {
-      val p = Files.createTempDirectory("upsertprobe"); roots += p; p.toString
-    }
-    def cleanup(): Unit = roots.foreach { r =>
-      val s = Files.walk(r)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
+    val dirs = new TempDirs
+    def freshRoot(): String = dirs.fresh("upsertprobe")
 
     try {
       // ---- bucketed table: build once per run, time each upsert width
@@ -133,13 +113,11 @@ object UpsertProbe {
       val compactT = timed { h.compact() }
       val filesAfter = countFiles(new Catalog(root), "orders_c")
 
-      def num(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
       spark.sparkContext.setLogLevel("OFF")
       spark.stop()
       println(s"""{"probe":"upsert","corpus":"$corpusDir","corpus_rows":$corpusRows,"batch_rows":$batchRows,"buckets":$Buckets,"runs":$runs,"build_s":${num(median(buildT))},"upsert8_s":${num(median(up8))},"upsert64_s":${num(median(up64))},"upsert256_s":${num(median(up256))},"upsert_unbucketed_s":${num(median(upFlat))},"append8_s":${num(appendT)},"compact_s":${num(compactT)},"files_before":$filesBefore,"files_after":$filesAfter}""")
       System.out.flush()
-    } finally cleanup()
+    } finally dirs.deleteAll()
   }
 
   private def countFiles(cat: Catalog, name: String): Int =

@@ -12,11 +12,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The shared session config (`Sessions`) at 4 cores, so the specs
+    * and `PlanDigestSpec`'s pinned plans run under the measured config.
+    * WARN keeps Spark's INFO chatter out of the test log.
+    */
+  lazy val session: SparkSession = {
+    val s = Sessions.local("4").appName("graft-test").getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -30,7 +30,8 @@ class BenchFramingSpec extends AnyFunSuite {
     assert(node.get("full").asText() == "BENCH_LAST.json")
     // calibration fields must always be present for cross-run compare
     assert(node.has("calibration_sec") && node.has("calib_factor")
-      && node.has("value_norm"), s"$label: calibration fields missing")
+      && node.has("value_norm") && node.has("calib_mc_sec")
+      && node.has("calib_mc_threads"), s"$label: calibration fields missing")
     // the shown subset is the slowest queries — worth eyeballing first
     if (results.nonEmpty && node.get("queries_shown").asInt() > 0) {
       val slowest = results.maxBy(_._2)._1
@@ -98,5 +99,29 @@ class BenchFramingSpec extends AnyFunSuite {
       .map(node.get("divergent").get(_).asText())
     assert(shown.last.startsWith("...+"), "overflow marker expected")
     assert(shown.init.size + shown.last.drop(4).toInt == 60)
+  }
+
+  test("multi-core calibration rethrows a worker thread's failure") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException] {
+      graft.Bench.calibrationMulti(4, () =>
+        if (calls.incrementAndGet() == 2) throw new IllegalStateException("kernel broke"))
+    }
+    assert(e.getMessage == "kernel broke")
+    assert(graft.Bench.calibrationMulti(2, () => ()) >= 0.0)
+  }
+
+  test("calib_mc_threads is reported, and 0 threads / -1 s when skipped") {
+    import graft.Bench.mcThreads
+    assert(mcThreads(subset = true, runs = 3, cpus = "32") == 0)
+    assert(mcThreads(subset = false, runs = 1, cpus = "32") == 0)
+    assert(mcThreads(subset = false, runs = 3, cpus = "32") == 32)
+    val measured = mapper.readTree(graft.Bench.renderLine(Seq("q1" -> 1.0),
+      Nil, "sf", calibMcSec = 0.8, calibMcThreads = 32))
+    assert(measured.get("calib_mc_threads").asInt() == 32)
+    assert(math.abs(measured.get("calib_mc_sec").asDouble() - 0.8) < 1e-9)
+    val skipped = mapper.readTree(graft.Bench.renderLine(Seq("q1" -> 1.0), Nil, "sf"))
+    assert(skipped.get("calib_mc_threads").asInt() == 0)
+    assert(skipped.get("calib_mc_sec").asDouble() == -1.0)
   }
 }

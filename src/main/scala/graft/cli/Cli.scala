@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.graph.{GraphConfigEditor, GraphDiff, GraphManifest, GraphRunner,
-  Packaging}
+  GraphScheduler, Packaging}
 
 /** The devkit command-line surface
   * (/root/reference/patterns/cli/main.py:63-91 wires config / create /
@@ -585,36 +585,18 @@ object Cli {
         .getOrElse(abort(s"no node with node_file '$rel' in ${dir.resolve("graph.yml")}"))
     }
 
-    val warehouse = sys.env.getOrElse("GRAFT_WAREHOUSE",
-      dir.resolve(".graft-warehouse").toString)
-    // reuse a session when the process already has one (a spec, a
-    // notebook); only stop a session this command itself created
-    val existing = org.apache.spark.sql.SparkSession.getDefaultSession
-    val spark = existing.getOrElse {
-      // shared session config (graft.Sessions): the CLI plans queries
-      // under the same semantics Bench measures and Verify checks
-      val s = graft.Sessions.configure(
-        org.apache.spark.sql.SparkSession.builder()
-          .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-          .appName(s"graft-trigger-$id"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    try {
-      val runner = new GraphRunner(spark, manifest, warehouse,
-        componentResolver =
-          Packaging.componentResolverFromZips(registryRoot.toString))
+    withRunner(dir, manifest, s"graft-trigger-$id", registryResolver) { runner =>
       runner.runNode(id)
       println(s"Triggered node ${nodePath.getOrElse(id)}")
-    } finally if (existing.isEmpty) spark.stop()
+    }
   }
 
-  /** The `--due` poll: run every cron-due node (catch-up rule,
-    * GraphScheduler scaladoc) and advance the last-run ledger to the
-    * poll instant. Exposed with an explicit `now` so specs drive it
-    * with an injected clock; `--due now` uses the wall clock.
+  /** The `--due` poll: run every cron-due node, subgraph and component
+    * nodes included (catch-up rule, GraphScheduler scaladoc), and
+    * advance the last-run ledger to the poll instant. Exposed with an
+    * explicit `now` so specs drive it with an injected clock; `--due
+    * now` uses the wall clock. A poll with nothing due starts no Spark
+    * session.
     */
   private def triggerDue(a: Args, at: String): Unit = {
     val dir =
@@ -624,36 +606,50 @@ object Cli {
     val now =
       if (at == "now") java.time.LocalDateTime.now()
       else java.time.LocalDateTime.parse(at)
-    val warehouse = sys.env.getOrElse("GRAFT_WAREHOUSE",
-      dir.resolve(".graft-warehouse").toString)
-    val ledger = Paths.get(warehouse).resolve("_scheduler")
+    val ledger = Paths.get(warehouseFor(dir)).resolve("_scheduler")
       .resolve("last_runs.tsv")
-    val lastRuns = graft.graph.GraphScheduler.loadLastRuns(ledger)
-    val due = graft.graph.GraphScheduler.due(manifest, lastRuns, now)
+    val lastRuns = GraphScheduler.loadLastRuns(ledger)
+    val resolver = registryResolver
+    val due = GraphScheduler.due(manifest.flatNodes(resolver), lastRuns, now)
     if (due.isEmpty) { println("No nodes due."); return }
+    withRunner(dir, manifest, "graft-trigger-due", resolver) { runner =>
+      due.foreach(runner.runNode)
+      // ledger advances to the POLL instant (not each node's cron
+      // minute): nextAfter(now) is the next real firing either way,
+      // and a crash between runs re-runs at most this poll's nodes
+      GraphScheduler.saveLastRuns(ledger, lastRuns ++ due.map(_ -> now))
+      println(s"Triggered ${due.size} due node(s): ${due.mkString(", ")}")
+    }
+  }
+
+  private def warehouseFor(dir: Path): String =
+    sys.env.getOrElse("GRAFT_WAREHOUSE", dir.resolve(".graft-warehouse").toString)
+
+  private def registryResolver: String => Option[GraphManifest] =
+    Packaging.componentResolverFromZips(registryRoot.toString)
+
+  /** Run `body` against a runner for the app in `dir`. Reuses the
+    * process's session when it has one (a spec, a notebook); otherwise
+    * builds one through the shared session config (graft.Sessions), so
+    * the CLI plans queries under the same semantics Bench measures and
+    * Verify checks, and stops only a session it created itself.
+    */
+  private def withRunner(dir: Path, manifest: GraphManifest, appName: String,
+      resolver: String => Option[GraphManifest])(body: GraphRunner => Unit): Unit = {
     val existing = org.apache.spark.sql.SparkSession.getDefaultSession
     val spark = existing.getOrElse {
       val s = graft.Sessions.configure(
         org.apache.spark.sql.SparkSession.builder()
           .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-          .appName("graft-trigger-due"),
+          .appName(appName),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
-    try {
-      val runner = new GraphRunner(spark, manifest, warehouse,
-        componentResolver =
-          Packaging.componentResolverFromZips(registryRoot.toString))
-      due.foreach(runner.runNode)
-      // ledger advances to the POLL instant (not each node's cron
-      // minute): nextAfter(now) is the next real firing either way,
-      // and a crash between runs re-runs at most this poll's nodes
-      graft.graph.GraphScheduler.saveLastRuns(ledger,
-        lastRuns ++ due.map(_ -> now))
-      println(s"Triggered ${due.size} due node(s): ${due.mkString(", ")}")
-    } finally if (existing.isEmpty) spark.stop()
+    try body(new GraphRunner(spark, manifest, warehouseFor(dir),
+      componentResolver = resolver))
+    finally if (existing.isEmpty) spark.stop()
   }
 
   // ---------------------------------------------------- delete/update/config

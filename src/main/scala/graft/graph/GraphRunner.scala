@@ -89,7 +89,8 @@ final class GraphRunner(
   val catalog = new Catalog(warehouse)
   private val changedStores = mutable.Set.empty[String]
   private val states = mutable.Map.empty[String, State]
-  private[graph] val signals = mutable.ArrayBuffer.empty[(String, String)]
+  // serializes ingest with signal propagation (see appendLocked)
+  private val ingestLock = new Object
 
   // logical clock: ticks once per runNode; changedAt/ranAt let run()
   // detect nodes whose input store changed AFTER they last ran
@@ -102,34 +103,29 @@ final class GraphRunner(
   }
 
   def tableHandle(store: String): TableHandle =
-    new TableHandle(spark, catalog, store, "rw", onSignal = (t, kind) => this.synchronized {
-      signals += ((t, kind))
+    new TableHandle(spark, catalog, store, "rw", onSignal = (t, _) => this.synchronized {
       changedStores += t
       changedAt(t) = clock
     })
 
-  /** Flattened node list: subgraphs and components expand recursively,
-    * exposed ports aliased onto the parent wiring (edit.py:175-200;
-    * tests/cli/test_create.py:30-44).
-    */
-  lazy val flatNodes: List[(String, FunctionNode, GraphManifest)] = {
-    def expand(m: GraphManifest, prefix: String): List[(String, FunctionNode, GraphManifest)] =
-      m.functions.flatMap { f =>
-        val id = prefix + f.id.getOrElse(f.displayName)
-        f.kind match {
-          case "subgraph" =>
-            val sub = GraphManifest.load(m.dir.resolve(f.nodeFile.get).toString)
-            expand(sub, id + "/")
-          case "component" =>
-            componentResolver(f.uses.get) match {
-              case Some(sub) => expand(sub, id + "/")
-              case None => List((id, f, m)) // unresolved component: validation error later
-            }
-          case _ => List((id, f, m))
-        }
-      }
-    expand(manifest, "")
-  }
+  /** Expanded nodes ([[GraphManifest.flatNodes]]). */
+  lazy val flatNodes: List[(String, FunctionNode, GraphManifest)] =
+    manifest.flatNodes(componentResolver)
+
+  // The dependency graph, built once: store → producing node ids (declared
+  // outputs and webhook auto-stores), and node id → ids of the producers
+  // of its inputs (a node reading its own output depends on itself, which
+  // validate reports as a cycle).
+  private lazy val producers: Map[String, List[String]] =
+    flatNodes.flatMap { case (id, f, _) =>
+      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
+    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  private lazy val deps: Map[String, Set[String]] =
+    flatNodes.map { case (id, f, _) =>
+      id -> f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet
+    }.toMap
+  private lazy val byId: Map[String, (FunctionNode, GraphManifest)] =
+    flatNodes.distinctBy(_._1).map { case (id, f, m) => id -> (f, m) }.toMap
 
   /** Compile-time checks; returns human-readable errors (empty = ok). */
   def validate(): Seq[String] = {
@@ -160,6 +156,11 @@ final class GraphRunner(
     flatNodes.foreach { case (id, f, _) =>
       if (f.kind == "invalid")
         errors += s"node $id: no node_file/webhook/uses"
+      f.trigger.foreach { t =>
+        try Cron(t)
+        catch { case e: IllegalArgumentException =>
+          errors += s"node $id: invalid trigger '$t': ${e.getMessage}" }
+      }
       if (f.kind == "component" && componentResolver(f.uses.getOrElse("")).isEmpty)
         errors += s"node $id: component '${f.uses.getOrElse("")}' not found"
       f.inputs.foreach { case (port, store) =>
@@ -200,10 +201,6 @@ final class GraphRunner(
         }
       }
     }
-    // cycle check over store-mediated edges
-    val producers = flatNodes.flatMap { case (id, f, _) =>
-      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // one producer per store: two writers were silent last-wins under
     // serial execution, but waves run independent nodes concurrently —
     // make the ambiguity a compile error like the platform does
@@ -211,9 +208,7 @@ final class GraphRunner(
       if (ids.size > 1)
         errors += s"store '$store' has multiple producers: ${ids.sorted.mkString(", ")}"
     }
-    val adj = flatNodes.map { case (id, f, _) =>
-      id -> f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet
-    }.toMap
+    // cycle check over store-mediated edges
     val visiting = mutable.Set.empty[String]
     val done = mutable.Set.empty[String]
     def dfs(n: String): Boolean = { // true = cycle
@@ -221,23 +216,17 @@ final class GraphRunner(
       else if (visiting(n)) true
       else {
         visiting += n
-        val cyc = adj.getOrElse(n, Set.empty).exists(dfs)
+        val cyc = deps.getOrElse(n, Set.empty).exists(dfs)
         visiting -= n; done += n
         cyc
       }
     }
-    if (adj.keys.exists(dfs)) errors += "graph contains a cycle"
+    if (deps.keys.exists(dfs)) errors += "graph contains a cycle"
     errors.toSeq
   }
 
   /** Topological order over store-mediated dependencies. */
-  def topoOrder: List[String] = {
-    val producers = flatNodes.flatMap { case (id, f, _) =>
-      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deps = flatNodes.map { case (id, f, _) =>
-      id -> f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet
-    }.toMap
+  lazy val topoOrder: List[String] = {
     val order = mutable.ArrayBuffer.empty[String]
     val seen = mutable.Set.empty[String]
     def visit(n: String): Unit =
@@ -253,18 +242,12 @@ final class GraphRunner(
     * together and the scheduler interleaves their stages across the
     * cluster instead of serializing whole branches).
     */
-  private[graph] def waveOrder: List[List[String]] = {
-    val producers = flatNodes.flatMap { case (id, f, _) =>
-      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deps = flatNodes.map { case (id, f, _) =>
-      id -> (f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet - id)
-    }.toMap
+  private[graph] lazy val waveOrder: List[List[String]] = {
     val level = mutable.Map.empty[String, Int]
     def levelOf(n: String): Int = level.get(n) match {
       case Some(l) => l
       case None =>
-        val ds = deps.getOrElse(n, Set.empty)
+        val ds = deps.getOrElse(n, Set.empty) - n
         val l = if (ds.isEmpty) 0 else ds.map(levelOf).max + 1
         level(n) = l
         l
@@ -292,11 +275,8 @@ final class GraphRunner(
       } finally pool.shutdown()
   }
 
-  private def nodeById(id: String): (FunctionNode, GraphManifest) = {
-    val (_, f, m) = flatNodes.find(_._1 == id).getOrElse(
-      throw new IllegalArgumentException(s"unknown node '$id'"))
-    (f, m)
-  }
+  private def nodeById(id: String): (FunctionNode, GraphManifest) =
+    byId.getOrElse(id, throw new IllegalArgumentException(s"unknown node '$id'"))
 
   /** Run one node (manual trigger — services/trigger.py:10-22). */
   def runNode(id: String): Unit = {
@@ -373,34 +353,34 @@ final class GraphRunner(
   /** Webhook ingest: append JSON-lines micro-batch to the webhook's
     * auto-created same-name table (create.py:177-197; node.py:544-553).
     */
-  def ingestWebhook(name: String, jsonLinesPath: String): Unit = {
-    val df = spark.read.json(jsonLinesPath)
-    val h = tableHandle(name)
-    h.append(df)
-    h.flush()
-  }
+  def ingestWebhook(name: String, jsonLinesPath: String): Unit =
+    appendLocked(name, spark.read.json(jsonLinesPath))
 
   /** Webhook ingest from in-memory JSON bodies (the HTTP edge's path):
     * parse with Spark's JSON inference, stamp the request key the
     * respond contract is keyed on (node.py:544-553).
     */
-  private val ingestLock = new Object
   def ingestWebhookJson(name: String, jsonBodies: Seq[String],
       requestKey: String): Unit = {
     import spark.implicits._
-    val df = spark.read.json(jsonBodies.toDS())
+    appendLocked(name, spark.read.json(jsonBodies.toDS())
       .withColumn("patterns_request_key",
-        org.apache.spark.sql.functions.lit(requestKey))
-    // serialize ingest+propagate (concurrent FIRST writes would race
-    // version creation: two newVersion/setActive pairs, last one wins
-    // and the other's rows land in a non-active version); response
-    // POLLING stays concurrent — that is what the server pool buys
+        org.apache.spark.sql.functions.lit(requestKey)))
+  }
+
+  /** The one ingest append. Serialized with other ingests and with
+    * propagation: concurrent FIRST writes would race version creation
+    * (two newVersion/setActive pairs, last one wins and the other's rows
+    * land in a non-active version). JSON parsing happens before the lock
+    * and response POLLING stays concurrent — that is what the server
+    * pool buys.
+    */
+  private def appendLocked(name: String, df: DataFrame): Unit =
     ingestLock.synchronized {
       val h = tableHandle(name)
       h.append(df)
       h.flush()
     }
-  }
 
   /** Response row for a request key, as a JSON object with the key
     * column stripped (the HTTP edge returns the node's payload, not the
@@ -452,14 +432,6 @@ final class GraphRunner(
     Option(responseLatches.get(requestKey)).foreach(_.complete(()))
   }
 
-  /** Nodes whose cron trigger fires in the minute of `t`
-    * (G2 — the scheduler loop polls this).
-    */
-  def dueNodes(t: java.time.LocalDateTime): Seq[String] =
-    flatNodes.collect {
-      case (id, f, _) if f.trigger.exists(Cron(_).matches(t)) => id
-    }
-
   private[graph] def changedStoresSnapshot: Set[String] = changedStores.toSet
   /** Drop pending change signals (requestNewRun(triggerDownstream=false)
     * suppresses downstream propagation of that run's writes —
@@ -484,70 +456,4 @@ final class GraphRunner(
     dependents.foreach(runNode)
     dependents
   }
-}
-
-/** Cron + run-request scheduler loop over a GraphRunner (G2/T9): each
-  * tick runs cron-due nodes and any follow-up runs previously requested
-  * via `State.requestNewRun`, then propagates one signal wave to
-  * downstream consumers. Driven by an external clock so it is testable
-  * and embeddable (call `tick` from any timer).
-  */
-final class Scheduler(runner: GraphRunner) {
-  // follow-up run time + whether that run's writes propagate downstream
-  private val followUps =
-    scala.collection.mutable.Map.empty[String, (java.time.LocalDateTime, Boolean)]
-
-  def pendingFollowUps: Map[String, java.time.LocalDateTime] =
-    followUps.view.mapValues(_._1).toMap
-
-  def tick(t: java.time.LocalDateTime): Seq[String] = {
-    val dueFollowUps = followUps.collect {
-      case (id, (at, _)) if !at.isAfter(t) => id
-    }.toList
-    // trigger_downstream=false governs the REQUESTED follow-up run, not
-    // the run that requested it (node.py request_new_run): a follow-up
-    // scheduled with false executes, but its writes stay out of this
-    // tick's propagation wave. (A store another due node changed before
-    // this one ran is outside the before/after diff and still
-    // propagates.)
-    val cronDue = runner.dueNodes(t)
-    // a node that is ALSO cron-due this tick runs on the schedule's
-    // authority — the follow-up's no-propagate flag must not mute it
-    val suppressFor =
-      dueFollowUps.filter(id => !followUps(id)._2).toSet -- cronDue
-    dueFollowUps.foreach(followUps.remove)
-    val due = (cronDue ++ dueFollowUps).distinct
-    due.foreach { id =>
-      val before = runner.changedStoresSnapshot
-      runner.runNode(id)
-      if (suppressFor(id))
-        runner.suppressChanges(runner.changedStoresSnapshot -- before)
-      val st = runner.stateFor(id)
-      st.pendingNewRun.foreach { case (triggerDownstream, waitSecs) =>
-        followUps(id) = (t.plusSeconds(waitSecs), triggerDownstream)
-      }
-      st.clearNewRun()
-    }
-    val propagated = if (due.nonEmpty) runner.propagateOnce() else Nil
-    due ++ propagated
-  }
-}
-
-object GraphRunner {
-  /** Local component registry (G6): resolves `org/component@v1` to
-    * `<root>/<org>/<component>/<version>/graph.yml`
-    * (edit.py:175-200; services/download.py:8-20 fetches zips from the
-    * platform registry — locally the registry is a directory tree).
-    */
-  def componentResolverFromDir(root: String): String => Option[GraphManifest] =
-    ref => {
-      val m = raw"([^/@]+)/([^/@]+)@(.+)".r
-      ref match {
-        case m(org, name, version) =>
-          val p = java.nio.file.Paths.get(root, org, name, version, "graph.yml")
-          if (java.nio.file.Files.exists(p)) Some(GraphManifest.load(p.toString))
-          else None
-        case _ => None
-      }
-    }
 }

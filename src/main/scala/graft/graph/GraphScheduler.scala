@@ -2,6 +2,7 @@ package graft.graph
 
 import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** G2 runtime: the scheduling decision behind graph.yml `trigger:`
@@ -17,21 +18,20 @@ import scala.jdk.CollectionConverters._
   * so a poll gap longer than the cron period runs the node exactly
   * once (catch-up), never zero or N times, and a poll more frequent
   * than the period never double-fires. A node with no recorded run is
-  * immediately due (first-poll catch-up). This is the
-  * [[Cron.nextAfter]] formulation; the minute-match [[GraphRunner.dueNodes]]
-  * remains for tick-aligned embedding ([[Scheduler]]).
+  * immediately due (first-poll catch-up). This is the only cron rule:
+  * `graft trigger --due` polls it against its ledger file and
+  * [[Scheduler]] against an in-memory map, both over the expanded
+  * nodes ([[GraphManifest.flatNodes]]), so triggers inside subgraphs
+  * and components fire too.
   */
 object GraphScheduler {
 
-  def due(manifest: GraphManifest,
+  def due(nodes: Seq[(String, FunctionNode, GraphManifest)],
       lastRuns: Map[String, LocalDateTime],
       now: LocalDateTime): Seq[String] =
-    manifest.functions.flatMap { f =>
-      for {
-        t <- f.trigger
-        id = f.id.getOrElse(f.displayName)
-        if lastRuns.get(id).forall(last => !Cron(t).nextAfter(last).isAfter(now))
-      } yield id
+    nodes.collect {
+      case (id, f, _) if f.trigger.exists(t => lastRuns.get(id)
+          .forall(last => !Cron(t).nextAfter(last).isAfter(now))) => id
     }
 
   /** Last-run ledger for the CLI poller: one `id<TAB>isoDateTime` line
@@ -62,5 +62,55 @@ object GraphScheduler {
     Files.write(path, runs.toSeq.sortBy(_._1)
       .map { case (id, ts) => s"$id\t$ts" }.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+}
+
+/** Cron + run-request scheduler loop over a GraphRunner (G2/T9): each
+  * tick runs the nodes [[GraphScheduler.due]] selects against this
+  * scheduler's in-memory last-run map (advanced to the tick instant
+  * after they ran, as `--due` advances its ledger) and any follow-up
+  * runs previously requested via `State.requestNewRun`, then propagates
+  * one signal wave to downstream consumers. Driven by an external clock
+  * so it is testable and embeddable (call `tick` from any timer).
+  */
+final class Scheduler(runner: GraphRunner) {
+  // follow-up run time + whether that run's writes propagate downstream
+  private val followUps = mutable.Map.empty[String, (LocalDateTime, Boolean)]
+  private val lastRuns = mutable.Map.empty[String, LocalDateTime]
+
+  def pendingFollowUps: Map[String, LocalDateTime] =
+    followUps.view.mapValues(_._1).toMap
+
+  def tick(t: LocalDateTime): Seq[String] = {
+    val dueFollowUps = followUps.collect {
+      case (id, (at, _)) if !at.isAfter(t) => id
+    }.toList
+    // trigger_downstream=false governs the REQUESTED follow-up run, not
+    // the run that requested it (node.py request_new_run): a follow-up
+    // scheduled with false executes, but its writes stay out of this
+    // tick's propagation wave. (A store another due node changed before
+    // this one ran is outside the before/after diff and still
+    // propagates.)
+    val cronDue = GraphScheduler.due(runner.flatNodes, lastRuns.toMap, t)
+    // a node that is ALSO cron-due this tick runs on the schedule's
+    // authority — the follow-up's no-propagate flag must not mute it
+    val suppressFor =
+      dueFollowUps.filter(id => !followUps(id)._2).toSet -- cronDue
+    dueFollowUps.foreach(followUps.remove)
+    val due = (cronDue ++ dueFollowUps).distinct
+    due.foreach { id =>
+      val before = runner.changedStoresSnapshot
+      runner.runNode(id)
+      if (suppressFor(id))
+        runner.suppressChanges(runner.changedStoresSnapshot -- before)
+      val st = runner.stateFor(id)
+      st.pendingNewRun.foreach { case (triggerDownstream, waitSecs) =>
+        followUps(id) = (t.plusSeconds(waitSecs), triggerDownstream)
+      }
+      st.clearNewRun()
+    }
+    lastRuns ++= cronDue.map(_ -> t)
+    val propagated = if (due.nonEmpty) runner.propagateOnce() else Nil
+    due ++ propagated
   }
 }

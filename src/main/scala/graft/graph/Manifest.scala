@@ -118,6 +118,28 @@ final case class GraphManifest(
     exposesOutputs: List[String],
     dir: Path) {
 
+  /** Flattened node list: subgraphs and components expand recursively,
+    * exposed ports aliased onto the parent wiring (edit.py:175-200;
+    * tests/cli/test_create.py:30-44); each entry is (expanded id, node,
+    * declaring manifest). Spark-free, so a cron poll decides what is due
+    * before any session exists. An unresolved component stays a node of
+    * its own, which validation reports.
+    */
+  def flatNodes(componentResolver: String => Option[GraphManifest])
+      : List[(String, FunctionNode, GraphManifest)] = {
+    def expand(m: GraphManifest, prefix: String): List[(String, FunctionNode, GraphManifest)] =
+      m.functions.flatMap { f =>
+        val id = prefix + f.id.getOrElse(f.displayName)
+        val sub = f.kind match {
+          case "subgraph" => Some(GraphManifest.load(m.dir.resolve(f.nodeFile.get).toString))
+          case "component" => componentResolver(f.uses.get)
+          case _ => None
+        }
+        sub.fold(List((id, f, m)))(expand(_, id + "/"))
+      }
+    expand(this, "")
+  }
+
   /** Human-readable graph summary — the UI-facing metadata the platform
     * renders per node (`title`, `description_file`, trigger, wiring;
     * edit.py:104-126). Description files resolve against the graph dir;

@@ -12,10 +12,11 @@ import scala.jdk.CollectionConverters._
   * the root (helpers.py:110-125 — `compress_directory` over
   * `directory_contents_to_upload`). The platform stores components as
   * exactly such zips and the CLI fetches them by `org/component@version`
-  * (services/download.py:8-20); `componentResolverFromZips` is the
-  * engine-side equivalent over a local zip store, so a graph can
-  * `uses: org/component@v1` against packaged artifacts, not just
-  * checked-out directory trees.
+  * (services/download.py:8-20); `componentResolverFromZips` (a local
+  * zip store) and `componentResolverFromHttp` (a registry server) are the
+  * engine-side equivalents, so a graph can `uses: org/component@v1`
+  * against packaged artifacts. Both differ only in how they fetch a
+  * zip; parsing the key, caching, unpacking and loading are shared.
   *
   * Entries are written in sorted path order with fixed timestamps, so
   * the same directory contents always produce byte-identical zips —
@@ -93,63 +94,56 @@ object Packaging {
   }
 
   /** Component resolver over a zip store: `org/component@v1` →
-    * `<root>/<org>/<component>/<v1>.zip`, unpacked once into a cache
-    * dir and loaded as a graph manifest. The on-disk layout mirrors the
-    * platform registry's download keys; resolution is pure-local (this
-    * engine has no egress — a remote fetch would slot in where
-    * `Files.readAllBytes` reads the zip).
+    * `<root>/<org>/<component>/<v1>.zip`. The on-disk layout mirrors the
+    * platform registry's download keys; resolution is pure-local.
     */
   def componentResolverFromZips(root: String,
-      cacheDir: Option[String] = None): String => Option[GraphManifest] = {
-    val cache = Paths.get(cacheDir.getOrElse(
-      Files.createTempDirectory("graft-components").toString))
-    ref => ref match {
-      case ComponentRe(org, name, version) =>
-        val zipPath = Paths.get(root, org, name, s"$version.zip")
-        if (!Files.exists(zipPath)) None
-        else {
-          val dest = cache.resolve(s"$org/$name/$version")
-          if (!Files.exists(dest.resolve("graph.yml")))
-            unpack(Files.readAllBytes(zipPath), dest.toString)
-          Some(GraphManifest.load(dest.toString))
-        }
-      case _ => None
+      cacheDir: Option[String] = None): String => Option[GraphManifest] =
+    cachingResolver(cacheDir) { (org, name, version) =>
+      val zipPath = Paths.get(root, org, name, s"$version.zip")
+      if (Files.exists(zipPath)) Some(Files.readAllBytes(zipPath)) else None
     }
-  }
 
   /** Component resolver over an HTTP registry: `org/component@v1` →
     * `GET <baseUrl>/components/<org>/<component>/<v1>.zip`, the wire
     * shape of the reference's `download_component_zip`
     * (services/download.py:17-20 GETs the component's zip by its
-    * org/name/version key). Fetched zips unpack once into the cache
-    * (slip-guarded) and load as graph manifests; a 404 or connection
-    * failure resolves to None — the graph compile then reports
-    * "component not found" like any unresolved `uses:`.
+    * org/name/version key). A 404 or connection failure resolves to
+    * None — the graph compile then reports "component not found" like
+    * any unresolved `uses:`.
     */
   def componentResolverFromHttp(baseUrl: String,
       cacheDir: Option[String] = None): String => Option[GraphManifest] = {
-    val cache = Paths.get(cacheDir.getOrElse(
-      Files.createTempDirectory("graft-components-http").toString))
     val client = java.net.http.HttpClient.newHttpClient()
+    cachingResolver(cacheDir) { (org, name, version) =>
+      val uri = java.net.URI.create(
+        s"${baseUrl.stripSuffix("/")}/components/$org/$name/$version.zip")
+      try {
+        val resp = client.send(
+          java.net.http.HttpRequest.newBuilder(uri).GET().build(),
+          java.net.http.HttpResponse.BodyHandlers.ofByteArray())
+        if (resp.statusCode() == 200) Some(resp.body()) else None
+      } catch { case _: java.io.IOException => None }
+    }
+  }
+
+  /** The one resolution path both registries share: a key must match
+    * [[ComponentRe]]; its zip is fetched only when the cache (default: a
+    * fresh temp dir) lacks it, unpacked once (slip-guarded) into
+    * `<cache>/<org>/<component>/<version>`, and loaded as a manifest.
+    */
+  private def cachingResolver(cacheDir: Option[String])(
+      fetch: (String, String, String) => Option[Array[Byte]])
+      : String => Option[GraphManifest] = {
+    val cache = Paths.get(cacheDir.getOrElse(
+      Files.createTempDirectory("graft-components").toString))
     ref => ref match {
       case ComponentRe(org, name, version) =>
         val dest = cache.resolve(s"$org/$name/$version")
-        if (Files.exists(dest.resolve("graph.yml")))
-          Some(GraphManifest.load(dest.toString))
-        else {
-          val uri = java.net.URI.create(
-            s"${baseUrl.stripSuffix("/")}/components/$org/$name/$version.zip")
-          try {
-            val resp = client.send(
-              java.net.http.HttpRequest.newBuilder(uri).GET().build(),
-              java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-            if (resp.statusCode() != 200) None
-            else {
-              unpack(resp.body(), dest.toString)
-              Some(GraphManifest.load(dest.toString))
-            }
-          } catch { case _: java.io.IOException => None }
-        }
+        val graphYml = dest.resolve("graph.yml")
+        if (!Files.exists(graphYml))
+          fetch(org, name, version).foreach(unpack(_, dest.toString))
+        if (Files.exists(graphYml)) Some(GraphManifest.load(dest.toString)) else None
       case _ => None
     }
   }
@@ -175,9 +169,9 @@ final class ComponentRegistryServer(root: String, port: Int = 0) {
       key.stripSuffix(".zip").split('/') match {
         case Array(org, name, version) if ex.getRequestMethod == "GET" &&
             key.endsWith(".zip") =>
-          // registry keys are [\w\-.]+ segments: anything else (e.g. a
-          // traversal attempt) is not a key and 404s
-          val ok = Seq(org, name, version).forall(_.matches("[\\w\\-.]+"))
+          // the resolvers' key grammar: anything else (e.g. a traversal
+          // attempt) is not a key and 404s
+          val ok = Packaging.ComponentRe.matches(s"$org/$name@$version")
           val zip = Paths.get(root, org, name, s"$version.zip")
           if (ok && Files.exists(zip)) {
             val bytes = Files.readAllBytes(zip)

@@ -3,6 +3,8 @@ package graft.graph
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Loopback HTTP edge for webhook nodes — the smallest honest version
   * of the platform's per-webhook URL (the reference serves
@@ -34,7 +36,9 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
       try route(ex)
       catch {
         case e: Throwable =>
-          respond(ex, 500, s"""{"error":${jsonStr(e.getMessage)}}""")
+          // json4s renders any message (newlines included) as valid JSON
+          respond(ex, 500, compact(render(
+            JObject("error" -> JString(Option(e.getMessage).getOrElse(""))))))
       } finally ex.close()
   })
   // Small pool, not serial dispatch: a `?wait=true` client polling for
@@ -97,7 +101,4 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
     ex.sendResponseHeaders(code, bytes.length.toLong)
     ex.getResponseBody.write(bytes)
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + Option(s).getOrElse("").replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

@@ -355,6 +355,39 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("trigger --due runs a cron node declared inside a subgraph") {
+    withSandbox { (_, work) =>
+      val app = work.resolve("subcron")
+      Files.createDirectories(app.resolve("sub"))
+      Files.writeString(app.resolve("sub").resolve("gen.sql"), "select 7 as answer\n")
+      Files.writeString(app.resolve("sub").resolve("graph.yml"),
+        """functions:
+          |  - node_file: gen.sql
+          |    id: cron01
+          |    trigger: 1 * * * *
+          |    outputs: {result: out_t}
+          |stores:
+          |  - table: out_t
+          |""".stripMargin)
+      Files.writeString(app.resolve("graph.yml"),
+        """functions:
+          |  - node_file: sub/graph.yml
+          |    id: subnode01
+          |""".stripMargin)
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        assert(run("trigger", "--app", app.toString, "--due", "2026-01-01T05:01") == 0)
+      }
+      assert(out.toString("UTF-8").contains("subnode01/cron01"), out.toString("UTF-8"))
+      val runner = new GraphRunner(spark, GraphManifest.load(app.toString),
+        app.resolve(".graft-warehouse").toString)
+      assert(runner.tableHandle("out_t").read.collect().map(_.getInt(0)).toSeq == Seq(7))
+      assert(Files.readString(app.resolve(".graft-warehouse")
+        .resolve("_scheduler").resolve("last_runs.tsv"))
+        .startsWith("subnode01/cron01\t2026-01-01T05:01"))
+    }
+  }
+
   test("update app --public, list --json, delete, config") {
     withSandbox { (home, work) =>
       val app = work.resolve("meta-app").toString

@@ -56,6 +56,12 @@ class GraphRunnerSpec extends SparkSpec {
         |    inputs: {in: nosuchstore}
         |    outputs: {out: t}
         |    parameters: {p: MISSING}
+        |  - node_file: z.sql
+        |    id: zerostep
+        |    trigger: "*/0 * * * *"
+        |  - node_file: m.sql
+        |    id: minute61
+        |    trigger: 61 * * * *
         |stores:
         |  - table: t
         |""".stripMargin)
@@ -63,6 +69,9 @@ class GraphRunnerSpec extends SparkSpec {
     val errors = runner.validate()
     assert(errors.exists(_.contains("unknown store 'nosuchstore'")))
     assert(errors.exists(_.contains("Parameter p has no default or value")))
+    // a malformed trigger fails the compile, not the first cron poll
+    assert(errors.exists(_.startsWith("node zerostep: invalid trigger '*/0 * * * *': ")))
+    assert(errors.exists(_.startsWith("node minute61: invalid trigger '61 * * * *': ")))
   }
 
   test("typed parameters + connections validate at compile (node.py:513-542)") {
@@ -235,7 +244,6 @@ class GraphRunnerSpec extends SparkSpec {
         count(lit(1)).as("cnt"))
     assert(out.count() == direct.count())
     assert(out.exceptAll(direct.select(out.columns.map(col): _*)).count() == 0)
-    assert(runner.signals.nonEmpty)
   }
 
   test("code node + stream cursor + upsert chain (FIXTURES.md B3 shape)") {
@@ -338,11 +346,9 @@ class GraphRunnerSpec extends SparkSpec {
   }
 
   test("component resolution from a local registry (uses: org/component@v1)") {
-    val reg = tmpDir("registry")
-    Files.createDirectories(Paths.get(reg, "acme", "wordcount", "v1"))
-    Files.writeString(Paths.get(reg, "acme", "wordcount", "v1", "count.sql"),
-      "select count(*) as n from {{ input }}")
-    Files.writeString(Paths.get(reg, "acme", "wordcount", "v1", "graph.yml"),
+    val comp = tmpDir("component")
+    write(comp, "count.sql", "select count(*) as n from {{ input }}")
+    write(comp, "graph.yml",
       """functions:
         |  - node_file: count.sql
         |    id: count001
@@ -352,6 +358,9 @@ class GraphRunnerSpec extends SparkSpec {
         |  - table: src
         |  - table: result
         |""".stripMargin)
+    val reg = tmpDir("registry")
+    Files.createDirectories(Paths.get(reg, "acme", "wordcount"))
+    Packaging.packageGraphTo(comp, s"$reg/acme/wordcount/v1.zip")
     val dir = tmpDir("graph")
     write(dir, "graph.yml",
       """functions:
@@ -361,8 +370,9 @@ class GraphRunnerSpec extends SparkSpec {
         |  - table: src
         |  - table: result
         |""".stripMargin)
+    val resolver = Packaging.componentResolverFromZips(reg)
     val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
-      componentResolver = GraphRunner.componentResolverFromDir(reg))
+      componentResolver = resolver)
     assert(runner.validate().isEmpty)
     import spark.implicits._
     val seed = runner.tableHandle("src")
@@ -372,6 +382,8 @@ class GraphRunnerSpec extends SparkSpec {
     // unresolvable component → compile error, mirroring the platform
     val bad = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"))
     assert(bad.validate().exists(_.contains("component 'acme/wordcount@v1' not found")))
+    // path-shaped keys are not registry keys: nothing resolves outside the root
+    assert(resolver("../..@v1").isEmpty && resolver("acme/../wordcount@v1").isEmpty)
   }
 
   test("scheduler: cron tick runs the node, propagates downstream, honors requestNewRun") {
@@ -505,21 +517,30 @@ class GraphRunnerSpec extends SparkSpec {
     assert(runner.tableHandle("counts").read.head().getLong(0) == 1L)
   }
 
-  test("dueNodes matches cron triggers for the given minute") {
+  test("scheduler: ticks that skip the cron minute still run the node once per period") {
+    import java.time.LocalDateTime
     val dir = tmpDir("graph")
-    write(dir, "q.sql", "select 1 as one")
     write(dir, "graph.yml",
       """functions:
-        |  - node_file: q.sql
+        |  - node_file: hourly.scala
         |    id: hourly01
         |    trigger: 1 * * * *
-        |    outputs: {out: t}
-        |stores:
-        |  - table: t
         |""".stripMargin)
-    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"))
-    assert(runner.dueNodes(java.time.LocalDateTime.of(2026, 1, 1, 5, 1)) == Seq("hourly01"))
-    assert(runner.dueNodes(java.time.LocalDateTime.of(2026, 1, 1, 5, 2)).isEmpty)
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val hourly = new CodeNode {
+      def run(ctx: NodeContext): Unit = { runs.incrementAndGet(); () }
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("hourly.scala" -> hourly))
+    val sched = new Scheduler(runner)
+    // a never-run node is due on its first tick (catch-up rule)
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 30)) == Seq("hourly01"))
+    // 09:59 is before the 10:01 firing; 10:02 is past it though no tick
+    // landed on 10:01, so the node runs exactly once for that period
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 59)).isEmpty)
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 10, 2)) == Seq("hourly01"))
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 10, 3)).isEmpty)
+    assert(runs.get == 2)
   }
 
   test("two producers of one store is a compile error (waves would race)") {

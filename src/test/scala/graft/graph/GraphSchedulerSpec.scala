@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraphSchedulerSpec extends AnyFunSuite {
 
-  private def manifest(triggers: (String, Option[String])*): GraphManifest =
+  private def nodes(triggers: (String, Option[String])*) =
     GraphManifest(
       title = None, slug = None,
       functions = triggers.toList.map { case (id, t) =>
@@ -21,9 +21,9 @@ class GraphSchedulerSpec extends AnyFunSuite {
           parameters = Map.empty)
       },
       stores = Nil, exposesInputs = Nil, exposesOutputs = Nil,
-      dir = java.nio.file.Paths.get("."))
+      dir = java.nio.file.Paths.get(".")).flatNodes(_ => None)
 
-  private val hourlyAt01 = manifest("h01" -> Some("1 * * * *"))
+  private val hourlyAt01 = nodes("h01" -> Some("1 * * * *"))
   private def at(h: Int, m: Int) = LocalDateTime.of(2026, 1, 1, h, m)
 
   test("fires exactly at the cron boundary, not before") {
@@ -58,7 +58,7 @@ class GraphSchedulerSpec extends AnyFunSuite {
   }
 
   test("never-run node with a trigger is immediately due; untriggered never") {
-    val m = manifest("h01" -> Some("1 * * * *"), "plain01" -> None)
+    val m = nodes("h01" -> Some("1 * * * *"), "plain01" -> None)
     assert(GraphScheduler.due(m, Map.empty, at(5, 0)) == Seq("h01"))
     // a node without a trigger is never schedule-selected
     val allRun = Map("h01" -> at(5, 1), "plain01" -> at(5, 1))
@@ -66,7 +66,7 @@ class GraphSchedulerSpec extends AnyFunSuite {
   }
 
   test("multiple nodes with different cadences select independently") {
-    val m = manifest(
+    val m = nodes(
       "hourly01" -> Some("1 * * * *"),
       "daily01" -> Some("30 2 * * *"))
     val last = Map("hourly01" -> at(2, 1), "daily01" -> at(2, 30))
@@ -107,7 +107,7 @@ class GraphSchedulerSpec extends AnyFunSuite {
       "good01" -> LocalDateTime.of(2026, 1, 1, 5, 1),
       "good02" -> LocalDateTime.of(2026, 1, 1, 6, 1)))
     // and the skipped node is immediately due at the next poll
-    val m = manifest("bad01" -> Some("1 * * * *"))
+    val m = nodes("bad01" -> Some("1 * * * *"))
     assert(GraphScheduler.due(m, loaded, at(5, 0)) == Seq("bad01"))
   }
 }

@@ -175,4 +175,30 @@ class WebhookServerSpec extends SparkSpec {
       assert(rows.select("patterns_request_key").distinct().count() == 12)
     } finally server.stop()
   }
+
+  test("a failing node gives a 500 whose body is valid JSON carrying the message") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: boom.scala
+        |    id: boom0001
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    // two lines, a quote and a backslash, like a Spark analysis error
+    val msg = "[UNRESOLVED_COLUMN] \"x\" not found\n\tat C:\\plan line 2"
+    val boom = new CodeNode {
+      def run(ctx: NodeContext): Unit = throw new IllegalStateException(msg)
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("boom.scala" -> boom))
+    val server = new WebhookServer(runner)
+    try {
+      val r = post(server.url("hook"), """{"n":1}""")
+      assert(r.statusCode() == 500, r.body())
+      val json = org.json4s.jackson.JsonMethods.parse(r.body())
+      assert((json \ "error") == org.json4s.JString(msg))
+    } finally server.stop()
+  }
 }

@@ -279,7 +279,13 @@ class StreamingBridgeSpec extends SparkSpec {
     assert(step.matches(LocalDateTime.of(2026, 1, 2, 9, 30)))  // Friday
     assert(!step.matches(LocalDateTime.of(2026, 1, 3, 9, 30))) // Saturday
     assert(!step.matches(LocalDateTime.of(2026, 1, 2, 8, 30)))
-    intercept[IllegalArgumentException](graft.graph.Cron("* * *"))
+    // malformed expressions are rejected at construction, not at a poll
+    for (bad <- Seq("* * *", "*/0 * * * *", "61 * * * *", "a * * * *",
+        "1,,2 * * * *", "* 24 * * *", "* * 0 * *", "* * * 13 *", "* * * * 7",
+        "30-10 * * * *", "1/2/3 * * * *")) {
+      val e = intercept[IllegalArgumentException](graft.graph.Cron(bad))
+      assert(e.getMessage.contains(s"cron '$bad'"), e.getMessage)
+    }
   }
 
   test("deduped streaming ingest: within-batch, against-corpus, and exactly-once across drains") {

@@ -2,16 +2,21 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.Serialization
 
 /** One stored table version — "an actual database table that may or may
   * not be stored on disk yet" (/root/reference/patterns/node/node.py:84-114).
+  * `schemaDdl` is recorded at commit; None before it, or in meta.json
+  * written before this field existed.
   */
 final case class VersionMeta(
     id: String,
     recordCount: Long,
-    createdAtMs: Long)
+    createdAtMs: Long,
+    schemaDdl: Option[String] = None)
 
 /** Per-table metadata document. `orderings` carries the schema roles
   * that drive streaming defaults: "monotonic" (strictly_monotonic_ordering)
@@ -151,27 +156,47 @@ final class Catalog(val root: String) {
     meta(name).flatMap(_.activeVersion).map(v => versionPath(name, v))
 
   /** Point the table at `versionId` (create-or-swap; old versions are
-    * retained until GC — node.py:399-405 "non-destructive").
+    * retained until GC — node.py:399-405 "non-destructive"), recording
+    * its row count and schema; also how an in-place write re-records
+    * the active version.
     */
-  def setActive(name: String, versionId: String, recordCount: Long): Unit =
+  def setActive(name: String, versionId: String, recordCount: Long,
+      schema: StructType): Unit = {
+    val ddl = TableHandle.normNull(schema).asInstanceOf[StructType].toDDL
     update(name) { m =>
       m.copy(
         activeVersion = Some(versionId),
         versions = m.versions.map(v =>
-          if (v.id == versionId) v.copy(recordCount = recordCount) else v))
+          if (v.id == versionId) v.copy(recordCount = recordCount, schemaDdl = Some(ddl))
+          else v))
     }
-
-  def setRecordCount(name: String, versionId: String, recordCount: Long): Unit =
-    update(name) { m =>
-      m.copy(versions = m.versions.map(v =>
-        if (v.id == versionId) v.copy(recordCount = recordCount) else v))
-    }
+  }
 
   /** reset(): pointer swap to a fresh null version; data retained
     * (node.py:216-222, 399-405).
     */
   def reset(name: String): Unit =
     update(name)(_.copy(activeVersion = None))
+
+  /** A version's recorded schema; inferred from its files only for a
+    * version written before schemas were recorded. */
+  def schema(spark: SparkSession, name: String, versionId: String): StructType =
+    meta(name).flatMap(_.versions.find(_.id == versionId)).flatMap(_.schemaDdl)
+      .map(StructType.fromDDL)
+      .getOrElse(spark.read.parquet(versionPath(name, versionId)).schema)
+
+  /** The one read rule for a version: a parquet scan given its schema
+    * (no inference job; partition columns keep their written type) over
+    * `dirs`, relative to the version root, which stays the `basePath`.
+    */
+  def scan(spark: SparkSession, name: String, versionId: String,
+      dirs: Seq[String] = Seq("")): DataFrame = {
+    val root = versionPath(name, versionId)
+    val s = schema(spark, name, versionId)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+    else spark.read.schema(s).option("basePath", root)
+      .parquet(dirs.map(Paths.get(root, _).toString): _*)
+  }
 
   def recordCount(name: String): Long = (for {
     m <- meta(name)

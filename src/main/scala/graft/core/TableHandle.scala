@@ -12,10 +12,14 @@ import scala.collection.mutable.ArrayBuffer
   * `unique_on` keys, replace/truncate/reset, SQL over the active
   * version, auto-created fields, inferred schema with hints.
   *
-  * Scale notes: reads are plain parquet scans (pushdown + pruning
-  * apply); upsert is a key-shuffled full-outer MERGE writing a fresh
-  * version (atomic pointer swap — SURVEY.md §7.4.3); nothing on the
-  * write path collects to the driver.
+  * Scale notes: every read of a version is one parquet scan given the
+  * schema the catalog recorded when the version was committed
+  * (`Catalog.scan`: no schema-inference job, pushdown + pruning apply,
+  * partition columns keep their written type); upsert is a
+  * key-shuffled full-outer MERGE of the batch against the partition
+  * directories it touches, writing a fresh version (atomic pointer
+  * swap — SURVEY.md §7.4.3); nothing on the write path collects rows
+  * to the driver.
   */
 final class TableHandle(
     val spark: SparkSession,
@@ -79,15 +83,18 @@ final class TableHandle(
   }
 
   def meta: TableMeta = catalog.metaOrFresh(name)
-  def exists: Boolean = catalog.activePath(name).exists(p =>
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+  def exists: Boolean = storedVersion.isDefined
   def recordCount: Long = catalog.recordCount(name)
 
+  /** The active version, if its directory is on disk. */
+  private def storedVersion: Option[String] =
+    meta.activeVersion.filter(v =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(catalog.versionPath(name, v))))
+
   // ---- reads (node.py:141-189) ---------------------------------------
-  def read: DataFrame = catalog.activePath(name) match {
-    case Some(p) if java.nio.file.Files.exists(java.nio.file.Paths.get(p)) =>
-      spark.read.parquet(p)
-    case _ =>
+  def read: DataFrame = storedVersion match {
+    case Some(v) => catalog.scan(spark, name, v)
+    case None =>
       val ddl = meta.schemaDdl.getOrElse(
         throw new IllegalStateException(
           s"table '$name' has no active version and no declared schema"))
@@ -111,7 +118,7 @@ final class TableHandle(
     val p = catalog.versionPath(name, versionId)
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
       s"table '$name' has no retained version '$versionId'")
-    spark.read.parquet(p)
+    catalog.scan(spark, name, versionId)
   }
 
   /** records format = driver-side convenience façade only (never used on
@@ -177,11 +184,11 @@ final class TableHandle(
   def truncate(): Unit = catalog.withWriteLock(name) {
     requireWrite()
     pending.clear()
-    catalog.activePath(name).foreach { p =>
-      val schema = spark.read.parquet(p).schema
+    meta.activeVersion.foreach { v =>
+      val schema = catalog.schema(spark, name, v)
       val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      empty.write.mode("overwrite").parquet(p)
-      meta.activeVersion.foreach(v => catalog.setRecordCount(name, v, 0L))
+      empty.write.mode("overwrite").parquet(catalog.versionPath(name, v))
+      catalog.setActive(name, v, 0L, schema)
       onSignal(name, "update")
     }
   }
@@ -211,9 +218,13 @@ final class TableHandle(
     } else if (lower.startsWith("delete from")) {
       val whereIdx = lower.indexOf("where")
       require(whereIdx > 0, "unqualified DELETE: use truncate()")
-      val pred = s.substring(whereIdx + 5)
-      val kept = read.filter(not(expr(pred)))
-      writeNewVersion(kept)
+      val pred = expr(s.substring(whereIdx + 5))
+      // one write cycle, like replace; SQL deletes only the rows whose
+      // predicate is TRUE, so a NULL predicate keeps its row
+      catalog.withWriteLock(name) {
+        flush()
+        writeNewVersion(read.filter(not(coalesce(pred, lit(false)))))
+      }
       onSignal(name, "update")
     } else {
       spark.sql(s); onSignal(name, "update")
@@ -270,56 +281,44 @@ final class TableHandle(
     out
   }
 
-  /** Run `write` on `df` with an observed row count piggy-backed on the
-    * write job itself — no post-write re-read, no recompute (at 100 TB a
-    * count-back would double write-path I/O; VERDICT r2 item 3).
+  /** Write `df` under `path`, directory-partitioned by the table's
+    * partition columns it carries, and return how many of its rows
+    * satisfy `counted` — observed on the write job itself, no post-write
+    * re-read, no recompute (at 100 TB a count-back would double
+    * write-path I/O; VERDICT r2 item 3). The upsert's [[NewRow]] marker
+    * is dropped after it is counted.
     */
-  private def writeCounted(df: DataFrame, write: DataFrame => Unit): Long = {
+  private def writeCounted(df: DataFrame, path: String, mode: String,
+      counted: Column = lit(true)): Long = {
     val obs = org.apache.spark.sql.Observation()
-    write(df.observe(obs, count(lit(1)).as("n")))
+    val out = df.observe(obs, count_if(counted).as("n")).drop(NewRow)
+    val parts = meta.partitionBy.filter(out.columns.contains)
+    val w = out.write.mode(mode)
+    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
     obs.get("n").asInstanceOf[Long]
   }
 
   private def doAppend(df: DataFrame): Unit = {
     val m = meta
+    val incoming = withAutoFields(df, batchSeqFor())
     m.activeVersion match {
       case Some(v) =>
-        val path = catalog.versionPath(name, v)
-        val existing = spark.read.parquet(path)
-        val incomingRaw = withAutoFields(df, batchSeqFor())
-        // partition-directory values read back type-INFERRED (a string
-        // "2024-01-01" partition key comes back DATE); align the
-        // incoming partition columns to the inferred types so such
-        // tables don't fall into a full-table rewrite on every append.
-        // (Values whose string and inferred forms differ — "01" vs 1 —
-        // need a declared schema; see init scaladoc.)
-        val incoming = m.partitionBy.foldLeft(incomingRaw) { (d, p) =>
-          (existing.schema.find(_.name == p), d.schema.find(_.name == p)) match {
-            case (Some(ef), Some(inf)) if ef.dataType != inf.dataType =>
-              d.withColumn(p, col(p).cast(ef.dataType))
-            case _ => d
-          }
-        }
-        if (existing.schema == incoming.schema ||
-            sameColumns(existing.schema, incoming.schema)) {
-          val aligned = clusterLight(
-            incoming.select(existing.columns.map(col): _*), m.clusterBy)
+        val existing = catalog.scan(spark, name, v)
+        if (sameColumns(existing.schema, incoming.schema)) {
           // partitioned tables MUST append through partitionBy or the
           // new files land flat at the version root and corrupt the
-          // directory layout (partition discovery then drops them)
-          val parts = m.partitionBy.filter(aligned.columns.contains)
-          val added = writeCounted(aligned, d => {
-            val w = d.write.mode("append")
-            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-          })
-          catalog.setRecordCount(name, v, catalog.recordCount(name) + added)
+          // directory layout (writeCounted partitions every write)
+          val added = writeCounted(clusterLight(
+            incoming.select(existing.columns.map(col): _*), m.clusterBy),
+            catalog.versionPath(name, v), "append")
+          catalog.setActive(name, v, catalog.recordCount(name) + added, existing.schema)
         } else {
           // widen-only schema evolution: rewrite into a fresh version
           writeNewVersion(unionWiden(existing, incoming))
         }
         onSignal(name, "update")
       case None =>
-        writeNewVersion(withAutoFields(df, batchSeqFor()))
+        writeNewVersion(incoming)
         onSignal(name, "create")
     }
   }
@@ -328,108 +327,62 @@ final class TableHandle(
     * Determinism rule (SURVEY.md §4): within one upsert batch the
     * highest (partition, row) wins; across batches the later flush wins.
     *
-    * Partition-pruned path: when the table is partitioned (date keys or
-    * the `hashBuckets` derived bucket), only partitions containing
-    * incoming rows are merged and rewritten; untouched partitions'
-    * files are HARDLINKED into the new version directory — O(metadata),
+    * Partition-pruned: the batch's touched partitions are named the one
+    * way the parquet writer names their directories. Only the touched
+    * directories that exist are read and merged (the version root is
+    * the one directory of an unpartitioned table); every other
+    * directory's files are HARDLINKED into the new version — O(metadata),
     * no data copy. Upsert cost is then proportional to touched
     * partitions, not table size (the 100 TB requirement; on an object
-    * store the link step becomes a manifest entry instead).
+    * store the link step becomes a manifest entry instead). The new
+    * count is the previous one plus the merged rows that matched no
+    * existing key, observed on the merge write.
     */
   private def doUpsert(df: DataFrame, orderBy: Seq[Column]): Unit = {
-    val keys = meta.uniqueOn
-    val incomingRaw = withAutoFields(df, batchSeqFor())
+    val m = meta
+    val keys = m.uniqueOn
     val tieBreak =
       if (orderBy.nonEmpty) orderBy.map(_.desc) // greatest tuple wins
       else Seq(monotonically_increasing_id().desc) // arrival order (nondeterministic under retry)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(tieBreak: _*)
-    // persist the deduped batch: the touched-partition collect, the
-    // semi-join prune frame, and the merge join must all see the SAME
-    // winner rows — the monotonically_increasing_id tie-break is not
-    // stable across independent re-evaluations (ADVICE r3)
-    val incoming = incomingRaw
+    // persist the deduped batch: the touched-partition collect and the
+    // merge must see the SAME winner rows — the monotonically_increasing_id
+    // tie-break is not stable across independent re-evaluations (ADVICE r3)
+    val incoming = withAutoFields(df, batchSeqFor())
       .withColumn("_gr_rn", row_number().over(w))
       .filter(col("_gr_rn") === 1).drop("_gr_rn")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!exists) { writeNewVersion(incoming); onSignal(name, "create"); return }
-
-      val m = meta
-      val parts = m.partitionBy
-      if (parts.nonEmpty && parts.forall(incoming.columns.contains)) {
-        val touched = incoming.select(parts.map(col): _*).distinct().collect()
-          .map(r => parts.indices.map(i => r.get(i)).toList)
-        // path-segment comparison uses the same escaping parquet uses
-        // when writing partition directories (null/empty → the Hive
-        // default-partition sentinel) — String.valueOf would silently
-        // mismatch escaped or null values and hardlink touched
-        // partitions anyway (duplicate rows)
-        val touchedSet: Set[List[String]] =
-          touched.map(_.map(partitionPathValue)).toSet
-        // Touched-partition scan predicate: a literal OR-chain lets the
-        // parquet source prune partitions statically, but its expression
-        // tree grows with the partition count (codegen blowup on wide
-        // upserts) — above the threshold switch to a broadcast semi-join
-        // on the partition-value tuple (DPP/AQE prune at runtime).
-        val existingTouched =
-          if (touched.length <= PrunePredicateMaxPartitions) {
-            val pred = touched.map(t =>
-                parts.zip(t).map { case (p, v) => col(p) <=> lit(v) }.reduce(_ && _))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            read.filter(pred) // statically partition-pruned scan
-          } else {
-            // Split tuples: plain (no nulls) ride an EqualTo semi-join
-            // against a driver-built local frame (DPP-eligible — a
-            // null-safe join key would be rewritten past what partition
-            // pruning matches, reverting the scan to O(table)); the
-            // usually-tiny null-bearing subset goes through a
-            // statically-pruned <=> filter. EqualTo never matches null
-            // partition rows, so the union is disjoint.
-            val (nullTuples, plainTuples) = touched.partition(_.contains(null))
-            val partsSchema = StructType(
-              incoming.select(parts.map(col): _*).schema.map(_.copy(nullable = true)))
-            val plainDf = spark.createDataFrame(
-              java.util.Arrays.asList(plainTuples.map(t => Row(t: _*)): _*), partsSchema)
-            val eqJoin = read.join(broadcast(plainDf), parts, "left_semi")
-            val nullPred = nullTuples.map(t =>
-                parts.zip(t).map { case (p, v) => col(p) <=> lit(v) }.reduce(_ && _))
-              .reduceOption(_ || _)
-            (plainTuples.nonEmpty, nullPred) match {
-              case (true, Some(pred)) => eqJoin.unionByName(read.filter(pred))
-              case (true, None) => eqJoin
-              case (false, Some(pred)) => read.filter(pred)
-              case (false, None) => read.filter(lit(false))
-            }
-          }
-        val prevTotal = catalog.recordCount(name)
-        val obsTouched = org.apache.spark.sql.Observation()
-        val existingObserved =
-          existingTouched.observe(obsTouched, count(lit(1)).as("n"))
-        val merged = mergeFrames(existingObserved, incoming, keys)
-
-        val oldPath = catalog.activePath(name).get
-        val v = catalog.newVersion(name)
-        val newPath = catalog.versionPath(name, v)
-        val mergedN = writeCounted(clusterLight(merged, m.clusterBy),
-          _.write.mode("overwrite").partitionBy(parts: _*).parquet(newPath))
-        TableHandle.linkUntouchedPartitions(oldPath, newPath, parts.size, touchedSet)
-        // linked (untouched) rows = previous total minus the touched rows
-        // the merge consumed — both observed, nothing re-read
-        val n = mergedN + (prevTotal - obsTouched.get("n").asInstanceOf[Long])
-        catalog.setActive(name, v, n)
-      } else {
-        writeNewVersion(mergeFrames(read, incoming, keys))
-      }
-      onSignal(name, "update")
+    try storedVersion match {
+      case None =>
+        writeNewVersion(incoming)
+        onSignal(name, "create")
+      case Some(old) =>
+        val parts = m.partitionBy
+        val oldPath = catalog.versionPath(name, old)
+        val present = partitionDirs(oldPath, parts.size)
+        // a batch without its partition values may land in any directory
+        val touched: Set[String] =
+          if (parts.nonEmpty && parts.forall(incoming.columns.contains))
+            incoming.select(parts.map(col(_).cast("string")): _*).distinct().collect()
+              .map(r => partitionDir(parts, parts.indices.map(r.getString))).toSet
+          else present.toSet
+        val merged = mergeFrames(
+          catalog.scan(spark, name, old, present.filter(touched)), incoming, keys)
+        commit(clusterLight(merged, m.clusterBy), counted = col(NewRow),
+          base = catalog.recordCount(name),
+          link = linkDirs(oldPath, _, present.filterNot(touched)))
+        onSignal(name, "update")
     } finally incoming.unpersist()
   }
 
+  /** Full-outer merge on `keys`, incoming values winning; [[NewRow]]
+    * marks the rows that matched no existing key. */
   private def mergeFrames(existing: DataFrame, incoming: DataFrame,
       keys: Seq[String]): DataFrame = {
     val dataCols = (existing.columns ++ incoming.columns).distinct
       .filterNot(keys.contains)
-    val e = existing.alias("e")
+    val e = existing.withColumn("_gr_old", lit(true)).alias("e")
     val i = incoming.alias("i")
     e.join(i, keys, "full_outer").select(
       keys.map(col) ++ dataCols.map { c =>
@@ -438,7 +391,7 @@ final class TableHandle(
         if (inI && inE) coalesce(col(s"i.$c"), col(s"e.$c")).as(c)
         else if (inI) col(s"i.$c").as(c)
         else col(s"e.$c").as(c)
-      }: _*)
+      } :+ col("e._gr_old").isNull.as(NewRow): _*)
   }
 
   /** Range-cluster + sort rows by `init(clusterBy=...)` keys before a
@@ -509,29 +462,28 @@ final class TableHandle(
             else if (m.clusterBy.exists(_.forall(df.columns.contains)))
               clustered(df, m.clusterBy, Some(nFiles))
             else df.coalesce(nFiles) // narrow: no shuffle
-          Some(commitNewVersion(packed, parts))
+          Some(commit(packed))
         }
       }
   }
 
-  /** Allocate + write + activate a new version; shared by full writes
-    * and compaction so the commit sequence exists once. */
-  private def commitNewVersion(df: DataFrame, parts: Seq[String]): String = {
+  /** The one commit sequence, shared by full writes, upsert and
+    * compaction: allocate a version, write `df` into it, run `link` on
+    * the new directory, then activate it with its schema and a record
+    * count of `base` plus the written rows that satisfy `counted`.
+    */
+  private def commit(df: DataFrame, counted: Column = lit(true), base: Long = 0L,
+      link: String => Unit = _ => ()): String = {
     val v = catalog.newVersion(name)
     val path = catalog.versionPath(name, v)
-    val n = writeCounted(df, d => {
-      val writer = d.write.mode("overwrite")
-      (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(path)
-    })
-    catalog.setActive(name, v, n)
+    val n = writeCounted(df, path, "overwrite", counted)
+    link(path)
+    catalog.setActive(name, v, base + n, df.drop(NewRow).schema)
     v
   }
 
-  private def writeNewVersion(df: DataFrame): Unit = {
-    val m = meta
-    commitNewVersion(clustered(df, m.clusterBy),
-      m.partitionBy.filter(df.columns.contains))
-  }
+  private def writeNewVersion(df: DataFrame): Unit =
+    commit(clustered(df, meta.clusterBy))
 
   /** One fresh sequence per write batch: in-place appends previously
     * reused meta.nextSeq without advancing it, so consecutive appends
@@ -547,56 +499,56 @@ object TableHandle {
   /** Derived hash-bucket partition column (init(hashBuckets=…)). */
   val BucketCol = "_gr_bucket"
 
-  /** Above this many touched partitions the upsert scan predicate
-    * switches from a literal OR-chain (statically prunable) to a
-    * broadcast semi-join (bounded expression size). Mutable only so the
-    * spec suite can force both paths onto identical input.
-    */
-  private[core] var PrunePredicateMaxPartitions = 64
+  /** Upsert's merge marker: true on rows that matched no existing key. */
+  private[core] val NewRow = "_gr_new"
 
-  /** A partition value as it appears in the parquet directory name:
-    * the escaping `InsertIntoHadoopFsRelation` applies, with null and
-    * empty collapsing to the Hive default-partition sentinel. (Date and
-    * primitive values stringify identically to their path rendering;
-    * timestamp partition keys — an anti-pattern at any scale — are not
-    * normalized here.)
+  /** The directory the parquet writer gives a row with these partition
+    * values (each the value cast to string in Spark; null and empty
+    * become the Hive default-partition sentinel), relative to the
+    * version root; "" for an unpartitioned table.
     */
-  private[core] def partitionPathValue(v: Any): String = {
+  private[core] def partitionDir(parts: Seq[String], values: Seq[String]): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    v match {
-      case null => ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      case s =>
-        val str = String.valueOf(s)
-        if (str.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(str)
-    }
+    parts.zip(values).map { case (p, v) =>
+      ExternalCatalogUtils.getPartitionPathString(p, v) }.mkString("/")
   }
-  // (an earlier RowIterOps implicit here recursed into itself — the
-  // java-iterator conversion must come from CollectionConverters only)
 
-  /** Hardlink every data file of `oldPath` whose partition-directory
-    * values are NOT in `touched` into the same relative location under
-    * `newPath`. Partition values are the `k=v` path segments in order.
+  /** The partition directories a version holds, relative to its root:
+    * the `k=v/...` paths `nParts` deep; the root ("") alone when the
+    * table is unpartitioned.
     */
-  private[core] def linkUntouchedPartitions(
-      oldPath: String, newPath: String, nParts: Int,
-      touched: Set[List[String]]): Unit = {
+  private[core] def partitionDirs(root: String, nParts: Int): Seq[String] =
+    if (nParts == 0) Seq("")
+    else {
+      val r = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(r, nParts)
+      try s.iterator().asScala
+        .filter(java.nio.file.Files.isDirectory(_))
+        .map(r.relativize)
+        .filter(rel => rel.getNameCount == nParts &&
+          rel.iterator().asScala.forall(_.toString.contains("=")))
+        .map(_.toString).toList
+      finally s.close()
+    }
+
+  /** Hardlink every data file under the `dirs` of `oldPath` into the
+    * same relative location under `newPath`.
+    */
+  private[core] def linkDirs(oldPath: String, newPath: String, dirs: Seq[String]): Unit = {
     val root = java.nio.file.Paths.get(oldPath)
     val dest = java.nio.file.Paths.get(newPath)
-    java.nio.file.Files.walk(root).iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .foreach { f =>
-        val rel = root.relativize(f)
-        val segs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
-        val partVals = segs.filter(_.contains("=")).take(nParts)
-          .map(_.split("=", 2)(1)).toList
-        val isData = f.getFileName.toString.endsWith(".parquet")
-        if (isData && partVals.size == nParts && !touched.contains(partVals)) {
-          val target = dest.resolve(rel)
+    dirs.foreach { d =>
+      val s = java.nio.file.Files.walk(root.resolve(d))
+      try s.iterator().asScala
+        .filter(f => java.nio.file.Files.isRegularFile(f) &&
+          f.getFileName.toString.endsWith(".parquet"))
+        .foreach { f =>
+          val target = dest.resolve(root.relativize(f))
           java.nio.file.Files.createDirectories(target.getParent)
           java.nio.file.Files.createLink(target, f)
         }
-      }
+      finally s.close()
+    }
   }
 
   /** Nullability-normalized type: parquet reads arrays/maps/structs

@@ -92,8 +92,11 @@ final class GraphRunner(
   // serializes ingest with signal propagation (see appendLocked)
   private val ingestLock = new Object
 
-  // logical clock: ticks once per runNode; changedAt/ranAt let run()
-  // detect nodes whose input store changed AFTER they last ran
+  // logical clock: ticks once per runNode and once per change signal;
+  // changedAt/ranAt let run() detect nodes whose input store changed
+  // AFTER they last started (a change made while a node of the same
+  // wave runs is stamped after that node's start, whichever thread
+  // started first)
   private var clock: Int = 0
   private val changedAt = mutable.Map.empty[String, Int]
   private val ranAt = mutable.Map.empty[String, Int]
@@ -105,6 +108,7 @@ final class GraphRunner(
   def tableHandle(store: String): TableHandle =
     new TableHandle(spark, catalog, store, "rw", onSignal = (t, _) => this.synchronized {
       changedStores += t
+      clock += 1
       changedAt(t) = clock
     })
 

@@ -31,12 +31,11 @@ object StreamingBridge {
   /** Read a catalog table's active version as a file-source stream. */
   def readStream(spark: SparkSession, catalog: Catalog, table: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val path = catalog.activePath(table).getOrElse(
+    val version = catalog.meta(table).flatMap(_.activeVersion).getOrElse(
       throw new IllegalStateException(s"table '$table' has no active version"))
-    val schema = spark.read.parquet(path).schema
-    val r = spark.readStream.schema(schema)
+    val r = spark.readStream.schema(catalog.schema(spark, table, version))
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(path)
+    r.parquet(catalog.versionPath(table, version))
   }
 
   /** Tumbling-window count/agg with a watermark on `tsCol`. */
@@ -384,12 +383,11 @@ object StreamingBridge {
 
   /** Drain a streaming query into a new version of `outTable` using
     * AvailableNow (process-everything-then-stop — the streaming
-    * equivalent of the reference's run-to-completion node execution).
-    * Returns the row count written.
+    * equivalent of the reference's run-to-completion node execution),
+    * activated with the stream's schema. Returns the row count written.
     */
   def drainTo(spark: SparkSession, catalog: Catalog, streamed: DataFrame,
       outTable: String, checkpointRoot: String): Long = {
-    val out = new TableHandle(spark, catalog, outTable)
     val version = catalog.newVersion(outTable)
     val path = catalog.versionPath(outTable, version)
     val q = streamed.writeStream
@@ -401,8 +399,8 @@ object StreamingBridge {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val n = spark.read.parquet(path).count()
-    catalog.setActive(outTable, version, n)
+    val n = spark.read.schema(streamed.schema).parquet(path).count()
+    catalog.setActive(outTable, version, n, streamed.schema)
     n
   }
 }

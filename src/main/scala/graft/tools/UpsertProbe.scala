@@ -18,8 +18,8 @@ import graft.core.{Catalog, TableHandle}
   *  - build_s: one-time bucketed base-table build (off the hot path);
   *  - upsert{8,64,256}_s: a FIXED ~4000-row update batch confined to
   *    8 / 64 / all-256 buckets (constant batch rows, varying touched
-  *    partitions — 8 and 64 ride the static OR-chain prune, 256 the
-  *    broadcast semi-join prune, so both prune paths get scale rows).
+  *    partitions; every width reads its touched bucket directories by
+  *    name, 256 being the widest).
   *    The claim predicts time tracks touched buckets and stays ~flat
   *    across corpus scales for fixed touched count; a secret
   *    O(table) merge would grow ~10× per decade;

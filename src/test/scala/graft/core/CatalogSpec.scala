@@ -1,20 +1,24 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.sql.types.StructType
 
 class CatalogSpec extends SparkSpec {
+
+  private val idSchema = StructType.fromDDL("id BIGINT")
 
   test("version lifecycle: create, activate, swap, reset retains data") {
     val cat = new Catalog(tmpDir("cat"))
     assert(cat.meta("t").isEmpty)
     val v1 = cat.newVersion("t")
     assert(v1 == "v00000001")
-    cat.setActive("t", v1, 10L)
+    cat.setActive("t", v1, 10L, idSchema)
     assert(cat.activePath("t").get.endsWith("t/v00000001"))
     assert(cat.recordCount("t") == 10L)
+    assert(cat.meta("t").get.versions.head.schemaDdl.contains("id BIGINT"))
 
     val v2 = cat.newVersion("t")
-    cat.setActive("t", v2, 20L)
+    cat.setActive("t", v2, 20L, idSchema)
     assert(cat.activePath("t").get.endsWith(v2))
     // old version still listed (retained until GC)
     assert(cat.meta("t").get.versions.map(_.id) == List(v1, v2))
@@ -28,7 +32,7 @@ class CatalogSpec extends SparkSpec {
     val root = tmpDir("cat")
     val cat = new Catalog(root)
     val v = cat.newVersion("t")
-    cat.setActive("t", v, 5L)
+    cat.setActive("t", v, 5L, idSchema)
     cat.update("t")(_.copy(uniqueOn = List("id")))
     val cat2 = new Catalog(root)
     val m = cat2.meta("t").get
@@ -38,8 +42,8 @@ class CatalogSpec extends SparkSpec {
 
   test("vacuum deletes only non-active versions") {
     val cat = new Catalog(tmpDir("cat"))
-    val v1 = cat.newVersion("t"); cat.setActive("t", v1, 1L)
-    val v2 = cat.newVersion("t"); cat.setActive("t", v2, 1L)
+    val v1 = cat.newVersion("t"); cat.setActive("t", v1, 1L, idSchema)
+    val v2 = cat.newVersion("t"); cat.setActive("t", v2, 1L, idSchema)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(cat.versionPath("t", v1)))
     java.nio.file.Files.createDirectories(
@@ -60,5 +64,25 @@ class CatalogSpec extends SparkSpec {
     futs.foreach(_.get())
     pool.shutdown()
     assert(seqs.size == 400) // read-modify-write never lost an update
+  }
+
+  test("a version written before schemas were recorded still reads (inferred)") {
+    import spark.implicits._
+    val root = tmpDir("cat-old")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$root/t/v00000001")
+    // meta.json as written before VersionMeta carried a schema
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "t", "meta.json"),
+      """{"name":"t","activeVersion":"v00000001",""" +
+        """"versions":[{"id":"v00000001","recordCount":2,"createdAtMs":0}],""" +
+        """"uniqueOn":["id"],"orderings":{},"schemaHints":{},"partitionBy":[],"nextSeq":2}""")
+    val cat = new Catalog(root)
+    assert(cat.meta("t").get.versions.head.schemaDdl.isEmpty)
+    val h = new TableHandle(spark, cat, "t")
+    assert(h.read.schema.fieldNames.toSeq == Seq("id", "s"))
+    assert(h.read.count() == 2)
+    // the next committed version records its schema
+    h.upsert(Seq((3L, "c")).toDF("id", "s")); h.flush()
+    assert(h.meta.versions.last.schemaDdl.contains("id BIGINT,s STRING"))
+    assert(h.read.count() == 3 && h.recordCount == 3)
   }
 }

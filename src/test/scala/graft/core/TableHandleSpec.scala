@@ -124,6 +124,19 @@ class TableHandleSpec extends SparkSpec {
     assert(h.read.orderBy("id").select("id").as[Long].collect().toSeq == Seq(100L, 200L))
   }
 
+  test("executeSql DELETE keeps rows whose predicate is NULL, after pending writes") {
+    import spark.implicits._
+    val h = handle(tmpDir("tbl"))
+    h.append(Seq((1L, Option(1L)), (2L, Option(10L)), (3L, Option.empty[Long])).toDF("id", "v"))
+    h.flush()
+    // still buffered when the DELETE runs: flushed first, then deleted
+    h.append(Seq((4L, Option(20L))).toDF("id", "v"))
+    h.executeSql("delete from {{ t }} where v > 5")
+    h.flush()
+    assert(h.read.orderBy("id").select("id").as[Long].collect().toSeq == Seq(1L, 3L))
+    assert(h.recordCount == 2)
+  }
+
   test("executeSql: INSERT ... VALUES fails with a clear unsupported error") {
     import spark.implicits._
     val h = handle(tmpDir("tbl"))
@@ -247,40 +260,58 @@ class TableHandleSpec extends SparkSpec {
     assert(chunks.flatten.map(_("id").asInstanceOf[Long]).sorted == (1L to 10L).toList)
   }
 
-  test("upsert above the prune threshold: semi-join path matches OR-chain path") {
+  test("upsert over 40 partitions plus the NULL partition keeps each key once") {
     import spark.implicits._
-    def build(root: String): TableHandle = {
-      val h = handle(root).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
-      h.append(((0 until 400).map(i => (i.toLong, Option(i % 80), s"v$i")) ++
-        Seq((1000L, Option.empty[Int], "n0"), (1001L, Option.empty[Int], "n1")))
-        .toDF("id", "p", "s"))
-      h.flush()
-      h
-    }
-    // 70 touched partitions + the NULL partition, mixed updates/inserts
-    val incoming = ((0 until 140).map(i => (i.toLong * 2, Option((i * 2) % 80), s"NEW$i")) ++
-      Seq((1001L, Option.empty[Int], "NULLNEW")))
-      .toDF("id", "p", "s")
-    val saved = TableHandle.PrunePredicateMaxPartitions
-    try {
-      TableHandle.PrunePredicateMaxPartitions = 1000 // literal OR-chain
-      val hOr = build(tmpDir("orchain"))
-      hOr.upsert(incoming); hOr.flush()
-      TableHandle.PrunePredicateMaxPartitions = 8 // broadcast semi-join
-      val hSemi = build(tmpDir("semij"))
-      hSemi.upsert(incoming); hSemi.flush()
-      val a = hOr.read.orderBy("id").collect().map(_.toString).toSeq
-      val b = hSemi.read.orderBy("id").collect().map(_.toString).toSeq
-      assert(a == b)
-      assert(hOr.recordCount == hSemi.recordCount)
-      // derived count formula matches the physical row count
-      assert(hSemi.recordCount == hSemi.read.count())
-      // null partition on the semi-join path: untouched sibling kept,
-      // touched row merged, nothing duplicated or dropped
-      val nulls = hSemi.read.filter(col("id") >= 1000L).collect()
-        .map(r => r.getAs[Long]("id") -> r.getAs[String]("s")).toMap
-      assert(nulls == Map(1000L -> "n0", 1001L -> "NULLNEW"))
-    } finally TableHandle.PrunePredicateMaxPartitions = saved
+    val h = handle(tmpDir("wide")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
+    val base = (0 until 400).map(i => (i.toLong, Option(i % 80), s"v$i")) ++
+      Seq((1000L, Option.empty[Int], "n0"), (1001L, Option.empty[Int], "n1"))
+    h.append(base.toDF("id", "p", "s")); h.flush()
+    // updates in the 40 even partitions plus the NULL partition
+    val incoming = (0 until 140).map(i => (i.toLong * 2, Option((i * 2) % 80), s"NEW$i")) ++
+      Seq((1001L, Option.empty[Int], "NULLNEW"))
+    h.upsert(incoming.toDF("id", "p", "s")); h.flush()
+    val expected = (base ++ incoming).map(r => r._1 -> r._3).toMap
+    val rows = h.read.select("id", "s").collect().map(r => r.getLong(0) -> r.getString(1))
+    // nothing duplicated or dropped, every update applied
+    assert(rows.length == expected.size && rows.toMap == expected)
+    assert(h.recordCount == h.read.count())
+    // null partition: untouched sibling kept, touched row merged
+    val nulls = h.read.filter(col("id") >= 1000L).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[String]("s")).toMap
+    assert(nulls == Map(1000L -> "n0", 1001L -> "NULLNEW"))
+  }
+
+  test("upsert into an empty bucket of a 16-bucket table commits and counts") {
+    import spark.implicits._
+    val h = handle(tmpDir("emptybucket")).init(uniqueOn = Seq("id"), hashBuckets = Some(16))
+    h.append(Seq((1L, "a")).toDF("id", "s")); h.flush()
+    val v1 = h.meta.activeVersion.get
+    val bucket = (1L to 50L).toDF("id")
+      .select(col("id"), pmod(xxhash64(col("id")), lit(16)).as("b")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val k = (2L to 50L).find(bucket(_) != bucket(1L)).get
+    // the touched bucket holds no rows yet: the merge reads nothing
+    h.upsert(Seq((k, "b")).toDF("id", "s")); h.flush()
+    assert(h.read.select("id", "s").collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", k -> "b"))
+    assert(h.recordCount == h.read.count())
+    // every allocated version was activated: the create, then the upsert
+    val m = h.meta
+    assert(m.versions.map(_.id) == List(v1, m.activeVersion.get) && m.activeVersion.get != v1)
+  }
+
+  test("partition values read back with their written type") {
+    import spark.implicits._
+    val h = handle(tmpDir("ptype")).init(partitionBy = Seq("p"))
+    h.append(Seq((1L, "01"), (2L, "10")).toDF("id", "p")); h.flush()
+    val v1 = h.meta.activeVersion.get
+    assert(h.read.schema("p").dataType == org.apache.spark.sql.types.StringType)
+    assert(h.read.orderBy("id").select("p").as[String].collect().toSeq == Seq("01", "10"))
+    // a second same-typed append stays in place: no widen rewrite
+    h.append(Seq((3L, "01")).toDF("id", "p")); h.flush()
+    assert(h.meta.activeVersion.contains(v1))
+    assert(h.read.orderBy("id").select("p").as[String].collect().toSeq == Seq("01", "10", "01"))
+    assert(h.recordCount == 3)
   }
 
   test("upsert touching a null partition value neither duplicates nor drops rows") {

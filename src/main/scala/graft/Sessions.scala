@@ -10,8 +10,7 @@ import org.apache.spark.sql.SparkSession
   *  - the CLI's two session builders (`configure`);
   *  - the probe mains in `graft.tools`: RobustnessProbe (8 cores),
   *    ConcurrencyProbe (16), SkewProbe (32), and GraphProbe,
-  *    StreamProbe and UpsertProbe (SPARK_GRAFT_CPUS, default 32;
-  *    StreamProbe adds its RocksDB state store);
+  *    StreamProbe and UpsertProbe (SPARK_GRAFT_CPUS, default 32);
   *  - the test session `SparkSpec` (4 cores);
   *  - the benchmark program in `perfbench/`.
   *

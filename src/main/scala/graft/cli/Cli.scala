@@ -297,9 +297,8 @@ object Cli {
        |//
        |// class MyNode extends graft.graph.CodeNode {
        |//   def run(ctx: graft.graph.NodeContext): Unit = {
-       |//     val out = ctx.table("output_port")
-       |//     out.replace(ctx.spark.range(10).toDF("n"))
-       |//     out.flush()
+       |//     // writes are buffered and committed when run() returns
+       |//     ctx.table("output_port").append(ctx.spark.range(10).toDF("n"))
        |//   }
        |// }
        |""".stripMargin

@@ -40,13 +40,28 @@ final class StreamCursor(
   private def offsetLit(v: String): org.apache.spark.sql.Column =
     lit(v).cast(orderCol.dataType)
 
+  private def unconsumed: DataFrame = current match {
+    case Some(v) => table.read.filter(col(orderBy) > offsetLit(v))
+    case None => table.read
+  }
+
   /** The unconsumed slice as a DataFrame (incremental batch read). */
-  def df(): DataFrame = {
-    val base = table.read
-    current match {
-      case Some(v) => base.filter(col(orderBy) > offsetLit(v)).orderBy(col(orderBy))
-      case None => base.orderBy(col(orderBy))
-    }
+  def df(): DataFrame = unconsumed.orderBy(col(orderBy))
+
+  /** The unconsumed slice as one batch, pinned once: the slice's highest
+    * ordering value `hi` is read now, and the rows with
+    * `position < orderBy <= hi` come back unsorted. The in-memory
+    * position moves to `hi` (yielding marks consumed), so rows appended
+    * while the batch runs wait for the next call: the scan lists its
+    * files when the slice is built, and `<= hi` states the same bound
+    * in the plan. An empty slice leaves the position where it was
+    * (`hi` is null, and `<= null` keeps no row).
+    */
+  def batch(): DataFrame = {
+    val slice = unconsumed
+    val hi = slice.agg(max(col(orderBy))).head().get(0)
+    if (hi != null) current = Some(String.valueOf(hi))
+    slice.filter(col(orderBy) <= lit(hi))
   }
 
   /** One-record-at-a-time consumption; each yielded record advances the

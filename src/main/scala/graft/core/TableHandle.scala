@@ -434,9 +434,9 @@ final class TableHandle(
     * shuffle). Already-packed tables (file count <= target) are a
     * NO-OP. Purely physical: record data is unchanged, so NO update
     * signal is emitted (downstream consumers must not re-trigger) —
-    * but a long-running streaming reader tailing the old version dir
-    * will not see post-compact appends; restart such streams (the
-    * AvailableNow drain pattern re-resolves the path per run).
+    * but a DataFrame read before the compact keeps scanning the old
+    * version dir and will not see post-compact appends (a stream
+    * cursor re-resolves the active version on every read).
     * Returns the new version id, None when nothing was rewritten.
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): Option[String] = {

@@ -15,13 +15,21 @@ final class NodeContext(
     runner: GraphRunner,
     node: FunctionNode) {
 
+  // one handle per store for the run, so the runner can flush what the
+  // node left pending when it returns
+  private val handles = mutable.LinkedHashMap.empty[String, TableHandle]
+
   /** Resolve a port name (preferred) or a store name to a Table. */
   def table(port: String): TableHandle = {
     val store = node.inputs.get(port)
       .orElse(node.outputs.get(port))
       .getOrElse(port)
-    runner.tableHandle(store)
+    handles.synchronized(handles.getOrElseUpdate(store, runner.tableHandle(store)))
   }
+
+  /** Commit every write the node left pending (node.py:407-414). */
+  private[graph] def flush(): Unit =
+    handles.synchronized(handles.values.toList).foreach(_.flush())
 
   def stream(port: String, orderBy: Option[String] = None): StreamCursor =
     StreamCursor.forTable(table(port), state, orderBy)
@@ -292,8 +300,9 @@ final class GraphRunner(
         val impl = codeNodes(f.nodeFile.get)
         val ctx = new NodeContext(spark, id, this, f)
         impl.run(ctx)
-        // flush any handles the node wrote through ctx is the node's job;
-        // ctx.table() hands out fresh handles, so nodes call flush().
+        // execution end flushes the node's writes; a node that throws
+        // never gets here, so it commits nothing it left pending
+        ctx.flush()
       case "webhook" => // passive ingest endpoint; nothing to execute
       case other =>
         throw new IllegalStateException(s"node $id of kind '$other' not runnable")

@@ -1,8 +1,10 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.{StreamCursor, TableHandle}
 
 /** Corpus-hygiene operators for training-data pipelines (SURVEY §2.6):
   * boilerplate removal, benchmark decontamination, PII redaction,
@@ -211,6 +213,77 @@ object Corpus {
     batch.withColumn("fp", fp)
       .join(corpus.select(fp.as("fp")).distinct(), Seq("fp"), "left_anti")
   }
+
+  /** One exactly-once ingest step over a stream cursor: pin the
+    * unconsumed slice ([[graft.core.StreamCursor.batch]]), let `write`
+    * append and flush what it makes of it, then checkpoint. A crash
+    * after the flush and before the checkpoint re-delivers the slice;
+    * every writer ends in the exact-fingerprint anti-join against the
+    * corpus, so the replay appends nothing. An empty slice writes and
+    * checkpoints nothing.
+    */
+  private[llm] def ingestSlice(cursor: StreamCursor)(write: DataFrame => Unit): Unit = {
+    val slice = cursor.batch()
+    if (!slice.isEmpty) {
+      write(slice)
+      cursor.checkpoint()
+    }
+  }
+
+  /** Append `batch` to `corpus` keeping it duplicate-free, then flush:
+    * one row per normalized-text fingerprint within the batch (the
+    * first in the batch's column order), minus fingerprints the corpus
+    * already holds ([[dedupAgainstCorpus]]).
+    */
+  private def appendFresh(batch: DataFrame, corpus: TableHandle, textCol: String): Unit = {
+    val inBatch = batch.withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy("fp").orderBy(batch.columns.map(col): _*)))
+      .filter(col("_rn") === 1).drop("_rn", "fp")
+    corpus.append(
+      if (corpus.exists) dedupAgainstCorpus(inBatch, corpus.read, textCol).drop("fp")
+      else inBatch)
+    corpus.flush()
+  }
+
+  /** Incremental exact-dedup ingest of a stream into a corpus table:
+    * each cursor slice collapses its own duplicate fingerprints, drops
+    * rows whose fingerprint the corpus already holds, and appends the
+    * survivors — [[dedupAgainstCorpus]] driven by a
+    * [[graft.core.StreamCursor]], keeping a growing corpus
+    * duplicate-free without ever re-deduplicating history.
+    *
+    * Scale: per slice the corpus side reduces to distinct 16-byte
+    * fingerprints (map-side combine) for the anti-join; cost is
+    * O(slice + corpus fingerprints), never slice × history.
+    */
+  def dedupedIngest(cursor: StreamCursor, corpus: TableHandle, textCol: String): Unit =
+    ingestSlice(cursor)(appendFresh(_, corpus, textCol))
+
+  /** Curated ingest: the cleaning gauntlet per cursor slice — C4
+    * line/page rules ([[c4Clean]]) rewrite each page to its kept lines,
+    * the linear quality classifier
+    * ([[TextAnalysis.qualityClassifier]]) gates what survives, and the
+    * [[dedupedIngest]] step (in-batch collapse + corpus anti-join)
+    * keeps the corpus duplicate-free. The corpus receives the CLEANED
+    * text as (id, text, quality score).
+    *
+    * Scale: every stage before the anti-join is scan-shaped column
+    * work; per-slice cost is O(slice + matches).
+    */
+  def curatedIngest(cursor: StreamCursor, corpus: TableHandle,
+      idCol: String, textCol: String,
+      minLineWords: Int = 3, minLines: Int = 1): Unit =
+    ingestSlice(cursor) { slice =>
+      val cleaned = c4Clean(slice, idCol, textCol,
+          minLineWords = minLineWords, minLines = minLines)
+        .select(col(idCol), col("cleaned_text").as(textCol))
+      val gated = TextAnalysis.qualityClassifier(cleaned, idCol, textCol)
+        .filter(col("keep"))
+        .join(cleaned, idCol)
+        .select(col(idCol), col(textCol), col("score"))
+      appendFresh(gated, corpus, textCol)
+    }
 
   /** Bloom-prefiltered incremental exact dedup — [[dedupAgainstCorpus]]
     * with a membership index in front: the corpus's fingerprint set

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.{StreamCursor, TableHandle}
 
 /** Deduplication operators for large-scale text corpora
   * (SURVEY.md §2.6 L1/L2; BASELINE.json north_star).
@@ -266,6 +267,64 @@ object TextDedup {
       .filter(col("_i") / (size(col("sh_b")) + size(col("sh_c")) - col("_i")) >= threshold)
       .select(col("_nd_batch_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
+  }
+
+  /** Near-duplicate ingest of a stream into a corpus table: the fuzzy
+    * counterpart of [[Corpus.dedupedIngest]] for the re-crawl regime
+    * where duplicates arrive reformatted rather than byte-identical.
+    * Per cursor slice: collapse near-dups WITHIN the slice (MinHash/LSH
+    * pairs → connected components, min-id survivor), drop survivors
+    * whose shingle Jaccard with ANY already-ingested document reaches
+    * the threshold ([[nearDupAgainstIndex]]), append what remains to
+    * the corpus, and extend the persisted index (`<corpus>_ndindex`:
+    * id, shingles, signature) with the newcomers' signatures.
+    *
+    * Scale: the corpus side of every slice derives band keys
+    * arithmetically from stored signatures — history is never
+    * re-shingled, so per-slice cost is O(slice + band collisions)
+    * regardless of corpus size; the index grows by exactly the
+    * surviving documents.
+    *
+    * Failure semantics: the corpus, the index and the cursor offset
+    * commit separately, so each slice (a) SELF-HEALS the index first —
+    * corpus rows with no stored signature (a corpus populated by
+    * another path, or a crash between the two flushes) are indexed
+    * before any dedup decision — and (b) ends with the exact-fingerprint
+    * anti-join against the corpus, which makes a re-delivered slice (a
+    * crash after the flushes, before the checkpoint) append nothing.
+    */
+  def nearDupedIngest(cursor: StreamCursor, corpus: TableHandle,
+      idCol: String, textCol: String, threshold: Double = 0.8): Unit = {
+    val index = new TableHandle(corpus.spark, corpus.catalog, s"${corpus.name}_ndindex")
+    Corpus.ingestSlice(cursor) { slice =>
+      if (corpus.exists) {
+        val have =
+          if (index.exists) index.read.select(idCol)
+          else corpus.read.select(idCol).limit(0)
+        val missing = corpus.read.join(have, Seq(idCol), "left_anti")
+        if (!missing.isEmpty) {
+          index.append(buildNearDupIndex(missing, idCol, textCol))
+          index.flush()
+        }
+      }
+      val inBatch = graft.operators.ConnectedComponents.collapse(slice,
+        minhashLshPairs(slice, idCol, textCol, threshold = threshold),
+        "id_a", "id_b", idCol)
+      val nd =
+        if (index.exists)
+          nearDupAgainstIndex(inBatch, index.read, idCol, textCol, threshold = threshold)
+        else inBatch
+      val fresh =
+        if (corpus.exists) Corpus.dedupAgainstCorpus(nd, corpus.read, textCol).drop("fp")
+        else nd
+      // `fresh` feeds both the corpus append and the index build, and its
+      // lineage crosses the slice's LSH joins
+      val settled = fresh.localCheckpoint()
+      corpus.append(settled)
+      corpus.flush()
+      index.append(buildNearDupIndex(settled, idCol, textCol))
+      index.flush()
+    }
   }
 
   /** Incremental NEAR-dup dedup: drop batch documents whose shingle-set

@@ -106,4 +106,27 @@ class StreamCursorSpec extends SparkSpec {
     // atomic columns still fine
     StreamCursor.forTable(h, new State(root, "n"), orderBy = Some("id"))
   }
+
+  test("batch pins the slice: later appends wait, rollback redelivers") {
+    import spark.implicits._
+    val (h, state, _) = fixture()
+    val s = StreamCursor.forTable(h, state)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toList
+    val b1 = s.batch()
+    // appended after batch() and before checkpoint(): not in this batch
+    h.append(Seq((6L, "f")).toDF("id", "s")); h.flush()
+    assert(ids(b1) == List(1L, 2L, 3L, 4L, 5L))
+    assert(s.position.contains("5"))
+    s.checkpoint()
+    // rollback after an uncheckpointed batch re-delivers the same rows
+    assert(ids(s.batch()) == List(6L))
+    s.rollback()
+    assert(s.position.contains("5"))
+    assert(ids(s.batch()) == List(6L))
+    s.checkpoint()
+    // an empty slice leaves the position unchanged
+    assert(ids(s.batch()).isEmpty)
+    assert(s.position.contains("6"))
+  }
 }

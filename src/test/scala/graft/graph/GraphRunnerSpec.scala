@@ -565,4 +565,41 @@ class GraphRunnerSpec extends SparkSpec {
     val errs = runner.validate()
     assert(errs.exists(_.contains("multiple producers")), errs.mkString("; "))
   }
+
+  private def writerGraph(node: CodeNode): GraphRunner = {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: w.scala
+        |    id: writer01
+        |    outputs: {out: written}
+        |stores:
+        |  - table: written
+        |""".stripMargin)
+    new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("w.scala" -> node))
+  }
+
+  test("a code node's unflushed writes commit when its run returns") {
+    val runner = writerGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        // two lookups of one port share the run's handle
+        ctx.table("out").append(spark.range(3).toDF("n"))
+        ctx.table("written").append(spark.range(3, 5).toDF("n"))
+      }
+    })
+    runner.runNode("writer01")
+    assert(runner.tableHandle("written").read.count() == 5)
+  }
+
+  test("a code node that throws commits nothing it left pending") {
+    val runner = writerGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        ctx.table("out").append(spark.range(3).toDF("n"))
+        throw new IllegalStateException("node failed")
+      }
+    })
+    intercept[IllegalStateException](runner.runNode("writer01"))
+    assert(!runner.tableHandle("written").exists)
+  }
 }

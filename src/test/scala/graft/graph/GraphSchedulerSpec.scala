@@ -110,4 +110,23 @@ class GraphSchedulerSpec extends AnyFunSuite {
     val m = nodes("bad01" -> Some("1 * * * *"))
     assert(GraphScheduler.due(m, loaded, at(5, 0)) == Seq("bad01"))
   }
+
+  test("cron trigger parsing and next-fire computation") {
+    val c = Cron("1 * * * *")
+    assert(c.matches(LocalDateTime.of(2026, 1, 1, 10, 1)))
+    assert(!c.matches(LocalDateTime.of(2026, 1, 1, 10, 2)))
+    assert(c.nextAfter(LocalDateTime.of(2026, 1, 1, 10, 1)) ==
+      LocalDateTime.of(2026, 1, 1, 11, 1))
+    val step = Cron("*/15 9-17 * * 1-5")
+    assert(step.matches(LocalDateTime.of(2026, 1, 2, 9, 30)))  // Friday
+    assert(!step.matches(LocalDateTime.of(2026, 1, 3, 9, 30))) // Saturday
+    assert(!step.matches(LocalDateTime.of(2026, 1, 2, 8, 30)))
+    // malformed expressions are rejected at construction, not at a poll
+    for (bad <- Seq("* * *", "*/0 * * * *", "61 * * * *", "a * * * *",
+        "1,,2 * * * *", "* 24 * * *", "* * 0 * *", "* * * 13 *", "* * * * 7",
+        "30-10 * * * *", "1/2/3 * * * *")) {
+      val e = intercept[IllegalArgumentException](Cron(bad))
+      assert(e.getMessage.contains(s"cron '$bad'"), e.getMessage)
+    }
+  }
 }

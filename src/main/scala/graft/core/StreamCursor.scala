@@ -18,6 +18,11 @@ import scala.jdk.CollectionConverters._
   * Scale: the incremental slice is expressed as a pushdown-friendly
   * `col(orderBy) > offset` filter *before* the scan, so parquet
   * row-group stats prune old data; the sort only orders the new tail.
+  * `df()` and `batch()` stay distributed (a global sort and an unsorted
+  * slice) for consumers that process the slice as a DataFrame;
+  * `records()` and `consumeRows()` drain it to the driver anyway, so
+  * they read it as one sorted partition: one job, no range-sampling job
+  * and no shuffle ahead of the iterator.
   */
 final class StreamCursor(
     table: TableHandle,
@@ -33,7 +38,7 @@ final class StreamCursor(
   private var current: Option[String] = persisted
 
   private def orderCol: StructField =
-    table.read.schema.find(_.name == orderBy).getOrElse(
+    table.schema.find(_.name == orderBy).getOrElse(
       throw new IllegalArgumentException(
         s"stream ordering column '$orderBy' not in table '${table.name}'"))
 
@@ -64,11 +69,16 @@ final class StreamCursor(
     slice.filter(col(orderBy) <= lit(hi))
   }
 
+  /** The unconsumed slice in order, as the one partition the driver-side
+    * iterators drain. */
+  private def ordered: DataFrame =
+    unconsumed.coalesce(1).sortWithinPartitions(col(orderBy))
+
   /** One-record-at-a-time consumption; each yielded record advances the
     * in-memory offset (node.py:40-52).
     */
   def records(): Iterator[Map[String, Any]] = {
-    val slice = df()
+    val slice = ordered
     val cols = slice.columns
     val idx = cols.indexOf(orderBy)
     slice.toLocalIterator().asScala.map { r: Row =>
@@ -79,7 +89,7 @@ final class StreamCursor(
 
   /** Typed consumption helper for Dataset-style processing. */
   def consumeRows(f: Row => Unit): Unit = {
-    val slice = df()
+    val slice = ordered
     val idx = slice.columns.indexOf(orderBy)
     slice.toLocalIterator().asScala.foreach { r =>
       current = Some(String.valueOf(r.get(idx)))
@@ -125,7 +135,7 @@ object StreamCursor {
     // corrupting for binary/struct/array/map — reject those up front.
     // (Schema check only once the table has data; a cursor may be
     // created ahead of the first append.)
-    (if (table.exists) table.read.schema else StructType(Nil)).find(_.name == ord).foreach { f =>
+    (if (table.exists) table.schema else StructType(Nil)).find(_.name == ord).foreach { f =>
       f.dataType match {
         case _: NumericType | StringType | DateType | TimestampType |
             TimestampNTZType | BooleanType => ()

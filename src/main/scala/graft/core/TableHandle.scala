@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import scala.collection.mutable.ArrayBuffer
 
 /** The Table facade — semantics from the reference's node SDK
@@ -18,8 +19,10 @@ import scala.collection.mutable.ArrayBuffer
   * partition columns keep their written type); upsert is a
   * key-shuffled full-outer MERGE of the batch against the partition
   * directories it touches, writing a fresh version (atomic pointer
-  * swap — SURVEY.md §7.4.3); nothing on the write path collects rows
-  * to the driver.
+  * swap — SURVEY.md §7.4.3); the write path collects no rows to the
+  * driver that are not already there (an upsert names a driver-local
+  * batch's touched partitions from its rows, any other batch's with one
+  * distinct aggregate).
   */
 final class TableHandle(
     val spark: SparkSession,
@@ -94,13 +97,21 @@ final class TableHandle(
   // ---- reads (node.py:141-189) ---------------------------------------
   def read: DataFrame = storedVersion match {
     case Some(v) => catalog.scan(spark, name, v)
-    case None =>
-      val ddl = meta.schemaDdl.getOrElse(
-        throw new IllegalStateException(
-          s"table '$name' has no active version and no declared schema"))
-      spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
+    case None => spark.createDataFrame(java.util.Collections.emptyList[Row](), declared)
   }
+
+  /** The columns `read` returns, from the catalog's record alone: no
+    * file listing, no scan planned. (A partitioned scan lists its
+    * partition columns last; look fields up by name.)
+    */
+  def schema: StructType = storedVersion match {
+    case Some(v) => catalog.schema(spark, name, v)
+    case None => declared
+  }
+
+  private def declared: StructType = StructType.fromDDL(meta.schemaDdl.getOrElse(
+    throw new IllegalStateException(
+      s"table '$name' has no active version and no declared schema")))
 
   /** Retained version ids, oldest first, with record counts — versions
     * are non-destructive (node.py:399-405) until `vacuum`.
@@ -151,6 +162,46 @@ final class TableHandle(
 
   def appendRecords(records: Seq[Map[String, Any]]): Unit =
     append(inferRecords(spark, records, meta.schemaDdl))
+
+  /** The JSON object `read.drop(drop).toJSON` yields for the row that
+    * `appendRecords(Seq(record))` committed, rendered on the driver, no
+    * Spark job: the record is typed as `appendRecords` types it, cast to
+    * the recorded column types (as the widen path casts it), laid out in
+    * the scan's column order, and written by the generator and session
+    * options `Dataset.toJSON` uses.
+    */
+  private[graft] def recordJson(record: Map[String, Any], drop: String): String = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+    import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sessionState.conf
+    SQLConf.withExistingConf(conf) {
+      val typed = recordSchema(Seq(record), meta.schemaDdl)
+      val row = CatalystTypeConverters.createToCatalystConverter(typed)(
+        recordRow(typed, record)).asInstanceOf[InternalRow]
+      // a partitioned scan lists the partition columns last
+      val parts = meta.partitionBy
+      val fields = schema.fields.filter(_.name != drop)
+      val out = StructType(fields.filterNot(f => parts.contains(f.name)) ++
+        parts.flatMap(p => fields.find(_.name == p)))
+      val tz = Some(conf.sessionLocalTimeZone)
+      val values: Array[Any] = out.fields.map { f =>
+        val i = typed.fieldNames.indexOf(f.name)
+        if (i < 0) null
+        else {
+          val t = typed(i).dataType
+          Cast(Literal(row.get(i, t), t), f.dataType, tz).eval()
+        }
+      }
+      val writer = new java.io.CharArrayWriter()
+      val gen = new JacksonGenerator(out, writer,
+        new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone))
+      gen.write(new GenericInternalRow(values))
+      gen.flush()
+      writer.toString
+    }
+  }
 
   /** Insert-or-update on the `unique_on` keys (node.py:318-334).
     *
@@ -303,18 +354,18 @@ final class TableHandle(
     val incoming = withAutoFields(df, batchSeqFor())
     m.activeVersion match {
       case Some(v) =>
-        val existing = catalog.scan(spark, name, v)
-        if (sameColumns(existing.schema, incoming.schema)) {
+        val recorded = catalog.schema(spark, name, v)
+        if (sameColumns(recorded, incoming.schema)) {
           // partitioned tables MUST append through partitionBy or the
           // new files land flat at the version root and corrupt the
           // directory layout (writeCounted partitions every write)
           val added = writeCounted(clusterLight(
-            incoming.select(existing.columns.map(col): _*), m.clusterBy),
+            incoming.select(recorded.fieldNames.map(col).toSeq: _*), m.clusterBy),
             catalog.versionPath(name, v), "append")
-          catalog.setActive(name, v, catalog.recordCount(name) + added, existing.schema)
+          catalog.setActive(name, v, catalog.recordCount(name) + added, recorded)
         } else {
           // widen-only schema evolution: rewrite into a fresh version
-          writeNewVersion(unionWiden(existing, incoming))
+          writeNewVersion(unionWiden(catalog.scan(spark, name, v), incoming))
         }
         onSignal(name, "update")
       case None =>
@@ -337,6 +388,17 @@ final class TableHandle(
     * store the link step becomes a manifest entry instead). The new
     * count is the previous one plus the merged rows that matched no
     * existing key, observed on the merge write.
+    *
+    * The touched partitions are named from the batch BEFORE the
+    * in-batch dedup, so they cover every winner whichever duplicate
+    * wins, and the dedup runs once, inside the merge write. They are a
+    * superset only when a key's duplicates differ in a non-key
+    * partition column; that extra directory is rewritten instead of
+    * linked, with the same rows. A batch whose plan is already a local
+    * relation on the driver is named from its rows without a Spark job;
+    * any other batch is persisted, so the naming aggregate and the
+    * merge read the same rows (a batch may carry nondeterministic
+    * columns, e.g. its monotonic id).
     */
   private def doUpsert(df: DataFrame, orderBy: Seq[Column]): Unit = {
     val m = meta
@@ -346,34 +408,45 @@ final class TableHandle(
       else Seq(monotonically_increasing_id().desc) // arrival order (nondeterministic under retry)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(tieBreak: _*)
-    // persist the deduped batch: the touched-partition collect and the
-    // merge must see the SAME winner rows — the monotonically_increasing_id
-    // tie-break is not stable across independent re-evaluations (ADVICE r3)
-    val incoming = withAutoFields(df, batchSeqFor())
-      .withColumn("_gr_rn", row_number().over(w))
-      .filter(col("_gr_rn") === 1).drop("_gr_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try storedVersion match {
+    def deduped(batch: DataFrame): DataFrame =
+      batch.withColumn("_gr_rn", row_number().over(w))
+        .filter(col("_gr_rn") === 1).drop("_gr_rn")
+    val batch = withAutoFields(df, batchSeqFor())
+    storedVersion match {
       case None =>
-        writeNewVersion(incoming)
+        writeNewVersion(deduped(batch))
         onSignal(name, "create")
       case Some(old) =>
         val parts = m.partitionBy
         val oldPath = catalog.versionPath(name, old)
         val present = partitionDirs(oldPath, parts.size)
+        def merge(incoming: DataFrame, touched: Set[String]): Unit =
+          commit(clusterLight(mergeFrames(
+              catalog.scan(spark, name, old, present.filter(touched)), deduped(incoming), keys),
+              m.clusterBy),
+            counted = col(NewRow), base = catalog.recordCount(name),
+            link = linkDirs(oldPath, _, present.filterNot(touched)))
+        // each value cast to string in Spark, as the writer names it
+        val values = (rows: DataFrame) => rows.select(parts.map(col(_).cast("string")): _*)
+        def named(rows: Array[Row]): Set[String] =
+          rows.map(r => partitionDir(parts, parts.indices.map(r.getString))).toSet
         // a batch without its partition values may land in any directory
-        val touched: Set[String] =
-          if (parts.nonEmpty && parts.forall(incoming.columns.contains))
-            incoming.select(parts.map(col(_).cast("string")): _*).distinct().collect()
-              .map(r => partitionDir(parts, parts.indices.map(r.getString))).toSet
-          else present.toSet
-        val merged = mergeFrames(
-          catalog.scan(spark, name, old, present.filter(touched)), incoming, keys)
-        commit(clusterLight(merged, m.clusterBy), counted = col(NewRow),
-          base = catalog.recordCount(name),
-          link = linkDirs(oldPath, _, present.filterNot(touched)))
+        if (parts.isEmpty || !parts.forall(batch.columns.contains))
+          merge(batch, present.toSet)
+        else if (batch.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) {
+          // collect and a projection of a local relation run on the driver,
+          // no job; re-seeding it with the collected rows evaluates the
+          // auto-fields (e.g. the created timestamp) once
+          val local = spark.createDataFrame(java.util.Arrays.asList(batch.collect(): _*),
+            batch.schema)
+          merge(local, named(values(local).collect()))
+        } else {
+          val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try merge(pinned, named(values(pinned).distinct().collect()))
+          finally pinned.unpersist()
+        }
         onSignal(name, "update")
-    } finally incoming.unpersist()
+    }
   }
 
   /** Full-outer merge on `keys`, incoming values winning; [[NewRow]]
@@ -615,7 +688,13 @@ object TableHandle {
       spark: SparkSession,
       records: Seq[Map[String, Any]],
       declaredDdl: Option[String]): DataFrame = {
-    val schema: StructType = declaredDdl.map(StructType.fromDDL).getOrElse {
+    val schema = recordSchema(records, declaredDdl)
+    spark.createDataFrame(records.map(recordRow(schema, _)).asJava, schema)
+  }
+
+  private def recordSchema(records: Seq[Map[String, Any]],
+      declaredDdl: Option[String]): StructType =
+    declaredDdl.map(StructType.fromDDL).getOrElse {
       val types = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
       records.foreach(_.foreach { case (k, v) =>
         val t = typeOf(v)
@@ -629,13 +708,9 @@ object TableHandle {
         StructField(n, if (t == NullType) StringType else t)
       }.toSeq)
     }
-    val rows = records.map { r =>
-      Row.fromSeq(schema.fields.toSeq.map { f =>
-        coerce(r.get(f.name).orNull, f.dataType)
-      })
-    }
-    spark.createDataFrame(rows.asJava, schema)
-  }
+
+  private def recordRow(schema: StructType, r: Map[String, Any]): Row =
+    Row.fromSeq(schema.fields.toSeq.map(f => coerce(r.get(f.name).orNull, f.dataType)))
 
   private def typeOf(v: Any): DataType = v match {
     case null => NullType

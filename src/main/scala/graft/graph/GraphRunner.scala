@@ -3,6 +3,8 @@ package graft.graph
 import java.nio.file.Files
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType, StructType}
+import org.json4s.jackson.JsonMethods
 import graft.core.{Catalog, State, StreamCursor, TableHandle, Template}
 
 /** Execution context handed to code nodes (the Scala equivalent of the
@@ -95,6 +97,7 @@ final class GraphRunner(
     connections.get(name)
 
   val catalog = new Catalog(warehouse)
+  private val RequestKey = "patterns_request_key"
   private val changedStores = mutable.Set.empty[String]
   private val states = mutable.Map.empty[String, State]
   // serializes ingest with signal propagation (see appendLocked)
@@ -369,24 +372,54 @@ final class GraphRunner(
   def ingestWebhook(name: String, jsonLinesPath: String): Unit =
     appendLocked(name, spark.read.json(jsonLinesPath))
 
-  /** Webhook ingest from in-memory JSON bodies (the HTTP edge's path):
-    * parse with Spark's JSON inference, stamp the request key the
-    * respond contract is keyed on (node.py:544-553).
+  /** Webhook ingest from in-memory JSON bodies (the HTTP edge's path),
+    * stamped with the request key the respond contract is keyed on
+    * (node.py:544-553). Bodies that fit the table's recorded schema
+    * ([[bodySchema]]) parse with it: no inference job, and the append
+    * lands in place. Anything else goes through Spark's JSON inference,
+    * as file ingest does, and a new field or type takes the widen path.
     */
   def ingestWebhookJson(name: String, jsonBodies: Seq[String],
       requestKey: String): Unit = {
     import spark.implicits._
-    appendLocked(name, spark.read.json(jsonBodies.toDS())
-      .withColumn("patterns_request_key",
-        org.apache.spark.sql.functions.lit(requestKey)))
+    val reader = bodySchema(name, jsonBodies).fold(spark.read)(spark.read.schema(_))
+    appendLocked(name, reader.json(jsonBodies.toDS())
+      .withColumn(RequestKey, org.apache.spark.sql.functions.lit(requestKey)))
+  }
+
+  /** The webhook table's recorded schema less the request key and the
+    * auto-filled columns, if every body is a JSON object whose fields
+    * are all in it, each value null or the scalar that inference would
+    * type as that field's type; None otherwise (or before the first
+    * ingest).
+    */
+  private def bodySchema(name: String, bodies: Seq[String]): Option[StructType] = {
+    import org.json4s._
+    val h = tableHandle(name)
+    if (!h.exists) return None
+    val m = h.meta
+    val auto = Set(RequestKey, TableHandle.BucketCol) ++ m.addCreated ++ m.addMonotonicId
+    val s = StructType(h.schema.filterNot(f => auto(f.name)))
+    def fits(t: DataType, v: JValue): Boolean = (t, v) match {
+      case (_, JNull) => true
+      case (LongType, JInt(i)) => i.isValidLong
+      case (DoubleType, JDouble(_)) | (StringType, JString(_)) | (BooleanType, JBool(_)) => true
+      case _ => false
+    }
+    val conform = bodies.forall(b => scala.util.Try(JsonMethods.parse(b)).toOption.exists {
+      case JObject(fs) => fs.map(_._1).distinct.size == fs.size && fs.forall {
+        case (k, v) => s.find(_.name == k).exists(f => fits(f.dataType, v)) }
+      case _ => false
+    })
+    if (conform) Some(s) else None
   }
 
   /** The one ingest append. Serialized with other ingests and with
     * propagation: concurrent FIRST writes would race version creation
     * (two newVersion/setActive pairs, last one wins and the other's rows
     * land in a non-active version). JSON parsing happens before the lock
-    * and response POLLING stays concurrent — that is what the server
-    * pool buys.
+    * and response waits stay concurrent — that is what the server pool
+    * buys.
     */
   private def appendLocked(name: String, df: DataFrame): Unit =
     ingestLock.synchronized {
@@ -404,28 +437,28 @@ final class GraphRunner(
     val h = tableHandle(s"${webhookName}_responses")
     if (!h.exists) return None
     val hits = h.read
-      .filter(org.apache.spark.sql.functions.col("patterns_request_key") === requestKey)
-      .drop("patterns_request_key")
+      .filter(org.apache.spark.sql.functions.col(RequestKey) === requestKey)
+      .drop(RequestKey)
     hits.toJSON.take(1).headOption
   }
 
   // In-memory wake-up latches for `?wait=true` HTTP requests, keyed by
   // request key. The WAITER registers the latch (before ingesting, so a
   // responder running inline can never complete-before-register), and
-  // respondToRequest completes it if one is present — a waiting edge
-  // then does exactly one confirming table read instead of launching a
-  // parquet-scan Spark job every 50 ms for up to the whole timeout
-  // (≈200 jobs per waiting request). The `<name>_responses` table stays
-  // the durable record; the latch carries no payload.
+  // respondToRequest completes it with the response body if one is
+  // present — a waiting edge then answers from the latch, with no table
+  // read, instead of launching a parquet-scan Spark job every 50 ms for
+  // up to the whole timeout (≈200 jobs per waiting request). The
+  // `<name>_responses` table stays the durable record.
   private val responseLatches = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[Unit]]()
-  /** Table-read counter for the response path (spec: ≤2 per waited request). */
+    String, java.util.concurrent.CompletableFuture[String]]()
+  /** Table-read counter for the response path (spec: ≤1 per waited request). */
   private[graph] val responseReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private[graph] def responseLatch(
-      requestKey: String): java.util.concurrent.CompletableFuture[Unit] =
+      requestKey: String): java.util.concurrent.CompletableFuture[String] =
     responseLatches.computeIfAbsent(requestKey,
-      _ => new java.util.concurrent.CompletableFuture[Unit]())
+      _ => new java.util.concurrent.CompletableFuture[String]())
 
   private[graph] def dropResponseLatch(requestKey: String): Unit =
     responseLatches.remove(requestKey)
@@ -433,16 +466,19 @@ final class GraphRunner(
   /** respond_to_request (node.py:544-553): reply to a webhook request by
     * writing the payload row keyed by `patterns_request_key` into the
     * hook's `<name>_responses` table; the platform edge delivers it to
-    * the waiting HTTP request (woken via the request's latch).
+    * the waiting HTTP request, whose latch carries the body
+    * `webhookResponse` would read back (rendered on the driver from the
+    * row as committed).
     */
   def respondToRequest(webhookName: String, requestKey: String,
       payload: Map[String, Any]): Unit = {
     val h = tableHandle(s"${webhookName}_responses")
-    h.appendRecords(Seq(payload + ("patterns_request_key" -> requestKey)))
+    val record = payload + (RequestKey -> requestKey)
+    h.appendRecords(Seq(record))
     h.flush()
     // wake a waiting edge AFTER the durable write; only waiters create
     // latches, so completing an absent key is a no-op, not a leak
-    Option(responseLatches.get(requestKey)).foreach(_.complete(()))
+    Option(responseLatches.get(requestKey)).foreach(_.complete(h.recordJson(record, RequestKey)))
   }
 
   private[graph] def changedStoresSnapshot: Set[String] = changedStores.toSet

@@ -16,14 +16,16 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    column) to the webhook's same-name table,
   *  - runs one downstream signal wave (the platform runs consumers
   *    asynchronously; a loopback edge can afford to run them inline),
-  *  - with `?wait=true`, polls `<name>_responses` for a row carrying
-  *    this request's key (written by `GraphRunner.respondToRequest`)
-  *    and returns its payload as the HTTP response body; otherwise
-  *    responds 202 with the request key.
+  *  - with `?wait=true`, returns the payload of the row carrying this
+  *    request's key in `<name>_responses` as the HTTP response body:
+  *    the body `GraphRunner.respondToRequest` hands to the request's
+  *    latch, or, for a node that writes that table itself, one read of
+  *    it; otherwise responds 202 with the request key.
   *
   * Pure JDK (`com.sun.net.httpserver`) — no added dependencies; binds
-  * 127.0.0.1 only. JSON parsing is Spark's own (`spark.read.json`), so
-  * body schemas follow the same inference rules as file ingest.
+  * 127.0.0.1 only. JSON parsing is Spark's own: a body that fits the
+  * webhook table's recorded schema parses with it, any other with the
+  * inference rules of file ingest (`GraphRunner.ingestWebhookJson`).
   */
 final class WebhookServer(runner: GraphRunner, port: Int = 0,
     responseTimeoutMs: Long = 10000L) {
@@ -41,7 +43,7 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
             JObject("error" -> JString(Option(e.getMessage).getOrElse(""))))))
       } finally ex.close()
   })
-  // Small pool, not serial dispatch: a `?wait=true` client polling for
+  // Small pool, not serial dispatch: a `?wait=true` client waiting for
   // its response must not block other posts (including the one whose
   // downstream run produces that response). Concurrent ingests to one
   // table are safe: batch sequences and meta updates serialize behind
@@ -76,18 +78,17 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
     if (!wait) {
       respond(ex, 202, s"""{"patterns_request_key":"$key"}"""); return
     }
-    // at most 2 table reads per waited request: one up-front check
-    // (covers respond-before-wait), one confirming read after the latch
-    // fires — never a 50 ms Spark-job poll loop
+    // at most 1 table read per waited request, never a 50 ms Spark-job
+    // poll loop: a responder that ran inline has already completed the
+    // latch with the body; otherwise one up-front read covers a node
+    // that wrote `<name>_responses` itself, then the latch is awaited
     try {
-      var resp: Option[String] = runner.webhookResponse(name, key)
-      if (resp.isEmpty) {
-        try {
-          latch.get.get(responseTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-          resp = runner.webhookResponse(name, key)
-        } catch { case _: java.util.concurrent.TimeoutException => () }
-      }
-      resp match {
+      val l = latch.get
+      Option(l.getNow(null))
+        .orElse(runner.webhookResponse(name, key))
+        .orElse(
+          try Some(l.get(responseTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+          catch { case _: java.util.concurrent.TimeoutException => None }) match {
         case Some(json) => respond(ex, 200, json)
         case None => respond(ex, 504,
           s"""{"error":"no response for key","patterns_request_key":"$key"}""")

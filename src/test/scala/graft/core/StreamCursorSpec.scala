@@ -129,4 +129,25 @@ class StreamCursorSpec extends SparkSpec {
     assert(ids(s.batch()).isEmpty)
     assert(s.position.contains("6"))
   }
+
+  test("records and consumeRows yield interleaved appends in global order; rollback redelivers") {
+    import spark.implicits._
+    val root = tmpDir("stream")
+    val h = new TableHandle(spark, new Catalog(root), "t")
+    // three files whose ordering values interleave
+    Seq(Seq(1L, 4L, 7L), Seq(2L, 5L, 8L), Seq(3L, 6L, 9L)).foreach { ids =>
+      h.append(ids.map(i => (i, s"r$i")).toDF("id", "s")); h.flush()
+    }
+    val s = StreamCursor.forTable(h, new State(root, "n"), orderBy = Some("id"))
+    assert(s.records().map(_("id")).toList == (1L to 9L).toList)
+    assert(s.position.contains("9"))
+    s.rollback()
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    s.consumeRows(r => got += r.getAs[Long]("id"))
+    assert(got.toList == (1L to 9L).toList)
+    s.seek(4L)
+    got.clear()
+    s.consumeRows(r => got += r.getAs[Long]("id"))
+    assert(got.toList == (5L to 9L).toList)
+  }
 }

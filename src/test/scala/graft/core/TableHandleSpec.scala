@@ -576,4 +576,32 @@ class TableHandleSpec extends SparkSpec {
       java.nio.file.Paths.get(cat.versionPath("t", orphan))))
     assert(h.read.count() == 2)
   }
+
+  test("upsert of a batch with in-batch duplicate keys equals the model: 16 buckets, and a non-key partition") {
+    import spark.implicits._
+    def model(rows: Seq[(Long, String, Long, String)]): Map[Long, (String, String)] =
+      rows.groupBy(_._1).map { case (k, rs) => k -> { val w = rs.maxBy(_._3); (w._2, w._4) } }
+    def got(h: TableHandle): Map[Long, (String, String)] = {
+      val rs = h.read.select("k", "p", "v").collect()
+      assert(rs.map(_.getLong(0)).distinct.length == rs.length, "each key once")
+      rs.map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+    }
+    val seed = (1L to 20L).map(k => (k, s"p${k % 3}", 0L, s"v$k"))
+    // key 3 and key 25 twice; in the partitioned table their duplicates
+    // sit in different partitions (the winner moves key 3 from p0 to p9)
+    val batch = Seq((3L, "p0", 1L, "old3"), (3L, "p9", 2L, "new3"), (25L, "p1", 5L, "new25"),
+      (25L, "p2", 1L, "old25"), (7L, "p1", 9L, "new7"))
+    val bucketed = (h: TableHandle) => h.init(uniqueOn = Seq("k"), hashBuckets = Some(16))
+    val partitioned = (h: TableHandle) => h.init(uniqueOn = Seq("k"), partitionBy = Seq("p"))
+    for ((layout, init) <- Seq("16 buckets" -> bucketed, "partitioned by p" -> partitioned);
+         local <- Seq(true, false)) {
+      val h = init(handle(tmpDir("tbl")))
+      h.upsert(seed.toDF("k", "p", "ts", "v")); h.flush()
+      val df = batch.toDF("k", "p", "ts", "v")
+      h.upsert(if (local) df else df.repartition(2), orderBy = Seq($"ts")); h.flush()
+      val want = model(seed) ++ model(batch)
+      assert(got(h) == want, s"$layout, local batch = $local")
+      assert(h.recordCount == want.size)
+    }
+  }
 }

@@ -3,8 +3,11 @@ package graft.graph
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 import graft.core.StreamCursor
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 class WebhookServerSpec extends SparkSpec {
 
@@ -200,5 +203,195 @@ class WebhookServerSpec extends SparkSpec {
       val json = org.json4s.jackson.JsonMethods.parse(r.body())
       assert((json \ "error") == org.json4s.JString(msg))
     } finally server.stop()
+  }
+
+  test("a waited round trip through stream, 16-bucket upsert and respond runs at most 7 Spark jobs") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: responder.scala
+        |    id: responder
+        |    inputs: {hook: hook}
+        |    outputs: {profiles: profiles}
+        |stores:
+        |  - table: profiles
+        |""".stripMargin)
+    val schema = StructType(Seq(StructField("user_id", LongType),
+      StructField("n", LongType), StructField("total", LongType)))
+    // the repo benchmark's responder: stream the new `hook` rows by
+    // request key, read the touched profiles, upsert (user_id, n, total)
+    // into a 16-bucket keyed table, checkpoint, respond per request
+    lazy val runner: GraphRunner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("responder.scala" -> new CodeNode {
+        def run(ctx: NodeContext): Unit = {
+          val cur = ctx.stream("hook", Some("patterns_request_key"))
+          val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+          cur.consumeRows(r => rows += ((r.getAs[String]("patterns_request_key"),
+            r.getAs[Long]("user_id"), r.getAs[Long]("value"))))
+          val profiles = ctx.table("profiles")
+          if (profiles.meta.uniqueOn.isEmpty)
+            profiles.init(uniqueOn = Seq("user_id"), hashBuckets = Some(16))
+          val users = rows.map(_._2).distinct.toSeq
+          val before: Map[Long, (Long, Long)] =
+            if (!profiles.exists) Map.empty
+            else profiles.read.filter(col("user_id").isin(users: _*))
+              .select("user_id", "n", "total").collect()
+              .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+          val after = users.map { u =>
+            val mine = rows.filter(_._2 == u)
+            val (n, t) = before.getOrElse(u, (0L, 0L))
+            u -> ((n + mine.size, t + mine.map(_._3).sum))
+          }.toMap
+          profiles.upsert(spark.createDataFrame(java.util.Arrays.asList(after.toSeq.sortBy(_._1)
+            .map { case (u, (n, t)) => Row(u, n, t) }: _*), schema))
+          profiles.flush()
+          cur.checkpoint()
+          rows.foreach { case (key, u, _) =>
+            val (n, t) = after(u)
+            runner.respondToRequest("hook", key, Map("user_id" -> u, "n" -> n, "total" -> t))
+          }
+        }
+      }))
+    val server = new WebhookServer(runner, port = 0, responseTimeoutMs = 30000)
+    try {
+      val url = server.url("hook") + "?wait=true"
+      val warm = post(url, """{"user_id": 1, "value": 5}""")
+      assert(warm.statusCode() == 200, warm.body())
+      // user 1 updates a key the table holds; 2, 3 and 4 are new keys
+      val bodies = Seq(1L -> 7L, 2L -> 3L, 1L -> 1L, 3L -> 2L, 4L -> 9L)
+      val model = scala.collection.mutable.Map(1L -> ((1L, 5L)))
+      val perPost = bodies.map { case (u, v) =>
+        val reads = runner.responseReads.get()
+        val (r, jobs) = JobCounter.jobs(spark)(
+          post(url, s"""{"user_id": $u, "value": $v}"""))
+        assert(r.statusCode() == 200, r.body())
+        val (n, t) = model.getOrElse(u, (0L, 0L))
+        model(u) = (n + 1, t + v)
+        assert(r.body() == s"""{"user_id":$u,"n":${n + 1},"total":${t + v}}""")
+        (jobs, runner.responseReads.get() - reads)
+      }
+      info(s"Spark jobs per POST: ${perPost.map(_._1).mkString(", ")}")
+      assert(perPost.forall(_._1 <= 7),
+        s"Spark jobs per POST: ${perPost.map(_._1).mkString(", ")} (at most 7)")
+      assert(perPost.forall(_._2 == 0), "answered from the latch, no table read")
+    } finally server.stop()
+  }
+
+  test("the waited body equals the committed row's table read, byte for byte, also when it widens") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: responder.scala
+        |    id: respond02
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789")
+    val payloads: Seq[Map[String, Any]] = Seq(
+      Map("n" -> 7L, "x" -> 2.5, "s" -> "a \"quoted\" é\n", "ok" -> true,
+        "none" -> null, "at" -> ts, "i" -> 3),
+      Map("n" -> -1L, "x" -> 1e-7, "s" -> "", "ok" -> false, "none" -> "set", "at" -> ts),
+      Map("n" -> 8L, "extra" -> "new field"), // widens: a new column
+      Map("n" -> 2.5, "x" -> 4.0)) // widens: n long -> double
+    val keys = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    lazy val runner: GraphRunner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("responder.scala" -> new CodeNode {
+        def run(ctx: NodeContext): Unit = {
+          val cur = ctx.stream("hook", Some("patterns_request_key"))
+          cur.records().foreach { rec =>
+            val i = rec("i").asInstanceOf[Long]
+            val key = rec("patterns_request_key").toString
+            keys.put(i, key)
+            runner.respondToRequest("hook", key, payloads(i.toInt))
+          }
+          cur.checkpoint()
+        }
+      }))
+    val server = new WebhookServer(runner, port = 0, responseTimeoutMs = 30000)
+    try {
+      payloads.indices.foreach { i =>
+        val reads = runner.responseReads.get()
+        val r = post(server.url("hook") + "?wait=true", s"""{"i": $i}""")
+        assert(r.statusCode() == 200, r.body())
+        assert(runner.responseReads.get() == reads, "answered from the latch, no table read")
+        assert(Some(r.body()) == runner.webhookResponse("hook", keys.get(i.toLong)),
+          s"payload $i")
+      }
+      val resp = runner.tableHandle("hook_responses")
+      assert(resp.schema("n").dataType == org.apache.spark.sql.types.DoubleType)
+      assert(resp.schema.fieldNames.contains("extra"))
+    } finally server.stop()
+  }
+
+  test("wait=true yields 504 at the timeout when no node responds") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: silent.scala
+        |    id: silent01
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    val silent = new CodeNode {
+      def run(ctx: NodeContext): Unit =
+        ctx.stream("hook", Some("patterns_request_key")).records().foreach(_ => ())
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("silent.scala" -> silent))
+    val server = new WebhookServer(runner, port = 0, responseTimeoutMs = 700)
+    try {
+      val t0 = System.nanoTime()
+      val r = post(server.url("hook") + "?wait=true", """{"q": 1}""")
+      assert(r.statusCode() == 504, r.body())
+      assert(r.body().contains("no response for key"))
+      assert((System.nanoTime() - t0) / 1e6 >= 700)
+      assert(runner.responseReads.get() == 1)
+    } finally server.stop()
+  }
+
+  test("ingest: a body that fits the recorded schema lands in place without inference; others widen as inferred") {
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |stores: []
+        |""".stripMargin)
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"))
+    // the model: every body through Spark's JSON inference, appended
+    val model = new graft.core.TableHandle(spark, new graft.core.Catalog(tmpDir("model")), "hook")
+    val hook = runner.tableHandle("hook")
+    def rows(h: graft.core.TableHandle) =
+      h.read.collect().map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq)).toSet
+    def ingest(i: Int, body: String): Long = {
+      val key = f"k$i%02d"
+      model.append(spark.read.json(Seq(body).toDS()).withColumn("patterns_request_key", lit(key)))
+      model.flush()
+      JobCounter.jobs(spark)(runner.ingestWebhookJson("hook", Seq(body), key))._2
+    }
+    ingest(0, """{"a": 1, "k": 10, "b": "x", "c": 1.5, "d": true}""")
+    Seq(
+      """{"a": 2, "k": 20, "b": "y", "c": 2.5, "d": false}""" -> true, // fits
+      """{"a": 3, "b": null}""" -> true, // missing fields: null
+      """{"a": 4, "e": "new"}""" -> false, // a new field
+      """{"a": "five"}""" -> false, // a string into a bigint field
+      """{"k": 6.5}""" -> false // a double into a bigint field
+    ).zipWithIndex.foreach { case ((body, inPlace), i) =>
+      val (active, versions) = (hook.meta.activeVersion, hook.versions.size)
+      val jobs = ingest(i + 1, body)
+      assert(hook.schema.toDDL == model.schema.toDDL, body)
+      assert(rows(hook) == rows(model), body)
+      if (inPlace) {
+        assert(hook.meta.activeVersion == active && hook.versions.size == versions,
+          s"$body landed in place")
+        assert(jobs == 1, s"$body: $jobs jobs, only the append write expected")
+      } else assert(hook.meta.activeVersion != active, s"$body widened into a new version")
+    }
+    assert(hook.schema("a").dataType == org.apache.spark.sql.types.StringType)
+    assert(hook.schema("k").dataType == org.apache.spark.sql.types.DoubleType)
   }
 }

@@ -398,7 +398,11 @@ final class TableHandle(
     * relation on the driver is named from its rows without a Spark job;
     * any other batch is persisted, so the naming aggregate and the
     * merge read the same rows (a batch may carry nondeterministic
-    * columns, e.g. its monotonic id).
+    * columns, e.g. its monotonic id). When a partition column is neither
+    * a key nor the hash bucket, a key's old row may sit in a directory
+    * the batch does not name; the directories of the old version that
+    * hold the batch's keys are found with one semi-join scan and merged
+    * too. Key-partitioned and hash-bucketed tables need no such scan.
     */
   private def doUpsert(df: DataFrame, orderBy: Seq[Column]): Unit = {
     val m = meta
@@ -430,6 +434,14 @@ final class TableHandle(
         val values = (rows: DataFrame) => rows.select(parts.map(col(_).cast("string")): _*)
         def named(rows: Array[Row]): Set[String] =
           rows.map(r => partitionDir(parts, parts.indices.map(r.getString))).toSet
+        // a key can move to another value of a partition column that it
+        // does not determine; the directory holding its old row is then
+        // touched too, or that row would be linked into the new version
+        def touched(incoming: DataFrame, own: Set[String]): Set[String] =
+          if (parts.forall(p => keys.contains(p) || p == BucketCol)) own
+          else own ++ named(values(catalog.scan(spark, name, old, present.filterNot(own))
+            .join(incoming.select(keys.map(col): _*), keys, "left_semi"))
+            .distinct().collect())
         // a batch without its partition values may land in any directory
         if (parts.isEmpty || !parts.forall(batch.columns.contains))
           merge(batch, present.toSet)
@@ -439,10 +451,10 @@ final class TableHandle(
           // auto-fields (e.g. the created timestamp) once
           val local = spark.createDataFrame(java.util.Arrays.asList(batch.collect(): _*),
             batch.schema)
-          merge(local, named(values(local).collect()))
+          merge(local, touched(local, named(values(local).collect())))
         } else {
           val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try merge(pinned, named(values(pinned).distinct().collect()))
+          try merge(pinned, touched(pinned, named(values(pinned).distinct().collect())))
           finally pinned.unpersist()
         }
         onSignal(name, "update")

@@ -370,7 +370,14 @@ final class GraphRunner(
     * auto-created same-name table (create.py:177-197; node.py:544-553).
     */
   def ingestWebhook(name: String, jsonLinesPath: String): Unit =
-    appendLocked(name, spark.read.json(jsonLinesPath))
+    appendLocked(name, inferring.json(jsonLinesPath))
+
+  /** Spark's JSON inference for bodies of unknown shape. A field that is
+    * null in every body is left out instead of typed as string, so it
+    * cannot widen a recorded column; the append fills a recorded one with
+    * nulls.
+    */
+  private def inferring = spark.read.option("dropFieldIfAllNull", "true")
 
   /** Webhook ingest from in-memory JSON bodies (the HTTP edge's path),
     * stamped with the request key the respond contract is keyed on
@@ -382,7 +389,7 @@ final class GraphRunner(
   def ingestWebhookJson(name: String, jsonBodies: Seq[String],
       requestKey: String): Unit = {
     import spark.implicits._
-    val reader = bodySchema(name, jsonBodies).fold(spark.read)(spark.read.schema(_))
+    val reader = bodySchema(name, jsonBodies).fold(inferring)(spark.read.schema(_))
     appendLocked(name, reader.json(jsonBodies.toDS())
       .withColumn(RequestKey, org.apache.spark.sql.functions.lit(requestKey)))
   }

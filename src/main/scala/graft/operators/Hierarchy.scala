@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, GraftShim, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed transitive closure over a parent-pointer forest — the
   * Spark answer to ANSI `WITH RECURSIVE` hierarchy walks, which the
@@ -18,19 +17,22 @@ import org.apache.spark.storage.StorageLevel
   * the distance covered — so a hierarchy of depth D converges in
   * ⌈log2 D⌉ rounds, not D. Roots are their own ancestor at depth 0 and
   * act as the join fixpoint. The convergence witness (rows whose
-  * pointer still moved) rides a CollectMetrics observation on the one
-  * materializing action per round, and each round's self-join output is
-  * rebuilt as a fresh LogicalRDD over the cached partitions — the same
-  * lineage cut as [[ConnectedComponents]] (the jump self-join would
-  * otherwise double the logical plan every round).
+  * pointer still moved) and the round's row count ride a CollectMetrics
+  * observation on the one action per round, an eager `localCheckpoint`.
+  * The checkpoint cuts the lineage (the jump self-join would otherwise
+  * double the logical plan every round) and is re-stated with its
+  * observed row count as its statistics, so the next round's join is
+  * planned from true sizes: a broadcast hash join while the labels fit
+  * under `spark.sql.autoBroadcastJoinThreshold` (one broadcast job and
+  * one checkpoint job per round), a sort-merge join beyond it.
   *
   * Scale shape: one self-equi-join of O(|V|) rows per round, shuffled
-  * on the ancestor key, O(log depth) rounds, no driver-side state
-  * beyond the changed count. A 100 TB catalog hierarchy (or URL-path /
-  * org-chart / bill-of-materials table) with depth 10^4 needs 14
-  * rounds. Cycles (data corruption in a parent column) cannot spin
-  * forever: maxIter bounds the walk and the unconverged exit is
-  * reported.
+  * on the ancestor key once the labels outgrow a broadcast, O(log depth)
+  * rounds, no driver-side state beyond the two observed counts. A
+  * 100 TB catalog hierarchy (or URL-path / org-chart /
+  * bill-of-materials table) with depth 10^4 needs 14 rounds. Cycles
+  * (data corruption in a parent column) cannot spin forever: maxIter
+  * bounds the walk and the unconverged exit is reported.
   */
 object Hierarchy {
 
@@ -39,26 +41,17 @@ object Hierarchy {
     * @param parentCol parent id column; null marks a root
     * @return (`id`, `root`, `depth`): root = tree root's id, depth =
     *         hops from the node up to its root (roots have depth 0).
-    *         Persisted (MEMORY_AND_DISK) — caller may `unpersist()`
-    *         after materializing downstream results.
+    *         Backed by the last round's local checkpoint, which nothing
+    *         registers in the CacheManager: the ContextCleaner drops its
+    *         blocks once the frame is unreferenced.
     */
   def rootClosure(nodes: DataFrame, idCol: String, parentCol: String,
       maxIter: Int = 20): DataFrame = {
-    val spark = nodes.sparkSession
-    // persisted helpers register in `live` so an exception mid-round
-    // releases them (the returned frame is removed before return — the
-    // caller owns that unpersist)
-    val live = scala.collection.mutable.Set.empty[DataFrame]
-    def persisted(f: DataFrame): DataFrame = {
-      f.persist(StorageLevel.MEMORY_AND_DISK); live += f; f
-    }
-    try {
     // roots point at themselves at depth 0: the doubling fixpoint
-    var labels = persisted(nodes.select(
-        col(idCol).as("id"),
-        coalesce(col(parentCol), col(idCol)).as("anc"),
-        when(col(parentCol).isNull, 0L).otherwise(1L).as("depth")))
-    var backing = labels
+    var labels = nodes.select(
+      col(idCol).as("id"),
+      coalesce(col(parentCol), col(idCol)).as("anc"),
+      when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"))
     var round = 0
     var converged = false
     while (!converged && round < maxIter) {
@@ -75,25 +68,18 @@ object Hierarchy {
           (col("x.depth") + coalesce(col("adepth"), lit(0L))).as("depth"),
           // moved ⇔ the ancestor itself was not yet a root
           (coalesce(col("adepth"), lit(0L)) > 0L).as("moved"))
-        .observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("changed"))
+        .observe(obs, count_if(col("moved")).as("changed"), count(lit(1)).as("rows"))
         .select("id", "anc", "depth")
-      persisted(jumped)
-      jumped.count() // materialize; the metric lands during this action
-      val changed = Option(obs.get("changed")).fold(0L)(_.asInstanceOf[Number].longValue)
-      backing.unpersist(); live -= backing
-      // lineage cut: fresh LogicalRDD over the cached partitions keeps
-      // the per-round plan O(1) instead of doubling per round
-      labels = spark.createDataFrame(jumped.rdd, jumped.schema)
-      backing = jumped
-      converged = changed == 0
+        .localCheckpoint() // the round's one action; the metrics land during it
+      val m = obs.get
+      // the lineage cut keeps the per-round plan O(1); its true size lets
+      // the next round's join pick broadcast or sort-merge up front
+      labels = GraftShim.withRowCount(jumped, m("rows").asInstanceOf[Long])
+      converged = m("changed") == 0L
       round += 1
     }
     System.err.println(s"[graft] rootClosure: $round rounds" +
       (if (converged) "" else s" (maxIter=$maxIter hit before fixpoint — cycle?)"))
-    live -= backing // ownership transfers to the caller
-    backing.select(col("id"), col("anc").as("root"), col("depth"))
-    } catch {
-      case t: Throwable => live.foreach(_.unpersist()); throw t
-    }
+    labels.select(col("id"), col("anc").as("root"), col("depth"))
   }
 }

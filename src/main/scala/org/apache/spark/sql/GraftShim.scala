@@ -23,6 +23,23 @@ object GraftShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
+  /** `checkpointed` (an eager `localCheckpoint()`, whose plan is one
+    * LogicalRDD) re-stated with `rows` as its row count and
+    * `rows` × the estimated row width as its size. The checkpoint
+    * otherwise carries the estimate of the plan it was cut from, so the
+    * planner sizes joins over it from a guess instead of the truth.
+    */
+  def withRowCount(checkpointed: DataFrame, rows: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    val ds = checkpointed.asInstanceOf[classic.Dataset[Row]]
+    val r = ds.logicalPlan.asInstanceOf[execution.LogicalRDD]
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(r.output) * rows, rowCount = Some(rows))
+    classic.Dataset.ofRows(ds.sparkSession,
+      r.copy()(ds.sparkSession, Some(stats), Some(r.constraints)))
+  }
+
   /** Drop every CacheManager entry (test isolation helper). */
   def clearAllCache(spark: SparkSession): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -604,4 +604,17 @@ class TableHandleSpec extends SparkSpec {
       assert(h.recordCount == want.size)
     }
   }
+
+  test("upsert moving a key to another non-key partition leaves no stale row") {
+    import spark.implicits._
+    for (local <- Seq(true, false)) {
+      val h = handle(tmpDir("tbl")).init(uniqueOn = Seq("k"), partitionBy = Seq("p"))
+      h.upsert(Seq((1L, "a", "v1"), (2L, "b", "v2")).toDF("k", "p", "v")); h.flush()
+      val df = Seq((1L, "b", "v1b")).toDF("k", "p", "v")
+      h.upsert(if (local) df else df.repartition(2)); h.flush()
+      val got = h.read.select("k", "p", "v").as[(Long, String, String)].collect().sorted
+      assert(got.toSeq == Seq((1L, "b", "v1b"), (2L, "b", "v2")), s"local batch = $local")
+      assert(h.recordCount == 2)
+    }
+  }
 }

@@ -345,6 +345,27 @@ class GraphRunnerSpec extends SparkSpec {
     assert(resp.head().getAs[String]("patterns_request_key") == "r1")
   }
 
+  test("a JSON null keeps the recorded type on both inference ingest paths") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |stores: []
+        |""".stripMargin)
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"))
+    def types = runner.tableHandle("hook").schema.map(f => f.name -> f.dataType.sql).toMap
+    // bodies: the second does not fit the recorded schema (new field e)
+    runner.ingestWebhookJson("hook", Seq("""{"a": 1}"""), "r1")
+    runner.ingestWebhookJson("hook", Seq("""{"a": null, "e": 2}"""), "r2")
+    assert(types("a") == "BIGINT" && types("e") == "BIGINT", types)
+    // file ingest always infers
+    val drop = tmpDir("hook")
+    Files.writeString(Paths.get(drop, "batch1.json"), "{\"a\": null, \"f\": 3}\n")
+    runner.ingestWebhook("hook", drop)
+    assert(types("a") == "BIGINT" && types("f") == "BIGINT", types)
+    assert(runner.tableHandle("hook").read.filter("a is null").count() == 2)
+  }
+
   test("component resolution from a local registry (uses: org/component@v1)") {
     val comp = tmpDir("component")
     write(comp, "count.sql", "select count(*) as n from {{ input }}")

@@ -1,7 +1,14 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Hierarchy (recursive closure) and PageRank — the iterative graph
   * operators added in round 9 wave 7.
@@ -49,21 +56,70 @@ class GraphOpsSpec extends SparkSpec {
     assert(out.count() == 3)
   }
 
-  test("rootClosure matches the driver-walk answer on the q38 forest shape") {
-    // same planting rule as q38, small N, vs an in-memory walk
-    val n = 120
-    def parent(i: Long): Option[Long] =
-      if (i % 50 == 0) None else Some(math.max(i - 1 - (i % 7), (i / 50) * 50))
-    val nodes = (0L until n).map(i => (i, parent(i))).toDF("id", "parent")
-    def walk(i: Long): (Long, Long) = {
+  // q38's planting rule: a forest of 50-node trees, depth up to 8
+  private def q38Parent(i: Long): Option[Long] =
+    if (i % 50 == 0) None else Some(math.max(i - 1 - (i % 7), (i / 50) * 50))
+  private def q38Forest(n: Int) =
+    (0L until n).map(i => (i, q38Parent(i))).toDF("id", "parent")
+  private def q38Walk(n: Int): Map[Long, (Long, Long)] =
+    (0L until n).map { i =>
       var (cur, d) = (i, 0L)
-      while (parent(cur).isDefined) { cur = parent(cur).get; d += 1 }
-      (cur, d)
+      while (q38Parent(cur).isDefined) { cur = q38Parent(cur).get; d += 1 }
+      i -> (cur, d)
+    }.toMap
+  private def labelsOf(out: DataFrame): Map[Long, (Long, Long)] =
+    out.as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+
+  /** `body`'s result and the executed plan of each round's checkpoint. */
+  private def roundPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val expect = (0L until n).map(i => i -> walk(i)).toMap
-    val got = Hierarchy.rootClosure(nodes, "id", "parent")
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(got == expect)
+    spark.listenerManager.register(l)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+  private object plansOf extends AdaptiveSparkPlanHelper
+  private def has(plan: SparkPlan)(pf: PartialFunction[SparkPlan, Unit]): Boolean =
+    plansOf.collect(plan)(pf).nonEmpty
+
+  test("rootClosure matches the driver-walk answer on the q38 forest shape") {
+    assert(labelsOf(Hierarchy.rootClosure(q38Forest(120), "id", "parent")) == q38Walk(120))
+  }
+
+  test("rootClosure on the q38 forest: at most 10 jobs, every round a broadcast join") {
+    val n = 5000
+    val nodes = q38Forest(n)
+    val ((got, jobs), plans) = roundPlans(JobCounter.jobs(spark)(
+      labelsOf(Hierarchy.rootClosure(nodes, "id", "parent"))))
+    assert(got == q38Walk(n))
+    assert(jobs <= 10, s"$jobs Spark jobs")
+    assert(plans.size == 4, "one checkpoint per round: depth 8 takes 4 rounds")
+    plans.foreach { p =>
+      assert(has(p) { case _: BroadcastHashJoinExec => }, s"no broadcast join:\n$p")
+      assert(!has(p) { case _: ShuffleExchangeExec => }, s"shuffle exchange:\n$p")
+    }
+  }
+
+  test("rootClosure sort-merge joins when broadcasts are off, with the same labels") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (got, plans) = try roundPlans(
+      labelsOf(Hierarchy.rootClosure(q38Forest(5000), "id", "parent")))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(got == q38Walk(5000))
+    assert(plans.size == 4)
+    plans.foreach { p =>
+      assert(has(p) { case _: SortMergeJoinExec => }, s"no sort-merge join:\n$p")
+      assert(!has(p) { case _: BroadcastHashJoinExec => }, s"broadcast join:\n$p")
+    }
   }
 
   // -------------------------------------------------- PageRank

@@ -2,7 +2,11 @@ package graft.cli
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+import org.json4s.jackson.JsonMethods.{compact, render}
 
+import graft.core.Catalog
 import graft.graph.{GraphConfigEditor, GraphDiff, GraphManifest, GraphRunner,
   GraphScheduler, Packaging}
 
@@ -45,66 +49,33 @@ object Cli {
       .map(Paths.get(_)).getOrElse(home.resolve("registry"))
   private def configPath: Path = home.resolve("config.json")
 
-  /** Single-purpose flat JSON (string values only) for the config
-    * file — the reference stores the same shape (config.py
-    * read/write_devkit_config).
+  /** One flat JSON object on one line, `{"k": v, ...}`: the layout of
+    * config.json (the reference's read/write_devkit_config shape,
+    * config.py), the registry meta.json, the secret files and every
+    * `--json` listing row. json4s renders and escapes each key and value.
     */
-  // Values are interpolated into hand-built JSON: escape quotes and
-  // backslashes (a title containing `"` must round-trip through
-  // meta.json intact) plus control characters (a secret value with an
-  // embedded newline must not leave a raw newline — invalid JSON —
-  // inside the quoted string).
-  private[graft] def jsonEsc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => b.append("\\\\")
-      case '"' => b.append("\\\"")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
+  private def jsonLine(fields: Seq[(String, JValue)]): String =
+    fields.map { case (k, v) => s"${compact(render(JString(k)))}: ${compact(render(v))}" }
+      .mkString("{", ", ", "}")
+
+  private def writeJson(p: Path, fields: (String, JValue)*): Unit =
+    Catalog.writeAtomic(p, jsonLine(fields) + "\n")
+
+  /** A flat JSON object file's fields, booleans and numbers as their
+    * JSON text. */
+  private def readJson(p: Path): Map[String, String] =
+    scala.util.Try(JsonMethods.parse(Files.readString(p))).toOption match {
+      case Some(JObject(fields)) => fields.collect {
+        case (k, JString(v)) => k -> v
+        case (k, v @ (JBool(_) | JInt(_) | JLong(_))) => k -> compact(render(v))
+      }.toMap
+      case _ => abort(s"$p is not a JSON object")
     }
-    b.toString
-  }
-  private[graft] def jsonUnesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => b.append('\n'); i += 2
-          case 'r' => b.append('\r'); i += 2
-          case 't' => b.append('\t'); i += 2
-          case 'u' if i + 6 <= s.length &&
-              s.substring(i + 2, i + 6).forall(h => Character.digit(h, 16) >= 0) =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          // `\"`, `\\`, and (tolerantly) any other escape: the literal
-          case other => b.append(other); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-  // String value token tolerant of \" and \\ inside the quotes.
-  private val JsonStr = raw""""((?:[^"\\]|\\.)*)""""
 
   private def readConfig(): Map[String, String] =
-    if (!Files.exists(configPath)) Map.empty
-    else {
-      val text = Files.readString(configPath)
-      (JsonStr + raw"""\s*:\s*""" + JsonStr).r.findAllMatchIn(text)
-        .map(m => jsonUnesc(m.group(1)) -> jsonUnesc(m.group(2))).toMap
-    }
-  private def writeConfig(cfg: Map[String, String]): Unit = {
-    Files.createDirectories(home)
-    val body = cfg.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${jsonEsc(k)}": "${jsonEsc(v)}"""" }
-      .mkString("{", ", ", "}")
-    Files.writeString(configPath, body + "\n")
-  }
+    if (!Files.exists(configPath)) Map.empty else readJson(configPath)
+  private def writeConfig(cfg: Map[String, String]): Unit =
+    writeJson(configPath, cfg.toSeq.sortBy(_._1).map { case (k, v) => k -> JString(v) }: _*)
 
   private def defaultOrg(explicit: String): String =
     if (explicit.nonEmpty) explicit
@@ -127,32 +98,21 @@ object Cli {
       latest: Int, deprecated: Boolean = false)
   private def metaPath(org: String, slug: String): Path =
     registryRoot.resolve(org).resolve(slug).resolve("meta.json")
-  /** Flat JSON object (string/bool/int values) → map, tolerant of
-    * escaped quotes/backslashes in string values.
-    */
-  private def readJsonMap(p: Path): Map[String, String] =
-    (JsonStr + raw"""\s*:\s*($JsonStr|true|false|\d+)""").r
-      .findAllMatchIn(Files.readString(p))
-      .map(x => jsonUnesc(x.group(1)) ->
-        Option(x.group(3)).map(jsonUnesc).getOrElse(x.group(2))).toMap
   private def readMeta(org: String, slug: String): Option[Meta] = {
     val p = metaPath(org, slug)
     if (!Files.exists(p)) None
     else {
-      val m = readJsonMap(p)
+      val m = readJson(p)
       Some(Meta(m.getOrElse("title", slug), m.getOrElse("slug", slug),
         m.getOrElse("public", "false") == "true",
         m.getOrElse("latest", "0").toInt,
         m.getOrElse("deprecated", "false") == "true"))
     }
   }
-  private def writeMeta(org: String, slug: String, meta: Meta): Unit = {
-    Files.createDirectories(metaPath(org, slug).getParent)
-    Files.writeString(metaPath(org, slug),
-      s"""{"title": "${jsonEsc(meta.title)}", "slug": "${jsonEsc(meta.slug)}", """ +
-        s""""public": ${meta.public}, "latest": ${meta.latest}, """ +
-        s""""deprecated": ${meta.deprecated}}""" + "\n")
-  }
+  private def writeMeta(org: String, slug: String, meta: Meta): Unit =
+    writeJson(metaPath(org, slug), "title" -> JString(meta.title),
+      "slug" -> JString(meta.slug), "public" -> JBool(meta.public),
+      "latest" -> JInt(meta.latest), "deprecated" -> JBool(meta.deprecated))
   private def versionZip(org: String, slug: String, v: Int): Path =
     registryRoot.resolve(org).resolve(slug).resolve(s"v$v.zip")
   /** meta.json can outlive its zip (crash mid-upload, partial delete):
@@ -261,12 +221,10 @@ object Cli {
     // the name becomes a file name: refuse traversal/separator chars
     if (!name.matches("[A-Za-z0-9_.-]+") || name == "." || name == "..")
       abort(s"secret name '$name' must match [A-Za-z0-9_.-]+")
-    val p = registryRoot.resolve(org).resolve(".secrets").resolve(s"$name.json")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p,
-      s"""{"name": "${jsonEsc(name)}", "value": "${jsonEsc(value)}", """ +
-        s""""sensitive": ${a.flag("sensitive")}, """ +
-        s""""description": "${jsonEsc(a.opt("description"))}"}""" + "\n")
+    writeJson(registryRoot.resolve(org).resolve(".secrets").resolve(s"$name.json"),
+      "name" -> JString(name), "value" -> JString(value),
+      "sensitive" -> JBool(a.flag("sensitive")),
+      "description" -> JString(a.opt("description")))
     println(s"Created secret $name")
   }
 
@@ -510,7 +468,7 @@ object Cli {
           val files = try stream.iterator().asScala.toList finally stream.close()
           files.filter(_.getFileName.toString.endsWith(".json"))
             .sortBy(_.getFileName.toString).map { f =>
-              val m = readJsonMap(f)
+              val m = readJson(f)
               val sensitive = m.getOrElse("sensitive", "false") == "true"
               Seq("name" -> m.getOrElse("name", ""),
                 "value" -> (if (sensitive) "" else m.getOrElse("value", "")),
@@ -527,10 +485,8 @@ object Cli {
   private def printObjects(name: String, rows: Seq[Seq[(String, String)]],
       json: Boolean): Unit =
     if (rows.isEmpty) { if (!json) println(s"No $name found") }
-    else if (json) rows.foreach { r =>
-      println(r.map { case (k, v) => s""""${jsonEsc(k)}": "${jsonEsc(v)}"""" }
-        .mkString("{", ", ", "}"))
-    } else {
+    else if (json) rows.foreach(r => println(jsonLine(r.map { case (k, v) => k -> JString(v) })))
+    else {
       val headers = rows.head.map(_._1)
       val widths = headers.zipWithIndex.map { case (h, i) =>
         (h.length +: rows.map(_(i)._2.length)).max }
@@ -717,9 +673,8 @@ object Cli {
       "organization" -> cfg.getOrElse("organization", "local"),
       "registry" -> registryRoot.toString)
     if (a.flag("json"))
-      println((rows :+ ("config file" -> configPath.toString))
-        .map { case (k, v) => s""""${jsonEsc(k)}": "${jsonEsc(v)}"""" }
-        .mkString("{", ", ", "}"))
+      println(jsonLine((rows :+ ("config file" -> configPath.toString))
+        .map { case (k, v) => k -> JString(v) }))
     else {
       println(s"Your graft config is located at $configPath")
       rows.foreach { case (k, v) => println(s"$k: $v") }

@@ -79,14 +79,9 @@ final class Catalog(val root: String) {
   def metaOrFresh(name: String): TableMeta =
     meta(name).getOrElse(TableMeta.fresh(name))
 
-  /** Atomic metadata write: temp file + rename. */
-  def putMeta(m: TableMeta): Unit = {
-    Files.createDirectories(tableDir(m.name))
-    val tmp = tableDir(m.name).resolve(s"meta.json.tmp-${Thread.currentThread.getId}")
-    Files.writeString(tmp, Serialization.write(m))
-    Files.move(tmp, metaPath(m.name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Atomic metadata write ([[Catalog.writeAtomic]]). */
+  def putMeta(m: TableMeta): Unit =
+    Catalog.writeAtomic(metaPath(m.name), Serialization.write(m))
 
   // Per-table lock: update() is read-modify-write on the meta file, so
   // two concurrent updates to the SAME table would lose one (reachable
@@ -243,4 +238,16 @@ final class Catalog(val root: String) {
     else Files.list(Paths.get(root)).iterator().asScala
       .filter(p => Files.exists(p.resolve("meta.json")))
       .map(_.getFileName.toString).toSeq.sorted
+}
+
+object Catalog {
+  /** The one atomic file write: a per-thread temp file beside `path`,
+    * renamed over it, so a reader sees the old file or the new one. */
+  private[graft] def writeAtomic(path: Path, text: String): Unit = {
+    Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp-${Thread.currentThread.getId}")
+    Files.writeString(tmp, text)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -8,16 +8,23 @@ import org.json4s.jackson.JsonMethods
   * (/root/reference/patterns/node/node.py:417-505).
   *
   * Values are JSON scalars/structures persisted per node at
-  * `<warehouse>/_state/<node>.json`. `shouldContinue` implements the
-  * cooperative-deadline contract: stop at max(80% of the time limit,
-  * 120 s before it) — node.py:469-480.
+  * `<warehouse>/_state/<node>.json`. The in-memory view is read when the
+  * State is built, and every `set`/`delete`/`reset` rewrites the whole
+  * file atomically. Stream cursors keep their positions here too: they
+  * write at `checkpoint()` and, for a node run by the graph, at the end
+  * of a run that returns normally (`graft.graph.NodeContext`).
+  *
+  * A State is one run's: the graph builds a fresh one per node run, so
+  * `shouldContinue` counts from the start of that run and a
+  * `requestNewRun` belongs to it (the runner hands it to the caller when
+  * the run returns). `shouldContinue` implements the cooperative-deadline
+  * contract: stop at max(80% of the time limit, 120 s before it) —
+  * node.py:469-480.
   */
 final class State(root: String, node: String) {
-  private val dir = Paths.get(root, "_state")
-  private val path = dir.resolve(s"$node.json")
+  private val path = Paths.get(root, "_state", s"$node.json")
   private val startedAtMs: Long = System.currentTimeMillis()
 
-  /** In-memory view; persisted on every set (cheap: one small file). */
   private var kv: Map[String, JValue] = load()
   private var newRunRequested: Option[(Boolean, Long)] = None
 
@@ -28,13 +35,8 @@ final class State(root: String, node: String) {
       case _ => Map.empty
     }
 
-  private def persist(): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"$node.json.tmp-${Thread.currentThread.getId}")
-    Files.writeString(tmp, JsonMethods.compact(JsonMethods.render(JObject(kv.toList: _*))))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def persist(): Unit =
+    Catalog.writeAtomic(path, JsonMethods.compact(JsonMethods.render(JObject(kv.toList: _*))))
 
   def setRaw(key: String, value: JValue): Unit = { kv = kv + (key -> value); persist() }
   def getRaw(key: String): Option[JValue] = kv.get(key)
@@ -48,7 +50,7 @@ final class State(root: String, node: String) {
   def delete(key: String): Unit = { kv = kv - key; persist() }
   def reset(): Unit = { kv = Map.empty; persist() }
 
-  /** node.py:465-480: false once the execution nears its time limit. */
+  /** node.py:465-480: false once this run nears its time limit. */
   def shouldContinue(
       limitMs: Long = 10 * 60 * 1000L,
       pctOfLimit: Double = 0.8,
@@ -61,8 +63,8 @@ final class State(root: String, node: String) {
   /** node.py:483-500: ask the scheduler for a follow-up run. */
   def requestNewRun(triggerDownstream: Boolean = true, waitAtleastSeconds: Long = 0): Unit =
     newRunRequested = Some((triggerDownstream, waitAtleastSeconds))
+  /** This run's follow-up request: (triggerDownstream, waitAtleastSeconds). */
   def pendingNewRun: Option[(Boolean, Long)] = newRunRequested
-  def clearNewRun(): Unit = newRunRequested = None
 }
 
 object State {

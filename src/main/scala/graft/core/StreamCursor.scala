@@ -14,6 +14,9 @@ import scala.jdk.CollectionConverters._
   * beginning; `seek(v)` continues strictly after `v`. Progress is keyed
   * by (node, table, ordering) so "a table may have multiple
   * simultaneous streams with different orderings" (node.py:196-198).
+  * A cursor a node opened also persists when its run returns normally
+  * (`NodeContext`, "end-of-execution auto-persists"); a run that throws
+  * persists nothing.
   *
   * Scale: the incremental slice is expressed as a pushdown-friendly
   * `col(orderBy) > offset` filter *before* the scan, so parquet
@@ -102,6 +105,9 @@ final class StreamCursor(
     current.foreach(v => state.set(stateKey, v))
     persisted = current
   }
+
+  /** The end-of-run persist: a no-op after `checkpoint()` or `rollback()`. */
+  private[graft] def persistMoved(): Unit = if (current != persisted) checkpoint()
 
   /** Revert to last checkpoint / start of execution (node.py:60-63). */
   def rollback(): Unit = { current = persisted }

@@ -7,36 +7,45 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, 
 import org.json4s.jackson.JsonMethods
 import graft.core.{Catalog, State, StreamCursor, TableHandle, Template}
 
-/** Execution context handed to code nodes (the Scala equivalent of the
-  * reference's python node: arbitrary user logic over Table/Stream/
-  * State/Parameter — /root/reference/patterns/node/node.py passim).
+/** One node run, code or SQL (the Scala equivalent of the reference's
+  * python node — patterns/node/node.py passim). It holds what the run
+  * touches: one table handle per store, the stream cursors the node
+  * opened and a [[State]] built when the run starts. `commit`,
+  * called when the body returns, flushes the handles, persists each
+  * cursor that moved (node.py:18-81) and hands back the run's
+  * `requestNewRun`; a body that throws commits none of these.
   */
-final class NodeContext(
+final class NodeContext private[graph] (
     val spark: SparkSession,
     val nodeId: String,
     runner: GraphRunner,
     node: FunctionNode) {
 
-  // one handle per store for the run, so the runner can flush what the
-  // node left pending when it returns
   private val handles = mutable.LinkedHashMap.empty[String, TableHandle]
+  private val cursors = mutable.ArrayBuffer.empty[StreamCursor]
+
+  /** This run's State (node.py:417-505). */
+  val state: State = new State(runner.catalog.root, nodeId)
 
   /** Resolve a port name (preferred) or a store name to a Table. */
-  def table(port: String): TableHandle = {
-    val store = node.inputs.get(port)
-      .orElse(node.outputs.get(port))
-      .getOrElse(port)
+  def table(port: String): TableHandle =
+    handle(node.inputs.get(port).orElse(node.outputs.get(port)).getOrElse(port))
+
+  private[graph] def handle(store: String): TableHandle =
     handles.synchronized(handles.getOrElseUpdate(store, runner.tableHandle(store)))
+
+  def stream(port: String, orderBy: Option[String] = None): StreamCursor = {
+    val cursor = StreamCursor.forTable(table(port), state, orderBy)
+    cursors.synchronized(cursors += cursor)
+    cursor
   }
 
-  /** Commit every write the node left pending (node.py:407-414). */
-  private[graph] def flush(): Unit =
+  /** Flush pending writes (node.py:407-414), then cursor positions. */
+  private[graph] def commit(): Option[(Boolean, Long)] = {
     handles.synchronized(handles.values.toList).foreach(_.flush())
-
-  def stream(port: String, orderBy: Option[String] = None): StreamCursor =
-    StreamCursor.forTable(table(port), state, orderBy)
-
-  lazy val state: State = runner.stateFor(nodeId)
+    cursors.synchronized(cursors.toList).foreach(_.persistMoved())
+    state.pendingNewRun
+  }
 
   /** Bound value, else the declared ParamSpec default (MISSING never
     * leaks here — compile rejected the graph if a required parameter
@@ -79,8 +88,11 @@ trait CodeNode {
   * Compile-time validation mirrors the platform's upload errors
   * (/root/reference/patterns/cli/commands/upload.py:76-85): unconnected
   * inputs, unbound parameters, unknown stores, cycles. Execution is
-  * topological; store writes emit create/update/reset signals that
-  * enqueue dependent nodes (node.py:387-397, 483-499).
+  * topological; store writes emit create/update/reset signals
+  * (node.py:387-397, 483-499) that stamp the store on one change clock,
+  * and a node is stale, and runs in the next wave, when an input store
+  * changed after the node last started. Each run goes through one
+  * [[NodeContext]].
   */
 final class GraphRunner(
     val spark: SparkSession,
@@ -98,27 +110,20 @@ final class GraphRunner(
 
   val catalog = new Catalog(warehouse)
   private val RequestKey = "patterns_request_key"
-  private val changedStores = mutable.Set.empty[String]
-  private val states = mutable.Map.empty[String, State]
   // serializes ingest with signal propagation (see appendLocked)
   private val ingestLock = new Object
 
-  // logical clock: ticks once per runNode and once per change signal;
-  // changedAt/ranAt let run() detect nodes whose input store changed
-  // AFTER they last started (a change made while a node of the same
-  // wave runs is stamped after that node's start, whichever thread
-  // started first)
+  // The one change clock. It ticks once per node run start and once per
+  // store change signal. A node is stale when an input store changed
+  // after `seenAt` (the tick at which the node last started, or last had
+  // its inputs muted): a change made while a node of the same wave runs
+  // is stamped after that node's start, whichever thread started first.
   private var clock: Int = 0
   private val changedAt = mutable.Map.empty[String, Int]
-  private val ranAt = mutable.Map.empty[String, Int]
-
-  def stateFor(nodeId: String): State = this.synchronized {
-    states.getOrElseUpdate(nodeId, new State(warehouse, nodeId))
-  }
+  private val seenAt = mutable.Map.empty[String, Int]
 
   def tableHandle(store: String): TableHandle =
     new TableHandle(spark, catalog, store, "rw", onSignal = (t, _) => this.synchronized {
-      changedStores += t
       clock += 1
       changedAt(t) = clock
     })
@@ -281,7 +286,7 @@ final class GraphRunner(
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(many.size, 8))
       try {
         val futs = many.map(id => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = runNode(id)
+          override def call(): Unit = { runNode(id); () }
         }))
         futs.foreach { fut =>
           try fut.get()
@@ -293,54 +298,62 @@ final class GraphRunner(
   private def nodeById(id: String): (FunctionNode, GraphManifest) =
     byId.getOrElse(id, throw new IllegalArgumentException(s"unknown node '$id'"))
 
-  /** Run one node (manual trigger — services/trigger.py:10-22). */
-  def runNode(id: String): Unit = {
-    this.synchronized { clock += 1; ranAt(id) = clock }
+  /** Run one node (manual trigger — services/trigger.py:10-22); returns
+    * the run's `requestNewRun` as (triggerDownstream, waitAtleastSeconds).
+    * With `triggerDownstream = false` (a follow-up requested so,
+    * node.py:483-499) the run's changes count as seen: every node that
+    * was not stale when the run started has its inputs muted.
+    */
+  def runNode(id: String): Option[(Boolean, Long)] = runNode(id, triggerDownstream = true)
+
+  private[graph] def runNode(id: String, triggerDownstream: Boolean): Option[(Boolean, Long)] = {
+    val started = this.synchronized { clock += 1; seenAt(id) = clock; clock }
     val (f, m) = nodeById(id)
-    f.kind match {
-      case "sql" => runSqlNode(id, f, m)
-      case "code" =>
-        val impl = codeNodes(f.nodeFile.get)
+    val request = f.kind match {
+      case "webhook" => None // passive ingest endpoint; nothing to execute
+      case "sql" | "code" =>
         val ctx = new NodeContext(spark, id, this, f)
-        impl.run(ctx)
-        // execution end flushes the node's writes; a node that throws
-        // never gets here, so it commits nothing it left pending
-        ctx.flush()
-      case "webhook" => // passive ingest endpoint; nothing to execute
+        if (f.kind == "sql") runSqlNode(ctx, f, m)
+        else codeNodes(f.nodeFile.get).run(ctx)
+        ctx.commit()
       case other =>
         throw new IllegalStateException(s"node $id of kind '$other' not runnable")
     }
+    if (!triggerDownstream) this.synchronized {
+      topoOrder.filterNot(staleThrough(_, started)).foreach(seenAt(_) = clock)
+    }
+    request
   }
 
   /** SQL node: substitute {{ table }} → temp view, {{ param }} → literal,
     * run, write result as a new version of the output store
     * (SURVEY.md §3.2).
     */
-  private def runSqlNode(id: String, f: FunctionNode, m: GraphManifest): Unit = {
+  private def runSqlNode(ctx: NodeContext, f: FunctionNode, m: GraphManifest): Unit = {
     val sqlText = Files.readString(m.dir.resolve(f.nodeFile.get))
     val tableMap = f.inputs.map { case (port, store) =>
-      val h = tableHandle(store)
-      val view = s"graft_${id.replaceAll("[^A-Za-z0-9_]", "_")}_$port"
-      h.read.createOrReplaceTempView(view)
+      val view = s"graft_${ctx.nodeId.replaceAll("[^A-Za-z0-9_]", "_")}_$port"
+      ctx.handle(store).read.createOrReplaceTempView(view)
       Seq(port -> view, store -> view)
     }.flatten.toMap
     val result = spark.sql(Template.substitute(sqlText, tableMap, f.parameters))
     val out = f.outputs.values.headOption.getOrElse(
-      throw new IllegalArgumentException(s"sql node $id has no output store"))
-    tableHandle(out).replace(result)
+      throw new IllegalArgumentException(s"sql node ${ctx.nodeId} has no output store"))
+    ctx.handle(out).replace(result)
   }
 
   /** Run the whole graph once: dependency waves in order (independent
     * nodes within a wave execute concurrently), then re-run any node
-    * whose input store changed AFTER that node last ran (possible only
-    * for out-of-band writes — e.g. a code node writing to a store it
-    * does not declare as an output, so wave order could not sequence
-    * the consumer after it). Repeats until quiescent or `maxWaves`.
+    * that is stale (an input store changed AFTER that node last started:
+    * possible only for out-of-band writes — e.g. a code node writing to
+    * a store it does not declare as an output, so wave order could not
+    * sequence the consumer after it). Repeats until quiescent or
+    * `maxWaves`; a node still stale then is what the next
+    * `propagateOnce` runs.
     */
   def run(maxWaves: Int = 3): Unit = {
     val errors = validate()
     require(errors.isEmpty, s"graph compile errors:\n${errors.mkString("\n")}")
-    changedStores.clear()
     waveOrder.foreach(runWave)
     var wave = 0
     var stale = staleNodes()
@@ -349,22 +362,23 @@ final class GraphRunner(
       wave += 1
       stale = staleNodes()
     }
-    // Drain consumed change signals: every consumer just ran after its
-    // producers (the stale loop covered out-of-band writes), so keeping
-    // entries would make the next propagateOnce()/tick spuriously
-    // re-run dependents of everything this run wrote. Only stores a
-    // still-stale node (maxWaves exhausted) reads keep their entry.
-    val keep = staleNodes().flatMap(id => nodeById(id)._1.inputs.values).toSet
-    changedStores.filterInPlace(keep.contains)
   }
 
-  /** Nodes holding an input store that changed after their last run. */
-  private def staleNodes(): List[String] =
-    topoOrder.filter { id =>
-      val (f, _) = nodeById(id)
-      f.kind != "webhook" && f.inputs.values.exists(store =>
-        changedAt.getOrElse(store, 0) > ranAt.getOrElse(id, 0))
+  /** The one staleness rule: an input store of `id` last changed after
+    * the node's `seenAt` tick and no later than tick `through`. */
+  private def staleThrough(id: String, through: Int): Boolean = this.synchronized {
+    val (f, _) = nodeById(id)
+    val seen = seenAt.getOrElse(id, 0)
+    f.kind != "webhook" && f.inputs.values.exists { store =>
+      val c = changedAt.getOrElse(store, 0)
+      c > seen && c <= through
     }
+  }
+
+  /** Stale nodes now, in topological order. */
+  private def staleNodes(): List[String] = this.synchronized {
+    topoOrder.filter(staleThrough(_, clock))
+  }
 
   /** Webhook ingest: append JSON-lines micro-batch to the webhook's
     * auto-created same-name table (create.py:177-197; node.py:544-553).
@@ -488,28 +502,16 @@ final class GraphRunner(
     Option(responseLatches.get(requestKey)).foreach(_.complete(h.recordJson(record, RequestKey)))
   }
 
-  private[graph] def changedStoresSnapshot: Set[String] = changedStores.toSet
-  /** Drop pending change signals (requestNewRun(triggerDownstream=false)
-    * suppresses downstream propagation of that run's writes —
-    * node.py:483-499).
+  /** Run the nodes stale when called (one signal wave — G4), in
+    * topological order; returns the node ids that ran. A node this wave
+    * runs after one of its producers sees that producer's changes and
+    * is not stale again for them.
     */
-  private[graph] def suppressChanges(stores: Set[String]): Unit =
-    changedStores --= stores
+  def propagateOnce(): Seq[String] = propagate().map(_._1)
 
-  /** Run dependents of stores changed since the last call (one signal
-    * wave — G4); returns the node ids that ran.
-    */
-  def propagateOnce(): Seq[String] = ingestLock.synchronized {
-    // serialized with ingest: two concurrent signal drains would each
-    // run the same dependents (double processing) or lose a signal
-    // cleared by the other
-    val changed = changedStores.toSet
-    changedStores.clear()
-    val dependents = topoOrder.filter { id =>
-      val (f, _) = nodeById(id)
-      f.kind != "webhook" && f.inputs.values.exists(changed.contains)
-    }
-    dependents.foreach(runNode)
-    dependents
-  }
+  /** [[propagateOnce]], with each run's `requestNewRun`. */
+  private[graph] def propagate(): Seq[(String, Option[(Boolean, Long)])] =
+    // serialized with ingest: a wave's stale set is read once, so two
+    // concurrent waves would each run the same stale nodes
+    ingestLock.synchronized(staleNodes().map(id => id -> runNode(id)))
 }

@@ -57,12 +57,9 @@ object GraphScheduler {
       }
     }.toMap
 
-  def saveLastRuns(path: Path, runs: Map[String, LocalDateTime]): Unit = {
-    Files.createDirectories(path.getParent)
-    Files.write(path, runs.toSeq.sortBy(_._1)
-      .map { case (id, ts) => s"$id\t$ts" }.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  def saveLastRuns(path: Path, runs: Map[String, LocalDateTime]): Unit =
+    graft.core.Catalog.writeAtomic(path, runs.toSeq.sortBy(_._1)
+      .map { case (id, ts) => s"$id\t$ts" }.mkString("", "\n", "\n"))
 }
 
 /** Cron + run-request scheduler loop over a GraphRunner (G2/T9): each
@@ -70,8 +67,10 @@ object GraphScheduler {
   * scheduler's in-memory last-run map (advanced to the tick instant
   * after they ran, as `--due` advances its ledger) and any follow-up
   * runs previously requested via `State.requestNewRun`, then propagates
-  * one signal wave to downstream consumers. Driven by an external clock
-  * so it is testable and embeddable (call `tick` from any timer).
+  * one signal wave to downstream consumers. A follow-up request comes
+  * back from the run that made it, a due run or a propagated one.
+  * Driven by an external clock so it is testable and embeddable (call
+  * `tick` from any timer).
   */
 final class Scheduler(runner: GraphRunner) {
   // follow-up run time + whether that run's writes propagate downstream
@@ -87,30 +86,24 @@ final class Scheduler(runner: GraphRunner) {
     }.toList
     // trigger_downstream=false governs the REQUESTED follow-up run, not
     // the run that requested it (node.py request_new_run): a follow-up
-    // scheduled with false executes, but its writes stay out of this
-    // tick's propagation wave. (A store another due node changed before
-    // this one ran is outside the before/after diff and still
-    // propagates.)
+    // scheduled with false executes, but its changes count as seen by
+    // consumers that had nothing else pending, so this tick's
+    // propagation wave leaves them alone
     val cronDue = GraphScheduler.due(runner.flatNodes, lastRuns.toMap, t)
     // a node that is ALSO cron-due this tick runs on the schedule's
     // authority — the follow-up's no-propagate flag must not mute it
-    val suppressFor =
+    val muted =
       dueFollowUps.filter(id => !followUps(id)._2).toSet -- cronDue
     dueFollowUps.foreach(followUps.remove)
     val due = (cronDue ++ dueFollowUps).distinct
-    due.foreach { id =>
-      val before = runner.changedStoresSnapshot
-      runner.runNode(id)
-      if (suppressFor(id))
-        runner.suppressChanges(runner.changedStoresSnapshot -- before)
-      val st = runner.stateFor(id)
-      st.pendingNewRun.foreach { case (triggerDownstream, waitSecs) =>
+    def follow(id: String, request: Option[(Boolean, Long)]): Unit =
+      request.foreach { case (triggerDownstream, waitSecs) =>
         followUps(id) = (t.plusSeconds(waitSecs), triggerDownstream)
       }
-      st.clearNewRun()
-    }
+    due.foreach(id => follow(id, runner.runNode(id, triggerDownstream = !muted(id))))
     lastRuns ++= cronDue.map(_ -> t)
-    val propagated = if (due.nonEmpty) runner.propagateOnce() else Nil
-    due ++ propagated
+    val propagated = if (due.nonEmpty) runner.propagate() else Nil
+    propagated.foreach { case (id, request) => follow(id, request) }
+    due ++ propagated.map(_._1)
   }
 }

@@ -20,8 +20,9 @@ import java.util.concurrent.{Executors, TimeUnit}
   */
 object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
-    val nThreads = args.headOption.map(_.toInt).getOrElse(8)
-    val rounds = args.lift(1).map(_.toInt).getOrElse(3)
+    val a = new ProbeArgs(args, "ConcurrencyProbe", "threads", "rounds")
+    val nThreads = a.count(0, 8)
+    val rounds = a.count(1, 3)
     val spark = graft.Sessions.local("16").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

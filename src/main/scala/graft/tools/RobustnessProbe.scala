@@ -120,12 +120,10 @@ object RobustnessProbe {
     ("ragged", "RAGGED-embeddings corpus", buildRagged))
 
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("both")
+    val a = new ProbeArgs(args, "RobustnessProbe", "empty|nulls|ragged|both")
+    val mode = a(0, "both")
     val picked = corpora.filter(c => mode == "both" || mode == c._1)
-    if (picked.isEmpty || args.length > 1) {
-      System.err.println("usage: RobustnessProbe [empty|nulls|ragged|both]")
-      sys.exit(2)
-    }
+    if (picked.isEmpty) a.usageExit(s"unknown corpus '$mode'")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.Sessions.local("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -34,7 +34,7 @@ import graft.Measure.{median, timed}
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
-    val replicas = args.headOption.map(_.toInt).getOrElse(10)
+    val replicas = new ProbeArgs(args, "SkewProbe", "replicas").count(0, 10)
     val spark = graft.Sessions.local("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

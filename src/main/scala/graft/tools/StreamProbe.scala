@@ -38,18 +38,14 @@ import graft.core.{Catalog, State, StreamCursor, TableHandle}
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
-    val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val batchDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val runs = if (args.length > 2) args(2).toInt else 3
-    val allPhases = Set("dedup", "curated", "neardup")
-    val phases: Set[String] =
-      if (args.length > 3) args(3).split(",").map(_.trim).toSet
-      else allPhases
-    if (args.length > 4 || !phases.subsetOf(allPhases)) {
-      System.err.println("usage: StreamProbe [corpusDir] [batchDir] [runs] " +
-        "[phases: comma list of dedup,curated,neardup]")
-      sys.exit(2)
-    }
+    val a = new ProbeArgs(args, "StreamProbe", "corpusDir", "batchDir", "runs",
+      "phases: comma list of dedup,curated,neardup")
+    val corpusDir = a(0, "/root/testdata/sf0.1")
+    val batchDir = a(1, "/root/testdata/sf0.01")
+    val runs = a.count(2, 3)
+    val phases = a(3, "dedup,curated,neardup").split(",").map(_.trim).toSet
+    if (!phases.subsetOf(Set("dedup", "curated", "neardup")))
+      a.usageExit(s"unknown phase in '${a(3, "")}'")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

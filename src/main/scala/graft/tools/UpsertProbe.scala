@@ -41,8 +41,9 @@ object UpsertProbe {
   private val Buckets = 256
 
   def main(args: Array[String]): Unit = {
-    val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = if (args.length > 1) args(1).toInt else 3
+    val a = new ProbeArgs(args, "UpsertProbe", "corpusDir", "runs")
+    val corpusDir = a(0, "/root/testdata/sf0.1")
+    val runs = a.count(1, 3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -29,31 +29,34 @@ object KernelProperties extends Properties("graft.functions.kernels") {
     lead <- Gen.oneOf("", " ", "\t")
   } yield lead + words.zip(seps).map { case (w, s) => w + s }.mkString
 
-  // arbitrary strings heavy in quotes/backslashes — the characters the
-  // CLI's hand-built JSON must escape
+  // arbitrary strings heavy in quotes/backslashes and control
+  // characters — what the CLI's JSON files must escape
   private val nastyGen: Gen[String] =
     Gen.listOfN(16, Gen.oneOf("\"", "\\", "\\\"", "\\\\", "a", "b ",
       "{", "}", ":", ",", "καί", "", "\n", "\r", "\t", "\u0001", "\u001f"))
       .map(_.mkString)
 
-  property("Cli jsonEsc leaves no raw control characters in the escaped form") =
+  property("Cli JSON: a secret description round-trips through the secret file and list --json") = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     forAll(nastyGen) { s =>
-      graft.cli.Cli.jsonEsc(s).forall(_ >= ' ')
-    }
-
-  property("Cli jsonEsc/jsonUnesc round-trips arbitrary quote/backslash soup") =
-    forAll(nastyGen) { s =>
-      graft.cli.Cli.jsonUnesc(graft.cli.Cli.jsonEsc(s)) == s
-    }
-
-  property("Cli jsonEsc output never contains an unescaped quote") =
-    forAll(nastyGen) { s =>
-      // every " in the escaped form is preceded by an odd run of \
-      val e = graft.cli.Cli.jsonEsc(s)
-      e.zipWithIndex.forall { case (c, i) =>
-        c != '"' || (i - e.lastIndexWhere(_ != '\\', i - 1)) % 2 == 0
+      val home = java.nio.file.Files.createTempDirectory("graft-cli-home")
+      val prev = sys.props.get("graft.home")
+      sys.props("graft.home") = home.toString
+      try {
+        graft.cli.Cli.run(Array("create", "secret", "--description", s, "S", "v"))
+        val out = new java.io.ByteArrayOutputStream()
+        Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+          graft.cli.Cli.run(Array("list", "secrets", "--json"))
+        }
+        // one record per line: no raw control character, no unescaped quote
+        val lines = out.toString("UTF-8").linesIterator.toList
+        lines.size == 1 && mapper.readTree(lines.head).get("description").asText() == s
+      } finally prev match {
+        case Some(v) => sys.props("graft.home") = v
+        case None => sys.props.remove("graft.home")
       }
     }
+  }
 
   property("stopword kernel == the HOF formulation it replaced (both semantics)") =
     forAll(Gen.listOfN(5, textGen)) { texts =>

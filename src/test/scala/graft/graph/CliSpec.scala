@@ -424,6 +424,36 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("config, meta.json and secret files in the earlier hand-escaped layout still read") {
+    withSandbox { (home, _) =>
+      def captured(args: String*): String = {
+        val buf = new java.io.ByteArrayOutputStream()
+        Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+          run(args: _*)
+        }
+        buf.toString("UTF-8")
+      }
+      // byte for byte what the CLI wrote before it used json4s: lower-
+      // case \u escapes, one space after each colon and comma
+      val org = home.resolve("registry").resolve("acme")
+      Files.createDirectories(org.resolve("old-app"))
+      Files.createDirectories(org.resolve(".secrets"))
+      Files.writeString(home.resolve("config.json"), """{"organization": "acme"}""" + "\n")
+      Files.writeString(org.resolve("old-app").resolve("meta.json"),
+        """{"title": "the \"old\" \\ app""" + "\\u0001" +
+          """", "slug": "old-app", "public": true, "latest": 2, "deprecated": false}""" + "\n")
+      Files.writeString(org.resolve(".secrets").resolve("K.json"),
+        """{"name": "K", "value": "a\nb", "sensitive": false, "description": "tab\there"}""" + "\n")
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val app = mapper.readTree(captured("list", "apps", "--json").trim)
+      assert(app.get("title").asText() == "the \"old\" \\ app\u0001")
+      assert(app.get("latest").asText() == "v2" && app.get("public").asText() == "true")
+      val secret = mapper.readTree(captured("list", "secrets", "--json").trim)
+      assert(secret.get("value").asText() == "a\nb")
+      assert(secret.get("description").asText() == "tab\there")
+    }
+  }
+
   test("edge cases: slug fallback, re-download to nested dir, org scoping") {
     withSandbox { (_, work) =>
       // an app whose graph.yml has NO slug/title falls back to the

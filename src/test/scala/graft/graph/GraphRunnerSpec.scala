@@ -623,4 +623,152 @@ class GraphRunnerSpec extends SparkSpec {
     intercept[IllegalStateException](runner.runNode("writer01"))
     assert(!runner.tableHandle("written").exists)
   }
+
+  test("a muted follow-up leaves a consumer's other pending input to propagate") {
+    import java.time.LocalDateTime
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: chunker.scala
+        |    id: chunker01
+        |    trigger: 0 * * * *
+        |    outputs: {out: src}
+        |  - node_file: consumer.scala
+        |    id: consume01
+        |    inputs: {src: src, side: side}
+        |stores:
+        |  - table: src
+        |  - table: side
+        |""".stripMargin)
+    val chunker = new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        ctx.table("out").appendRecords(Seq(Map("x" -> 1L)))
+        if (ctx.state.get("asked").isEmpty) {
+          ctx.state.set("asked", true)
+          ctx.state.requestNewRun(triggerDownstream = false, waitAtleastSeconds = 60)
+        }
+      }
+    }
+    val consumer = new CodeNode { def run(ctx: NodeContext): Unit = () }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("chunker.scala" -> chunker, "consumer.scala" -> consumer))
+    val sched = new Scheduler(runner)
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 0)) == Seq("chunker01", "consume01"))
+    // a change the muted follow-up did not make is still pending
+    val side = runner.tableHandle("side")
+    side.appendRecords(Seq(Map("y" -> 1L)))
+    side.flush()
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 2)) == Seq("chunker01", "consume01"))
+  }
+
+  test("scheduler: a follow-up requested by a propagated run is scheduled") {
+    import java.time.LocalDateTime
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: producer.scala
+        |    id: producer01
+        |    trigger: 0 * * * *
+        |    outputs: {out: src}
+        |  - node_file: consumer.scala
+        |    id: consume01
+        |    inputs: {src: src}
+        |stores:
+        |  - table: src
+        |""".stripMargin)
+    val producer = new CodeNode {
+      def run(ctx: NodeContext): Unit = ctx.table("out").appendRecords(Seq(Map("x" -> 1L)))
+    }
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val consumer = new CodeNode {
+      def run(ctx: NodeContext): Unit =
+        if (runs.incrementAndGet() == 1) ctx.state.requestNewRun(waitAtleastSeconds = 60)
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("producer.scala" -> producer, "consumer.scala" -> consumer))
+    val sched = new Scheduler(runner)
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 0)) == Seq("producer01", "consume01"))
+    assert(sched.pendingFollowUps.keySet == Set("consume01"))
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 2)) == Seq("consume01"))
+    assert(runs.get == 2 && sched.pendingFollowUps.isEmpty)
+  }
+
+  private def streamGraph(node: CodeNode): (GraphRunner, org.apache.spark.sql.DataFrame => Unit) = {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: r.scala
+        |    id: reader01
+        |    inputs: {events: events}
+        |stores:
+        |  - table: events
+        |""".stripMargin)
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("r.scala" -> node))
+    val events = runner.tableHandle("events").init(strictlyMonotonicOrdering = Some("id"))
+    (runner, df => { events.append(df); events.flush() })
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame) = df.toDF("id")
+
+  test("shouldContinue counts from the start of the current run") {
+    val reads = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    val (runner, _) = streamGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit = reads += ctx.state.shouldContinue(limitMs = 1000L)
+    })
+    runner.runNode("reader01")
+    Thread.sleep(1200L)
+    runner.runNode("reader01")
+    assert(reads == Seq(true, true))
+  }
+
+  test("stream progress persists when a run returns without checkpoint()") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[List[Any]]
+    val (runner, append) = streamGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit =
+        seen += ctx.stream("events").records().map(_("id")).toList
+    })
+    import spark.implicits._
+    append(ids(Seq(1L, 2L).toDF()))
+    runner.runNode("reader01")
+    append(ids(Seq(3L).toDF()))
+    runner.runNode("reader01")
+    assert(seen == Seq(List(1L, 2L), List(3L)))
+  }
+
+  test("a run that consumes and then throws persists no stream position") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[List[Any]]
+    var fail = true
+    val (runner, append) = streamGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        seen += ctx.stream("events").records().map(_("id")).toList
+        if (fail) throw new IllegalStateException("node failed")
+      }
+    })
+    import spark.implicits._
+    append(ids(Seq(1L, 2L).toDF()))
+    intercept[IllegalStateException](runner.runNode("reader01"))
+    fail = false
+    runner.runNode("reader01")
+    assert(seen == Seq(List(1L, 2L), List(1L, 2L)))
+  }
+
+  test("rollback() before returning leaves the last checkpoint in place") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[List[Any]]
+    val (runner, append) = streamGraph(new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        val cur = ctx.stream("events")
+        val it = cur.records()
+        seen += List(it.next()("id"))
+        cur.checkpoint()
+        if (it.hasNext) it.next()
+        cur.rollback()
+      }
+    })
+    import spark.implicits._
+    append(ids(Seq(1L, 2L, 3L).toDF()))
+    runner.runNode("reader01")
+    runner.runNode("reader01")
+    assert(seen == Seq(List(1L), List(2L)))
+  }
 }

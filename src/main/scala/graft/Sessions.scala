@@ -32,6 +32,13 @@ object Sessions {
     * own master/appName first). `shufflePartitions` follows the
     * session's core count — scale-adaptive via AQE coalescing rather
     * than a constant tuned for one machine.
+    *
+    * `file:` is [[graft.core.LocalFs]]: without the native Hadoop
+    * library, the stock local filesystem forks a `chmod` for every file
+    * and directory it creates (26 forks per waited `webhook_respond`
+    * request, counted with JFR); LocalFs sets the same mode bits through
+    * NIO. It is a fixed engine setting: checksums, umask and layout are
+    * stock.
     */
   def configure(b: SparkSession.Builder,
       shufflePartitions: String): SparkSession.Builder =
@@ -40,6 +47,7 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.core.LocalFs].getName)
 
   /** The `local[cpus]` builder every contract main uses. */
   def local(cpus: String): SparkSession.Builder =

@@ -2,7 +2,7 @@ package graft.graph
 
 import java.nio.file.Files
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType, StructType}
 import org.json4s.jackson.JsonMethods
 import graft.core.{Catalog, State, StreamCursor, TableHandle, Template}
@@ -110,7 +110,8 @@ final class GraphRunner(
 
   val catalog = new Catalog(warehouse)
   private val RequestKey = "patterns_request_key"
-  // serializes ingest with signal propagation (see appendLocked)
+  // serializes ingest with signal propagation and scheduled runs (see
+  // appendLocked and serialized)
   private val ingestLock = new Object
 
   // The one change clock. It ticks once per node run start and once per
@@ -396,43 +397,54 @@ final class GraphRunner(
   /** Webhook ingest from in-memory JSON bodies (the HTTP edge's path),
     * stamped with the request key the respond contract is keyed on
     * (node.py:544-553). Bodies that fit the table's recorded schema
-    * ([[bodySchema]]) parse with it: no inference job, and the append
-    * lands in place. Anything else goes through Spark's JSON inference,
-    * as file ingest does, and a new field or type takes the widen path.
+    * become a batch on the driver ([[bodyBatch]]), and the append lands
+    * in place as one driver-written file: no Spark job at all. Anything
+    * else goes through Spark's JSON inference, as file ingest does, and
+    * a new field or type takes the widen path.
     */
   def ingestWebhookJson(name: String, jsonBodies: Seq[String],
       requestKey: String): Unit = {
     import spark.implicits._
-    val reader = bodySchema(name, jsonBodies).fold(inferring)(spark.read.schema(_))
-    appendLocked(name, reader.json(jsonBodies.toDS())
-      .withColumn(RequestKey, org.apache.spark.sql.functions.lit(requestKey)))
+    val batch = bodyBatch(name, jsonBodies).getOrElse(inferring.json(jsonBodies.toDS()))
+    appendLocked(name,
+      batch.withColumn(RequestKey, org.apache.spark.sql.functions.lit(requestKey)))
   }
 
-  /** The webhook table's recorded schema less the request key and the
-    * auto-filled columns, if every body is a JSON object whose fields
-    * are all in it, each value null or the scalar that inference would
-    * type as that field's type; None otherwise (or before the first
-    * ingest).
+  /** The bodies as a local relation typed by the webhook table's
+    * recorded schema less the request key and the auto-filled columns,
+    * if every body is a JSON object whose fields are all in it, each
+    * value null or the scalar that inference would type as that field's
+    * type; None otherwise (or before the first ingest). Each row holds
+    * the values json4s parsed, which are the ones Spark's own JSON
+    * reader gives such a body under that schema.
     */
-  private def bodySchema(name: String, bodies: Seq[String]): Option[StructType] = {
+  private def bodyBatch(name: String, bodies: Seq[String]): Option[DataFrame] = {
     import org.json4s._
     val h = tableHandle(name)
     if (!h.exists) return None
     val m = h.meta
     val auto = Set(RequestKey, TableHandle.BucketCol) ++ m.addCreated ++ m.addMonotonicId
     val s = StructType(h.schema.filterNot(f => auto(f.name)))
-    def fits(t: DataType, v: JValue): Boolean = (t, v) match {
-      case (_, JNull) => true
-      case (LongType, JInt(i)) => i.isValidLong
-      case (DoubleType, JDouble(_)) | (StringType, JString(_)) | (BooleanType, JBool(_)) => true
-      case _ => false
+    def value(t: DataType, v: JValue): Option[Any] = (t, v) match {
+      case (_, JNull) => Some(null)
+      case (LongType, JInt(i)) if i.isValidLong => Some(i.toLong)
+      case (DoubleType, JDouble(d)) => Some(d)
+      case (StringType, JString(x)) => Some(x)
+      case (BooleanType, JBool(b)) => Some(b)
+      case _ => None
     }
-    val conform = bodies.forall(b => scala.util.Try(JsonMethods.parse(b)).toOption.exists {
-      case JObject(fs) => fs.map(_._1).distinct.size == fs.size && fs.forall {
-        case (k, v) => s.find(_.name == k).exists(f => fits(f.dataType, v)) }
-      case _ => false
-    })
-    if (conform) Some(s) else None
+    def row(body: String): Option[Row] = scala.util.Try(JsonMethods.parse(body)).toOption match {
+      case Some(JObject(fs)) if fs.map(_._1).distinct.size == fs.size =>
+        val typed = fs.flatMap { case (k, v) =>
+          s.find(_.name == k).flatMap(f => value(f.dataType, v)).map(k -> _) }.toMap
+        if (typed.size < fs.size) None
+        else Some(Row.fromSeq(s.fieldNames.toSeq.map(typed.getOrElse(_, null))))
+      case _ => None
+    }
+    val rows = bodies.map(row)
+    if (rows.forall(_.isDefined))
+      Some(spark.createDataFrame(java.util.Arrays.asList(rows.flatten: _*), s))
+    else None
   }
 
   /** The one ingest append. Serialized with other ingests and with
@@ -489,7 +501,9 @@ final class GraphRunner(
     * hook's `<name>_responses` table; the platform edge delivers it to
     * the waiting HTTP request, whose latch carries the body
     * `webhookResponse` would read back (rendered on the driver from the
-    * row as committed).
+    * row as committed). A row that fits the table's columns is written
+    * on the driver, so the respond starts no Spark job; a new field or
+    * type rewrites the table into a widened version with one.
     */
   def respondToRequest(webhookName: String, requestKey: String,
       payload: Map[String, Any]): Unit = {
@@ -513,5 +527,11 @@ final class GraphRunner(
   private[graph] def propagate(): Seq[(String, Option[(Boolean, Long)])] =
     // serialized with ingest: a wave's stale set is read once, so two
     // concurrent waves would each run the same stale nodes
-    ingestLock.synchronized(staleNodes().map(id => id -> runNode(id)))
+    serialized(staleNodes().map(id => id -> runNode(id)))
+
+  /** `f` serialized with ingest and propagation, so no two runs of one
+    * node read the same stream slice. The lock is reentrant: a node
+    * body run under it may ingest into a webhook.
+    */
+  private[graph] def serialized[T](f: => T): T = ingestLock.synchronized(f)
 }

@@ -100,10 +100,14 @@ final class Scheduler(runner: GraphRunner) {
       request.foreach { case (triggerDownstream, waitSecs) =>
         followUps(id) = (t.plusSeconds(waitSecs), triggerDownstream)
       }
-    due.foreach(id => follow(id, runner.runNode(id, triggerDownstream = !muted(id))))
-    lastRuns ++= cronDue.map(_ -> t)
-    val propagated = if (due.nonEmpty) runner.propagate() else Nil
-    propagated.foreach { case (id, request) => follow(id, request) }
-    due ++ propagated.map(_._1)
+    // under the runner's ingest lock, as the webhook edge's waves run:
+    // a due run and a propagated run of one node never overlap
+    runner.serialized {
+      due.foreach(id => follow(id, runner.runNode(id, triggerDownstream = !muted(id))))
+      lastRuns ++= cronDue.map(_ -> t)
+      val propagated = if (due.nonEmpty) runner.propagate() else Nil
+      propagated.foreach { case (id, request) => follow(id, request) }
+      due ++ propagated.map(_._1)
+    }
   }
 }

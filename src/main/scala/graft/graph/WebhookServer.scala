@@ -23,9 +23,10 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    it; otherwise responds 202 with the request key.
   *
   * Pure JDK (`com.sun.net.httpserver`) — no added dependencies; binds
-  * 127.0.0.1 only. JSON parsing is Spark's own: a body that fits the
-  * webhook table's recorded schema parses with it, any other with the
-  * inference rules of file ingest (`GraphRunner.ingestWebhookJson`).
+  * 127.0.0.1 only. A body that fits the webhook table's recorded schema
+  * is parsed on the driver into a row of that schema and appended
+  * without a Spark job; any other is parsed by Spark's JSON reader with
+  * the inference rules of file ingest (`GraphRunner.ingestWebhookJson`).
   */
 final class WebhookServer(runner: GraphRunner, port: Int = 0,
     responseTimeoutMs: Long = 10000L) {

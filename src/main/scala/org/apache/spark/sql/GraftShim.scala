@@ -40,6 +40,11 @@ object GraftShim {
       r.copy()(ds.sparkSession, Some(stats), Some(r.constraints)))
   }
 
+  /** The duplicate-column check Spark's file write runs on its output
+    * columns (`InsertIntoHadoopFsRelationCommand`). */
+  def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
+
   /** Drop every CacheManager entry (test isolation helper). */
   def clearAllCache(spark: SparkSession): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

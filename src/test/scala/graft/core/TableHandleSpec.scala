@@ -617,4 +617,169 @@ class TableHandleSpec extends SparkSpec {
       assert(h.recordCount == 2)
     }
   }
+
+  // ---- driver-side writes of local batches ------------------------------
+
+  private val allTypes = org.apache.spark.sql.types.StructType.fromDDL(
+    "l BIGINT, d DOUBLE, s STRING, b BOOLEAN, n STRING, ts TIMESTAMP, dt DATE, " +
+      "dec DECIMAL(12,3), arr ARRAY<BIGINT>")
+
+  private val typedRows: Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.Row
+    Seq(
+      Row(1L, 2.5, "a \"quoted\" é\nline", true, null,
+        java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789"), java.sql.Date.valueOf("2024-03-01"),
+        new java.math.BigDecimal("123.456"), Seq(1L, 2L)),
+      Row(-2L, -1e-7, "", false, "set", null, java.sql.Date.valueOf("1970-01-01"),
+        new java.math.BigDecimal("-0.001"), Seq.empty[Long]),
+      Row(null, null, null, null, null, null, null, null, null))
+  }
+
+  /** A frame whose optimized plan is a local relation, and a frame of
+    * the same rows that only a Spark job can produce. */
+  private def localAndSpread(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) = {
+    import scala.jdk.CollectionConverters._
+    val local = spark.createDataFrame(rows.asJava, schema)
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    (local, spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+  }
+
+  private def readBack(h: TableHandle): Seq[String] =
+    h.read.collect().map(_.toString).toSeq.sorted
+
+  /** The Spark key-value footer entries and the parquet schema of every
+    * data file of the active version. */
+  private def footers(h: TableHandle): Set[(Map[String, String], String)] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    parquetFiles(h).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+      try {
+        val m = r.getFooter.getFileMetaData
+        (m.getKeyValueMetaData.asScala.toMap.filter(_._1.startsWith("org.apache.spark")),
+          m.getSchema.toString)
+      } finally r.close()
+    }.toSet
+  }
+
+  /** Every file under the table's directory, relative to it. */
+  private def tableFiles(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    java.nio.file.Files.walk(r).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(r.relativize(_).toString).toSeq
+  }
+
+  test("a local batch appends without a Spark job, as a Spark-written one reads and records") {
+    val (local, spread) = localAndSpread(typedRows, allTypes)
+    val a = handle(tmpDir("local"))
+    val b = handle(tmpDir("spread"))
+    // the first append creates the version, the second lands in place
+    val (_, jobs) = graft.JobCounter.jobs(spark) {
+      a.append(local); a.flush(); a.append(local); a.flush()
+    }
+    assert(jobs == 0)
+    b.append(spread); b.flush(); b.append(spread); b.flush()
+    assert(readBack(a) == readBack(b))
+    assert(readBack(a).size == 6 && a.recordCount == 6 && b.recordCount == 6)
+    assert(a.meta.versions.map(_.schemaDdl) == b.meta.versions.map(_.schemaDdl))
+    assert(a.schema.toDDL == b.schema.toDDL)
+    assert(parquetFiles(a).size == 2, "one file per local append")
+    val (fa, fb) = (footers(a), footers(b))
+    assert(fa.size == 1 && fa == fb, s"$fa\n$fb")
+    assert(fa.head._1.keySet.contains("org.apache.spark.sql.parquet.row.metadata"))
+  }
+
+  test("a 0-row local batch creates and appends like a Spark-written one, leaving no temp file") {
+    import scala.jdk.CollectionConverters._
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      allTypes)
+    val emptySpread = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], allTypes)
+    val (rootA, rootB) = (tmpDir("local"), tmpDir("spread"))
+    val (a, b) = (handle(rootA), handle(rootB))
+    val (_, jobs) = graft.JobCounter.jobs(spark) {
+      a.append(empty); a.flush()
+      a.append(spark.createDataFrame(typedRows.asJava, allTypes)); a.flush()
+      a.append(empty); a.flush()
+    }
+    assert(jobs == 0)
+    b.append(emptySpread); b.flush()
+    b.append(spark.createDataFrame(spark.sparkContext.parallelize(typedRows, 2), allTypes)); b.flush()
+    b.append(emptySpread); b.flush()
+    assert(readBack(a) == readBack(b) && a.recordCount == 3 && b.recordCount == 3)
+    assert(a.meta.versions.map(_.schemaDdl) == b.meta.versions.map(_.schemaDdl))
+    assert(footers(a) == footers(b))
+    // data files, their checksums and meta.json only: no in-progress
+    // file, no committer directory
+    val files = tableFiles(rootA)
+    assert(files.nonEmpty && files.forall(f =>
+      f == "t/meta.json" || f.matches("""t/v\d+/\.?part-00000-[0-9a-f-]+-c000\.snappy\.parquet(\.crc)?""")),
+      files.mkString(", "))
+  }
+
+  test("upsert, compact and vacuum over driver-written versions keep the model") {
+    import org.apache.spark.sql.Row
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, s STRING")
+    def batch(rows: (Long, String)*) = localAndSpread(rows.map { case (i, v) => Row(i, v) }, schema)._1
+    val root = tmpDir("local")
+    val h = handle(root).init(uniqueOn = Seq("id"))
+    (0L until 4L).foreach { i => h.append(batch(i -> s"v$i")); h.flush() }
+    assert(parquetFiles(h).size == 4)
+    // the upsert's merge reads the driver-written files; its write is a job
+    h.upsert(batch(1L -> "u1", 9L -> "v9")); h.flush()
+    val model = Seq(0L -> "v0", 1L -> "u1", 2L -> "v2", 3L -> "v3", 9L -> "v9")
+    def rows = h.read.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sortBy(_._1)
+    assert(rows == model && h.recordCount == 5)
+    h.append(batch(10L -> "v10")); h.flush()
+    assert(h.compact().isDefined)
+    assert(parquetFiles(h).size == 1)
+    val want = model :+ (10L -> "v10")
+    assert(rows == want && h.recordCount == 6)
+    val dead = h.catalog.vacuum("t")
+    assert(dead.size == 2)
+    assert(rows == want)
+    assert(tableFiles(root).forall(f => !f.contains("inprogress") && !f.contains("_temporary")))
+  }
+
+  test("a local batch honours spark.sql.files.maxRecordsPerFile") {
+    import org.apache.spark.sql.Row
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
+    val (local, spread) = localAndSpread((1L to 5L).map(Row(_)), schema)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try {
+      val a = handle(tmpDir("local"))
+      val (_, jobs) = graft.JobCounter.jobs(spark) { a.append(local); a.flush() }
+      assert(jobs == 0)
+      assert(parquetFiles(a).map(_.getFileName.toString.split("-c").last).sorted ==
+        Seq("000.snappy.parquet", "001.snappy.parquet", "002.snappy.parquet"))
+      val b = handle(tmpDir("spread"))
+      b.append(spread); b.flush()
+      assert(readBack(a) == readBack(b) && a.recordCount == 5)
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
+
+  test("a local batch is refused as a Spark write refuses it: duplicate and unsupported columns") {
+    import org.apache.spark.sql.Row
+    def refused(schema: org.apache.spark.sql.types.StructType, row: Row): Seq[String] = {
+      val (local, spread) = localAndSpread(Seq(row), schema)
+      Seq(local, spread).map { df =>
+        val h = handle(tmpDir("bad"))
+        h.append(df)
+        val e = intercept[org.apache.spark.sql.AnalysisException](h.flush())
+        assert(!h.exists)
+        e.getCondition
+      }
+    }
+    val dup = refused(org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, ID BIGINT"), Row(1L, 2L))
+    assert(dup == Seq("COLUMN_ALREADY_EXISTS", "COLUMN_ALREADY_EXISTS"))
+    val interval = refused(
+      org.apache.spark.sql.types.StructType.fromDDL("i INTERVAL"),
+      Row(new org.apache.spark.unsafe.types.CalendarInterval(0, 1, 0)))
+    assert(interval.size == 2)
+  }
 }

@@ -771,4 +771,81 @@ class GraphRunnerSpec extends SparkSpec {
     runner.runNode("reader01")
     assert(seen == Seq(List(1L), List(2L)))
   }
+
+  test("a scheduled run and a webhook wave of one node never overlap: each record consumed once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: c.scala
+        |    id: consumer01
+        |    trigger: 0 * * * *
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    val consumed = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+    val inBody = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val consumer = new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        ctx.stream("hook", Some("patterns_request_key")).records().foreach(r => consumed.add(r("n")))
+        if (runs.incrementAndGet() == 1) {
+          // the scheduled run holds its slice while the edge ingests and
+          // propagates; the edge releases it, or it moves on after 1.5 s
+          inBody.countDown()
+          release.await(1500, TimeUnit.MILLISECONDS)
+        }
+      }
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("c.scala" -> consumer))
+    runner.ingestWebhookJson("hook", Seq("""{"n": 1}"""), "k1")
+    val edge = new Thread(() => {
+      inBody.await()
+      runner.ingestWebhookJson("hook", Seq("""{"n": 2}"""), "k2")
+      runner.propagateOnce()
+      release.countDown()
+    })
+    edge.start()
+    new Scheduler(runner).tick(java.time.LocalDateTime.of(2026, 1, 1, 9, 0))
+    edge.join(60000L)
+    assert(!edge.isAlive)
+    runner.propagateOnce()
+    assert(consumed.asScala.toSeq == Seq(1L, 2L), "each hook record consumed exactly once")
+    assert(runs.get == 2)
+  }
+
+  test("a scheduled node that ingests into a webhook re-enters the ingest lock") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - node_file: fwd.scala
+        |    id: fwd01
+        |    trigger: 0 * * * *
+        |  - node_file: c.scala
+        |    id: consumer01
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    val consumed = scala.collection.mutable.ArrayBuffer.empty[Any]
+    lazy val runner: GraphRunner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map(
+        "fwd.scala" -> new CodeNode {
+          def run(ctx: NodeContext): Unit = runner.ingestWebhookJson("hook", Seq("""{"n": 7}"""), "k1")
+        },
+        "c.scala" -> new CodeNode {
+          def run(ctx: NodeContext): Unit =
+            ctx.stream("hook", Some("patterns_request_key")).records()
+              .foreach(r => consumed += r("n"))
+        }))
+    val tick = scala.concurrent.Future(new Scheduler(runner).tick(
+      java.time.LocalDateTime.of(2026, 1, 1, 9, 0)))(scala.concurrent.ExecutionContext.global)
+    val ran = scala.concurrent.Await.result(tick, scala.concurrent.duration.Duration(60, "s"))
+    assert(ran == Seq("fwd01", "consumer01"))
+    assert(consumed == Seq(7L))
+  }
 }

@@ -1,8 +1,19 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.Serialization
@@ -183,14 +194,23 @@ final class Catalog(val root: String) {
   /** The one read rule for a version: a parquet scan given its schema
     * (no inference job; partition columns keep their written type) over
     * `dirs`, relative to the version root, which stays the `basePath`.
+    *
+    * One size rule: when the data files under `dirs` total at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (the planner's own
+    * "small enough for one machine" bound; ≤0 = never), they are read
+    * on the driver into a local relation ([[Catalog.readLocal]]): the
+    * same rows, column order and types as the Spark scan, and no Spark
+    * job for a `collect` or a filter/projection of it. Any larger scan
+    * is a Spark file scan, which prunes partitions and row groups.
     */
   def scan(spark: SparkSession, name: String, versionId: String,
       dirs: Seq[String] = Seq("")): DataFrame = {
     val root = versionPath(name, versionId)
     val s = schema(spark, name, versionId)
     if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-    else spark.read.schema(s).option("basePath", root)
-      .parquet(dirs.map(Paths.get(root, _).toString): _*)
+    else Catalog.readLocal(spark, root, dirs, s).getOrElse(
+      spark.read.schema(s).option("basePath", root)
+        .parquet(dirs.map(Paths.get(root, _).toString): _*))
   }
 
   def recordCount(name: String): Long = (for {
@@ -241,6 +261,90 @@ final class Catalog(val root: String) {
 }
 
 object Catalog {
+  /** The rows of a frame already on the driver: its optimized plan is a
+    * local relation (a driver read, a batch built from rows, or a
+    * filter/projection of either), which `collect` returns with no job.
+    */
+  private[graft] def local(df: DataFrame): Option[LocalRelation] =
+    Some(df.queryExecution.optimizedPlan).collect { case r: LocalRelation => r }
+
+  /** `df`'s rows as a driver-side iterator: a local frame's from its
+    * rows (no job; `toLocalIterator` would start one per partition),
+    * any other's one partition at a time.
+    */
+  private[graft] def drain(df: DataFrame): Iterator[Row] =
+    if (local(df).isDefined) df.collect().iterator else df.toLocalIterator().asScala
+
+  /** The data files under `dirs` of `root`, as the file index lists
+    * them (hidden and `_`-prefixed names skipped, as
+    * `HadoopFSUtils.shouldFilterOutPathName` skips them), with their
+    * sizes, sorted by path; None once they pass `limit` bytes or when a
+    * directory is missing (the Spark scan then reports it).
+    */
+  private def smallFiles(root: String, dirs: Seq[String],
+      limit: Long): Option[Seq[(Path, BasicFileAttributes)]] = {
+    val out = ArrayBuffer.empty[(Path, BasicFileAttributes)]
+    var bytes = 0L
+    def walk(p: Path): Boolean = {
+      val s = Files.newDirectoryStream(p)
+      try s.iterator().asScala.toSeq.sorted.forall { c =>
+        if (GraftShim.hiddenPath(c.getFileName.toString)) true
+        else {
+          val a = Files.readAttributes(c, classOf[BasicFileAttributes])
+          if (a.isDirectory) walk(c)
+          else { out += (c -> a); bytes += a.size; bytes <= limit }
+        }
+      } finally s.close()
+    }
+    val dirPaths = dirs.map(Paths.get(root, _))
+    if (dirPaths.forall(Files.isDirectory(_)) && dirPaths.forall(walk)) Some(out.toSeq)
+    else None
+  }
+
+  /** A parquet scan of `dirs` under the version `root`, read on the
+    * driver when its data files total at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold`; None otherwise.
+    *
+    * It reads as the Spark scan given `schema` does: partition columns
+    * and their typed values come from the file index's partition
+    * inference (`GraftShim.partitions`) and follow the data columns;
+    * every file goes through Spark's parquet reader
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`, built once per
+    * scan, row-returning) under the session's conf, and each row is
+    * copied out through an `UnsafeProjection`. The reader needs no task
+    * context and starts no job.
+    */
+  private[graft] def readLocal(spark: SparkSession, root: String, dirs: Seq[String],
+      schema: StructType): Option[DataFrame] = {
+    val conf = spark.sessionState.conf
+    val limit = conf.autoBroadcastJoinThreshold
+    if (limit <= 0) return None
+    smallFiles(root, dirs, limit).map { files =>
+      SQLConf.withExistingConf(conf) {
+        def hadoop(p: Path) = new HPath("file", null, p.toAbsolutePath.toString)
+        val (partSchema, values) = GraftShim.partitions(spark,
+          files.map(f => hadoop(f._1.getParent)).distinct, hadoop(Paths.get(root)), schema)
+        val dataSchema = StructType(schema.filterNot(f =>
+          partSchema.exists(p => conf.resolver(p.name, f.name))))
+        // a file scan's output is nullable at every level
+        val out = TableHandle.normNull(StructType(dataSchema ++ partSchema)).asInstanceOf[StructType]
+        val options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
+        lazy val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+          partSchema, dataSchema, Nil, options, spark.sessionState.newHadoopConfWithOptions(options))
+        val copy = UnsafeProjection.create(out)
+        val rows = files.flatMap { case (f, a) =>
+          val file = PartitionedFile(values.getOrElse(hadoop(f.getParent), InternalRow.empty),
+            SparkPath.fromPath(hadoop(f)), 0L, a.size, Array.empty[String],
+            a.lastModifiedTime.toMillis, a.size)
+          val it = reader(file)
+          try it.map(r => copy(r).copy(): InternalRow).toVector
+          finally it match { case c: java.io.Closeable => c.close(); case _ => }
+        }
+        GraftShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(out), rows))
+      }
+    }
+  }
+
   /** The one atomic file write: a per-thread temp file beside `path`,
     * renamed over it, so a reader sees the old file or the new one. */
   private[graft] def writeAtomic(path: Path, text: String): Unit = {

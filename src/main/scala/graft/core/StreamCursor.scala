@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -21,11 +24,16 @@ import scala.jdk.CollectionConverters._
   * Scale: the incremental slice is expressed as a pushdown-friendly
   * `col(orderBy) > offset` filter *before* the scan, so parquet
   * row-group stats prune old data; the sort only orders the new tail.
-  * `df()` and `batch()` stay distributed (a global sort and an unsorted
-  * slice) for consumers that process the slice as a DataFrame;
-  * `records()` and `consumeRows()` drain it to the driver anyway, so
-  * they read it as one sorted partition: one job, no range-sampling job
-  * and no shuffle ahead of the iterator.
+  * A table within `Catalog.scan`'s size rule is read on the driver, and
+  * so is its slice: `records()`, `consumeRows()` and `batch()` then
+  * sort it or take its bound there and start no job. Over a larger
+  * table `df()` and `batch()` stay distributed (a global sort and an
+  * unsorted slice) for consumers that process the slice as a
+  * DataFrame, and `records()` and `consumeRows()`, which drain it to
+  * the driver anyway, read it as one sorted partition: one job, no
+  * range-sampling job and no shuffle ahead of the iterator. Until files
+  * carry statistics, the slice reads every file of the active version,
+  * so a 1-row slice costs more as the table's history grows.
   */
 final class StreamCursor(
     table: TableHandle,
@@ -63,28 +71,56 @@ final class StreamCursor(
     * while the batch runs wait for the next call: the scan lists its
     * files when the slice is built, and `<= hi` states the same bound
     * in the plan. An empty slice leaves the position where it was
-    * (`hi` is null, and `<= null` keeps no row).
+    * (`hi` is null, and `<= null` keeps no row). A slice read on the
+    * driver takes `hi` from its rows, by Spark's ordering of the
+    * column; any other runs one aggregate job for it.
     */
   def batch(): DataFrame = {
     val slice = unconsumed
-    val hi = slice.agg(max(col(orderBy))).head().get(0)
+    val hi = Catalog.local(slice) match {
+      case Some(rel) =>
+        val i = slice.columns.indexOf(orderBy)
+        val t = rel.output(i).dataType
+        rel.data.filterNot(_.isNullAt(i)).maxOption(ascending(i, t))
+          .map(r => SQLConf.withExistingConf(table.spark.sessionState.conf)(
+            CatalystTypeConverters.convertToScala(r.get(i, t), t))).orNull
+      case None => slice.agg(max(col(orderBy))).head().get(0)
+    }
     if (hi != null) current = Some(String.valueOf(hi))
     slice.filter(col(orderBy) <= lit(hi))
   }
 
-  /** The unconsumed slice in order, as the one partition the driver-side
-    * iterators drain. */
-  private def ordered: DataFrame =
-    unconsumed.coalesce(1).sortWithinPartitions(col(orderBy))
+  /** Spark's ascending order of column `i` (NULLS FIRST; strings by
+    * their UTF-8 bytes, NaN above every number), as a sort compares it. */
+  private def ascending(i: Int, t: DataType): InterpretedOrdering =
+    new InterpretedOrdering(Seq(SortOrder(BoundReference(i, t, nullable = true), Ascending)))
+
+  /** The unconsumed slice in order, drained to the driver, with its
+    * columns. A slice read on the driver is sorted there by
+    * [[ascending]] and collected: no job. Any other is read as one
+    * sorted partition: one job, no range-sampling job and no shuffle
+    * ahead of the iterator.
+    */
+  private def ordered: (Array[String], Iterator[Row]) = {
+    val slice = unconsumed
+    val i = slice.columns.indexOf(orderBy)
+    val rows = Catalog.local(slice) match {
+      case Some(rel) =>
+        val ord = ascending(i, rel.output(i).dataType)
+        GraftShim.ofRows(table.spark, rel.copy(data = rel.data.sortWith(ord.lt)))
+          .collect().iterator
+      case None => slice.coalesce(1).sortWithinPartitions(col(orderBy)).toLocalIterator().asScala
+    }
+    (slice.columns, rows)
+  }
 
   /** One-record-at-a-time consumption; each yielded record advances the
     * in-memory offset (node.py:40-52).
     */
   def records(): Iterator[Map[String, Any]] = {
-    val slice = ordered
-    val cols = slice.columns
+    val (cols, rows) = ordered
     val idx = cols.indexOf(orderBy)
-    slice.toLocalIterator().asScala.map { r: Row =>
+    rows.map { r: Row =>
       current = Some(String.valueOf(r.get(idx)))
       cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap
     }
@@ -92,9 +128,9 @@ final class StreamCursor(
 
   /** Typed consumption helper for Dataset-style processing. */
   def consumeRows(f: Row => Unit): Unit = {
-    val slice = ordered
-    val idx = slice.columns.indexOf(orderBy)
-    slice.toLocalIterator().asScala.foreach { r =>
+    val (cols, rows) = ordered
+    val idx = cols.indexOf(orderBy)
+    rows.foreach { r =>
       current = Some(String.valueOf(r.get(idx)))
       f(r)
     }

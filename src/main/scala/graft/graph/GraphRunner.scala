@@ -463,7 +463,10 @@ final class GraphRunner(
 
   /** Response row for a request key, as a JSON object with the key
     * column stripped (the HTTP edge returns the node's payload, not the
-    * plumbing). None until `respondToRequest` has written it.
+    * plumbing). None until `respondToRequest` has written it. A
+    * responses table within `Catalog.scan`'s size rule is read on the
+    * driver and its hit rendered there by the generator `toJSON` uses:
+    * no Spark job. A larger one is filtered and rendered by one.
     */
   def webhookResponse(webhookName: String, requestKey: String): Option[String] = {
     responseReads.incrementAndGet()
@@ -472,7 +475,10 @@ final class GraphRunner(
     val hits = h.read
       .filter(org.apache.spark.sql.functions.col(RequestKey) === requestKey)
       .drop(RequestKey)
-    hits.toJSON.take(1).headOption
+    graft.core.Catalog.local(hits) match {
+      case Some(rel) => rel.data.headOption.map(graft.core.TableHandle.json(spark, hits.schema, _))
+      case None => hits.toJSON.take(1).headOption
+    }
   }
 
   // In-memory wake-up latches for `?wait=true` HTTP requests, keyed by

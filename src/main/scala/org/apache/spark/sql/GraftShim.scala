@@ -45,6 +45,39 @@ object GraftShim {
   def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
     org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
 
+  /** The partition-column check Spark's file write runs (no complex
+    * type, not every column a partition column). */
+  def validatePartitionColumns(schema: types.StructType, parts: Seq[String],
+      caseSensitive: Boolean): Unit =
+    execution.datasources.PartitioningUtils.validatePartitionColumn(schema, parts, caseSensitive)
+
+  /** The frame over `plan`, as SNIPPETS [3] builds one from a plan. */
+  def ofRows(spark: SparkSession,
+      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The partition columns of the leaf directories `leafDirs` under
+    * `base` and each directory's values, parsed and typed as a file
+    * scan given `schema` types them (the file index's partition
+    * inference, under the session's settings).
+    */
+  def partitions(spark: SparkSession, leafDirs: Seq[org.apache.hadoop.fs.Path],
+      base: org.apache.hadoop.fs.Path, schema: types.StructType)
+      : (types.StructType, Map[org.apache.hadoop.fs.Path, catalyst.InternalRow]) = {
+    val spec = execution.datasources.GraftPartitions.parse(leafDirs, base, schema,
+      spark.sessionState.conf)
+    (spec.partitionColumns, spec.partitions.map(p => p.path -> p.values).toMap)
+  }
+
+  /** Whether the file index skips a file or directory of this name. */
+  def hiddenPath(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `e` with its floats normalized as joins, windows and aggregates
+    * normalize their keys (one NaN, -0.0 as 0.0). */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Drop every CacheManager entry (test isolation helper). */
   def clearAllCache(spark: SparkSession): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

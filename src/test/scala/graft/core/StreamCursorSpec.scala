@@ -150,4 +150,45 @@ class StreamCursorSpec extends SparkSpec {
     s.consumeRows(r => got += r.getAs[Long]("id"))
     assert(got.toList == (5L to 9L).toList)
   }
+
+  test("batch(), consumeRows() and records() over a small table start no job") {
+    val (h, state, _) = fixture()
+    val s = StreamCursor.forTable(h, state)
+    val ((batch, consumed, records), jobs) = graft.JobCounter.jobs(spark) {
+      val b = s.batch().collect().map(_.getLong(0)).sorted.toList
+      s.rollback()
+      val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+      s.consumeRows(r => got += r.getAs[Long]("id"))
+      s.rollback()
+      (b, got.toList, s.records().map(_("id")).toList)
+    }
+    assert(jobs == 0)
+    assert(batch == (1L to 5L).toList && consumed == batch && records == batch)
+    assert(s.position.contains("5"))
+  }
+
+  test("a slice orders strings as Spark does, by UTF-8 bytes with NULL first, on either path") {
+    import spark.implicits._
+    val smile = new String(Character.toChars(0x1F600)) // non-BMP: a surrogate pair in UTF-16
+    val values = Seq("b", "\uFFFD", smile, "a", null, "\u00e9")
+    val (got, jobs) = graft.Parity.same(spark) {
+      val root = tmpDir("order")
+      val h = new TableHandle(spark, new Catalog(root), "t")
+      h.append(values.zipWithIndex.map { case (v, i) => (v, i.toLong) }.toDF("k", "i")); h.flush()
+      val s = new StreamCursor(h, new State(root, "n"), "k")
+      val records = s.records().map(_("k")).toList
+      s.rewind()
+      val batch = s.batch().collect().map(_.getString(0)).toList.sorted
+      val hi = s.position
+      s.seek("a")
+      val consumed = scala.collection.mutable.ArrayBuffer.empty[String]
+      s.consumeRows(r => consumed += r.getAs[String]("k"))
+      (records, batch, hi, consumed.toList)
+    }
+    assert(jobs == 0)
+    // UTF-8 puts U+FFFD (EF BF BD) below the emoji (F0 ..); UTF-16 the reverse
+    assert(got._1 == List(null, "a", "b", "\u00e9", "\uFFFD", smile))
+    assert(got._2 == values.filter(_ != null).sorted && got._3.contains(smile))
+    assert(got._4 == List("b", "\u00e9", "\uFFFD", smile))
+  }
 }

@@ -188,9 +188,10 @@ class TableHandleSpec extends SparkSpec {
     val shared = inodes(v2Dir).toSet intersect inodes(v1Dir).toSet
     assert(shared.size >= 6, s"expected most buckets hardlinked, shared=$shared")
 
-    // reads filtered on the bucket prune partitions (PartitionFilters)
-    val plan = out.where(col(TableHandle.BucketCol) === 3)
-      .queryExecution.executedPlan.toString
+    // a Spark scan filtered on the bucket prunes partitions
+    // (PartitionFilters); a table this small is read on the driver
+    val plan = graft.Parity.sparkPath(spark)(h.read.where(col(TableHandle.BucketCol) === 3)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("PartitionFilters") && plan.contains("_gr_bucket"))
   }
 
@@ -203,8 +204,9 @@ class TableHandleSpec extends SparkSpec {
     val path = h.catalog.activePath("t").get
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "day=2020-01-01")))
-    val plan = h.read.where(col("day") === "2020-01-02")
-      .queryExecution.executedPlan.toString
+    // a Spark scan prunes; a table this small is read on the driver
+    val plan = graft.Parity.sparkPath(spark)(h.read.where(col("day") === "2020-01-02")
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("PartitionFilters"))
     assert(h.read.where(col("day") === "2020-01-02").count() == 2)
   }
@@ -781,5 +783,161 @@ class TableHandleSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType.fromDDL("i INTERVAL"),
       Row(new org.apache.spark.unsafe.types.CalendarInterval(0, 1, 0)))
     assert(interval.size == 2)
+  }
+
+  // ---- reads and merges on the driver (Catalog.scan's size rule) -------
+
+  private def localRows(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) = localAndSpread(rows, schema)._1
+
+  /** The parity case's rows, plus keys 3 to 6 in more partitions. */
+  private val seedRows: Seq[org.apache.spark.sql.Row] = typedRows ++ (3L to 6L).map { i =>
+    org.apache.spark.sql.Row(i, i * 0.5, s"s$i", i % 2 == 0, null,
+      java.sql.Timestamp.valueOf(s"2024-03-0$i 00:00:0$i"), java.sql.Date.valueOf(s"2024-0$i-01"),
+      new java.math.BigDecimal(s"$i.5"), Seq(i))
+  }
+
+  /** An update with NULLs (key 1 keeps its other values), a NULL key, a
+    * moved key (3: other partition values), key 5 twice (its greater
+    * `d` first, so `orderBy d` and last-row pick different rows) and a
+    * new key. */
+  private val batchRows: Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.Row
+    val ts = java.sql.Timestamp.valueOf("2025-01-01 01:02:03.456")
+    Seq(
+      Row(1L, null, "upd1", null, "n1", null, null, null, null),
+      Row(null, 9.0, "nullkey", true, null, ts, null, null, Seq(9L)),
+      Row(3L, 3.5, "moved", false, null, ts, java.sql.Date.valueOf("2025-01-01"),
+        new java.math.BigDecimal("0.001"), Seq.empty[Long]),
+      Row(5L, 2.0, "dupA", true, "a", null, null, null, null),
+      Row(5L, 1.0, "dupB", false, "b", null, null, null, null),
+      Row(7L, 7.0, "new7", true, null, ts, java.sql.Date.valueOf("2025-01-07"),
+        new java.math.BigDecimal("7.000"), Seq(7L)))
+  }
+
+  private val layouts: Seq[(String, TableHandle => TableHandle)] = Seq(
+    "unpartitioned" -> (_.init(uniqueOn = Seq("l"))),
+    "4 hash buckets" -> (_.init(uniqueOn = Seq("l"), hashBuckets = Some(4))),
+    "clustered by d" -> (_.init(uniqueOn = Seq("l"), clusterBy = Seq("d"))),
+    // ASCII values: a JVM whose file-name encoding is not UTF-8 cannot
+    // name a directory after `s`'s é
+    "a string partition with a NULL value" -> (_.init(uniqueOn = Seq("l"), partitionBy = Seq("n"))),
+    "a timestamp partition" -> (_.init(uniqueOn = Seq("l"), partitionBy = Seq("ts"))),
+    "date, boolean and decimal partitions" ->
+      (_.init(uniqueOn = Seq("l"), partitionBy = Seq("dt", "b", "dec"))))
+
+  test("a small table reads on the driver as the Spark scan reads it, every type and layout") {
+    for ((layout, init) <- layouts) {
+      // the jobs of the reads, on the driver path first (a clustered
+      // table's seed write is a Spark job on either path)
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[Long]
+      graft.Parity.same(spark) {
+        val h = init(handle(tmpDir("parity")))
+        h.append(localRows(seedRows, allTypes)); h.flush()
+        h.append(localRows(typedRows.take(1), allTypes)); h.flush()
+        val (got, n) = graft.JobCounter.jobs(spark)((graft.Parity.rows(h.read),
+          graft.Parity.rows(h.read.filter(col("l") > 2).select("s", "ts", "l")),
+          h.readRecords().map(_.toString).toSeq.sorted))
+        jobs += n
+        got
+      }
+      assert(jobs.head == 0, layout)
+    }
+  }
+
+  test("a local batch merges on the driver as the Spark merge does, every type and layout") {
+    for ((layout, init) <- layouts; orderBy <- Seq(Nil, Seq(col("d")))) {
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[Long]
+      graft.Parity.same(spark) {
+        val h = init(handle(tmpDir("parity")))
+        h.append(localRows(seedRows, allTypes)); h.flush()
+        val (got, n) = graft.JobCounter.jobs(spark) {
+          h.upsert(localRows(batchRows, allTypes), orderBy); h.flush()
+          graft.Parity.rows(h.read)
+        }
+        jobs += n
+        assert(h.recordCount == got._2.size, layout)
+        (got, h.recordCount, h.schema.toDDL)
+      }
+      assert(jobs.head == 0, s"$layout, orderBy = $orderBy")
+    }
+  }
+
+  test("driver and Spark merges agree on NULL, -0.0 and NaN keys, deduped with and without orderBy") {
+    import org.apache.spark.sql.Row
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k DOUBLE, v STRING, p STRING")
+    val seed = Seq(Row(0.0, "zero", "a"), Row(Double.NaN, "nan", "b"), Row(1.5, "x", null),
+      Row(null, "nullkey", "a"))
+    // -0.0 and 0.0 are one key, in the batch and against the table
+    val batch = Seq(Row(-0.0, "negzero", "c"), Row(Double.NaN, "nan2", "b"),
+      Row(null, "nullkey2", "a"), Row(0.0, "a-zero", null), Row(2.5, "new", "c"))
+    val dlayouts: Seq[(String, TableHandle => TableHandle)] = Seq(
+      "unpartitioned" -> (_.init(uniqueOn = Seq("k"))),
+      "4 hash buckets" -> (_.init(uniqueOn = Seq("k"), hashBuckets = Some(4))),
+      "partitioned on a non-key column" -> (_.init(uniqueOn = Seq("k"), partitionBy = Seq("p"))))
+    for ((layout, init) <- dlayouts; orderBy <- Seq(Nil, Seq(col("v")))) {
+      val ((rows, _), jobs) = graft.Parity.same(spark) {
+        val h = init(handle(tmpDir("keys")))
+        h.append(localRows(seed, schema)); h.flush()
+        h.upsert(localRows(batch, schema), orderBy); h.flush()
+        (graft.Parity.rows(h.read.select("k", "v", "p")), h.recordCount)
+      }
+      assert(jobs == 0, s"$layout, orderBy = $orderBy")
+      if (layout == "unpartitioned")
+        assert(rows._2 == Seq(
+          "[1.5,x,null]", "[2.5,new,c]", "[NaN,nan2,b]",
+          if (orderBy.isEmpty) "[0.0,a-zero,a]" else "[0.0,negzero,c]",
+          "[null,nullkey,a]", "[null,nullkey2,a]").sorted, s"orderBy = $orderBy")
+    }
+  }
+
+  test("a driver merge writes a clustered table's file in clusterBy order, NULLs first") {
+    val h = handle(tmpDir("cluster")).init(uniqueOn = Seq("l"), clusterBy = Seq("d"))
+    h.append(localRows(seedRows, allTypes)); h.flush()
+    val (_, jobs) = graft.JobCounter.jobs(spark) {
+      h.upsert(localRows(batchRows, allTypes)); h.flush()
+    }
+    assert(jobs == 0)
+    val files = parquetFiles(h)
+    assert(files.size == 1)
+    val d = spark.read.parquet(files.head.toString).select("d").collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Double])).toSeq
+    assert(d.size == 9 && d == d.sorted, d)
+  }
+
+  test("an upsert into a table partitioned on a non-key column scans the others on the driver") {
+    import spark.implicits._
+    def table(): TableHandle = {
+      val h = handle(tmpDir("moved")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
+      h.append((0L until 2000L).map(i => (i, i % 20, s"v$i")).toDF("id", "p", "s")); h.flush()
+      h
+    }
+    // key 7 moves from p=7 to p=3; key 4000 is new
+    val batch = Seq((7L, 3L, "moved"), (4000L, 5L, "new")).toDF("id", "p", "s")
+    val want = (0L until 2000L).map(i => i -> ((i % 20, s"v$i"))).toMap ++
+      Map(7L -> ((3L, "moved")), 4000L -> ((5L, "new")))
+    def rows(h: TableHandle) =
+      h.read.select("id", "p", "s").as[(Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3)))
+    for (local <- Seq(true, false)) {
+      val h = table()
+      val (_, jobs) = graft.JobCounter.jobs(spark) {
+        h.upsert(if (local) batch else batch.repartition(2)); h.flush()
+      }
+      val got = rows(h)
+      assert(got.length == want.size && got.toMap == want && h.recordCount == want.size)
+      info(s"local batch = $local: $jobs Spark jobs")
+      if (local) assert(jobs == 0)
+    }
+  }
+
+  test("readRecords and readChunks drain a small table with no job") {
+    import spark.implicits._
+    val h = handle(tmpDir("tbl"))
+    h.append((1L to 10L).map(i => (i, s"v$i")).toDF("id", "s")); h.flush()
+    val ((records, chunks), jobs) = graft.JobCounter.jobs(spark)(
+      (h.readRecords().toList, h.readChunks(4).map(_.size).toList))
+    assert(jobs == 0)
+    assert(records.map(_("id").asInstanceOf[Long]).sorted == (1L to 10L).toList)
+    assert(chunks == List(4, 4, 2))
   }
 }

@@ -5,6 +5,10 @@ import java.nio.file.attribute.BasicFileAttributes
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -195,13 +199,12 @@ final class Catalog(val root: String) {
     * (no inference job; partition columns keep their written type) over
     * `dirs`, relative to the version root, which stays the `basePath`.
     *
-    * One size rule: when the data files under `dirs` total at most
-    * `spark.sql.autoBroadcastJoinThreshold` bytes (the planner's own
-    * "small enough for one machine" bound; ≤0 = never), they are read
-    * on the driver into a local relation ([[Catalog.readLocal]]): the
-    * same rows, column order and types as the Spark scan, and no Spark
-    * job for a `collect` or a filter/projection of it. Any larger scan
-    * is a Spark file scan, which prunes partitions and row groups.
+    * One size rule: when the data files under `dirs` are few and small
+    * ([[Catalog.readLocal]]'s fixed bounds on files, bytes and footer
+    * rows), they are read on the driver into a local relation: the same
+    * rows, column order and types as the Spark scan, and no Spark job for
+    * a `collect` or a filter/projection of it. Any larger scan is a Spark
+    * file scan, which prunes partitions and row groups.
     */
   def scan(spark: SparkSession, name: String, versionId: String,
       dirs: Seq[String] = Seq("")): DataFrame = {
@@ -275,14 +278,41 @@ object Catalog {
   private[graft] def drain(df: DataFrame): Iterator[Row] =
     if (local(df).isDefined) df.collect().iterator else df.toLocalIterator().asScala
 
+  /** The size rule's bounds. A scan is read on the driver when its data
+    * files number at most `LocalFiles`, total at most `LocalBytes` on
+    * disk and hold at most `LocalRows` rows by their footers. They are
+    * fixed, below the crossovers measured in SCALING.md ("Driver reads
+    * under fixed bounds"): the driver path reads its files one after
+    * another and decodes every row, so from about 50–100 one-row files,
+    * or 20,000–40,000 rows in one file, the Spark scan is as fast or
+    * faster. The row bound also bounds what a scan decodes into the
+    * driver heap, which compressed bytes alone do not. They are not
+    * the session's `spark.sql.autoBroadcastJoinThreshold`: that sizes
+    * joins, and raising it for them must not move large scans here.
+    */
+  private[graft] val LocalFiles = 32
+  private[graft] val LocalBytes = 4L << 20
+  private[graft] val LocalRows = 10000L
+
+  /** The options of every footer read, built once: building them
+    * builds a Hadoop `Configuration`, about 15 ms. */
+  private lazy val footerOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  /** While true on a thread, its scans take the Spark path: how a test
+    * runs one block on both paths and compares them. */
+  private[graft] val sparkOnly = new scala.util.DynamicVariable(false)
+
   /** The data files under `dirs` of `root`, as the file index lists
     * them (hidden and `_`-prefixed names skipped, as
     * `HadoopFSUtils.shouldFilterOutPathName` skips them), with their
-    * sizes, sorted by path; None once they pass `limit` bytes or when a
-    * directory is missing (the Spark scan then reports it).
+    * sizes, sorted by path, when they are within the size rule's bounds;
+    * None once they pass one or when a directory is missing (the Spark
+    * scan then reports it). Footers are read only after the listing
+    * has passed the file and byte bounds, and stop at the row bound.
     */
-  private def smallFiles(root: String, dirs: Seq[String],
-      limit: Long): Option[Seq[(Path, BasicFileAttributes)]] = {
+  private def smallFiles(root: String,
+      dirs: Seq[String]): Option[Seq[(Path, BasicFileAttributes)]] = {
     val out = ArrayBuffer.empty[(Path, BasicFileAttributes)]
     var bytes = 0L
     def walk(p: Path): Boolean = {
@@ -292,18 +322,26 @@ object Catalog {
         else {
           val a = Files.readAttributes(c, classOf[BasicFileAttributes])
           if (a.isDirectory) walk(c)
-          else { out += (c -> a); bytes += a.size; bytes <= limit }
+          else { out += (c -> a); bytes += a.size; bytes <= LocalBytes && out.size <= LocalFiles }
         }
       } finally s.close()
     }
+    def footerRows(p: Path): Long = {
+      val in = new LocalInputFile(p)
+      val s = in.newStream()
+      try ParquetFileReader.readFooter(in, footerOptions, s).getBlocks.asScala.map(_.getRowCount).sum
+      finally s.close()
+    }
     val dirPaths = dirs.map(Paths.get(root, _))
-    if (dirPaths.forall(Files.isDirectory(_)) && dirPaths.forall(walk)) Some(out.toSeq)
+    if (dirPaths.forall(Files.isDirectory(_)) && dirPaths.forall(walk) &&
+        out.iterator.map(f => footerRows(f._1)).scanLeft(0L)(_ + _).forall(_ <= LocalRows))
+      Some(out.toSeq)
     else None
   }
 
   /** A parquet scan of `dirs` under the version `root`, read on the
-    * driver when its data files total at most the session's
-    * `spark.sql.autoBroadcastJoinThreshold`; None otherwise.
+    * driver when its data files are within the size rule's bounds (and
+    * the thread is not [[sparkOnly]]); None otherwise.
     *
     * It reads as the Spark scan given `schema` does: partition columns
     * and their typed values come from the file index's partition
@@ -316,10 +354,9 @@ object Catalog {
     */
   private[graft] def readLocal(spark: SparkSession, root: String, dirs: Seq[String],
       schema: StructType): Option[DataFrame] = {
+    if (sparkOnly.value) return None
     val conf = spark.sessionState.conf
-    val limit = conf.autoBroadcastJoinThreshold
-    if (limit <= 0) return None
-    smallFiles(root, dirs, limit).map { files =>
+    smallFiles(root, dirs).map { files =>
       SQLConf.withExistingConf(conf) {
         def hadoop(p: Path) = new HPath("file", null, p.toAbsolutePath.toString)
         val (partSchema, values) = GraftShim.partitions(spark,

@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, GraftShim, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -80,8 +79,9 @@ final class StreamCursor(
     val hi = Catalog.local(slice) match {
       case Some(rel) =>
         val i = slice.columns.indexOf(orderBy)
-        val t = rel.output(i).dataType
-        rel.data.filterNot(_.isNullAt(i)).maxOption(ascending(i, t))
+        val types = rel.output.map(_.dataType)
+        val t = types(i)
+        rel.data.filterNot(_.isNullAt(i)).maxOption(TableHandle.ascending(Seq(i), types))
           .map(r => SQLConf.withExistingConf(table.spark.sessionState.conf)(
             CatalystTypeConverters.convertToScala(r.get(i, t), t))).orNull
       case None => slice.agg(max(col(orderBy))).head().get(0)
@@ -90,14 +90,9 @@ final class StreamCursor(
     slice.filter(col(orderBy) <= lit(hi))
   }
 
-  /** Spark's ascending order of column `i` (NULLS FIRST; strings by
-    * their UTF-8 bytes, NaN above every number), as a sort compares it. */
-  private def ascending(i: Int, t: DataType): InterpretedOrdering =
-    new InterpretedOrdering(Seq(SortOrder(BoundReference(i, t, nullable = true), Ascending)))
-
   /** The unconsumed slice in order, drained to the driver, with its
     * columns. A slice read on the driver is sorted there by
-    * [[ascending]] and collected: no job. Any other is read as one
+    * `TableHandle.ascending` and collected: no job. Any other is read as one
     * sorted partition: one job, no range-sampling job and no shuffle
     * ahead of the iterator.
     */
@@ -106,7 +101,7 @@ final class StreamCursor(
     val i = slice.columns.indexOf(orderBy)
     val rows = Catalog.local(slice) match {
       case Some(rel) =>
-        val ord = ascending(i, rel.output(i).dataType)
+        val ord = TableHandle.ascending(Seq(i), rel.output.map(_.dataType))
         GraftShim.ofRows(table.spark, rel.copy(data = rel.data.sortWith(ord.lt)))
           .collect().iterator
       case None => slice.coalesce(1).sortWithinPartitions(col(orderBy)).toLocalIterator().asScala

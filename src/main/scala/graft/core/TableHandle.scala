@@ -20,8 +20,8 @@ import scala.collection.mutable.ArrayBuffer
   * Scale notes: every read of a version is one parquet scan given the
   * schema the catalog recorded when the version was committed
   * (`Catalog.scan`: no schema-inference job, partition columns keep
-  * their written type). One size rule splits it: a scan whose files
-  * total at most `spark.sql.autoBroadcastJoinThreshold` is read on the
+  * their written type). One size rule splits it: a scan of a few small
+  * files (fixed bounds on files, bytes and rows) is read on the
   * driver into a local relation, so collecting it, a filter or
   * projection of it, `readRecords` and a stream slice start no job; a
   * larger one is a Spark scan with pushdown and pruning. Upsert is a
@@ -462,9 +462,7 @@ final class TableHandle(
           onDriver match {
             case Some((out, rows, added)) =>
               val sorted = m.clusterBy.filter(_.forall(out.fieldNames.contains)).fold(rows) { cs =>
-                val ord = new InterpretedOrdering(cs.map(c => SortOrder(
-                  BoundReference(out.fieldIndex(c), out(c).dataType, nullable = true), Ascending)))
-                rows.sortWith(ord.lt)
+                rows.sortWith(ascending(cs.map(out.fieldIndex), out.map(_.dataType)).lt)
               }
               commitWith(out, base, link) { path =>
                 writeLocal(spark, LocalRelation(DataTypeUtils.toAttributes(out), sorted),
@@ -538,8 +536,7 @@ final class TableHandle(
         orderBy.zipWithIndex.map { case (c, j) => c.as(s"_gr_o$j") })
     } yield {
       val types = i.output.map(_.dataType)
-      val byOrder = new InterpretedOrdering((n + keys.size until i.output.size).map(j =>
-        SortOrder(BoundReference(j, types(j), nullable = true), Ascending)))
+      val byOrder = ascending(n + keys.size until types.size, types)
       val group = keyOf(n until n + keys.size, types)
       val winners = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, InternalRow]
       i.data.foreach { r =>
@@ -862,6 +859,13 @@ object TableHandle {
     gen.flush()
     writer.toString
   }
+
+  /** Spark's ascending order of rows by the columns at `ordinals` of a
+    * row of `types`, as a sort compares them: NULLS FIRST, strings by
+    * their UTF-8 bytes, NaN above every number. */
+  private[graft] def ascending(ordinals: Seq[Int], types: Seq[DataType]): InterpretedOrdering =
+    new InterpretedOrdering(ordinals.map(j =>
+      SortOrder(BoundReference(j, types(j), nullable = true), Ascending)))
 
   /** Each row's key at `ordinals`, as a join, a window or an aggregate
     * compares keys: floats normalized (`NormalizeFloatingNumbers`: one

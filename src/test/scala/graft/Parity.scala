@@ -5,19 +5,13 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.Assertions.assert
 
 /** The driver path and the Spark path of `Catalog.scan`'s size rule,
-  * compared. The Spark path is the session with
-  * `spark.sql.autoBroadcastJoinThreshold` at -1, so no scan qualifies
-  * for the driver; the setting is restored after.
+  * compared. The Spark path is `body` run with `Catalog.sparkOnly` set
+  * on the calling thread, so no scan it starts there is read on the
+  * driver; the session's settings are not touched.
   */
 object Parity {
-  private val key = "spark.sql.autoBroadcastJoinThreshold"
-
   /** `body` run on the Spark path. */
-  def sparkPath[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def sparkPath[T](body: => T): T = graft.core.Catalog.sparkOnly.withValue(true)(body)
 
   /** `body` run as the session is, then again on the Spark path; asserts
     * the two values are equal and returns the first with the Spark jobs
@@ -25,7 +19,7 @@ object Parity {
     */
   def same[T](spark: SparkSession)(body: => T): (T, Long) = {
     val (driver, jobs) = JobCounter.jobs(spark)(body)
-    val onSpark = sparkPath(spark)(body)
+    val onSpark = sparkPath(body)
     assert(driver == onSpark, s"\ndriver path: $driver\nSpark path:  $onSpark")
     (driver, jobs)
   }

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkSpec
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 class CatalogSpec extends SparkSpec {
 
@@ -84,5 +85,36 @@ class CatalogSpec extends SparkSpec {
     h.upsert(Seq((3L, "c")).toDF("id", "s")); h.flush()
     assert(h.meta.versions.last.schemaDdl.contains("id BIGINT,s STRING"))
     assert(h.read.count() == 3 && h.recordCount == 3)
+  }
+
+  test("a scan is read on the driver only within the size rule's files, bytes and rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    def local(h: TableHandle) = Catalog.local(h.read).isDefined
+    def bytes(h: TableHandle) = {
+      val p = java.nio.file.Paths.get(h.catalog.activePath("t").get)
+      java.nio.file.Files.walk(p).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).map(java.nio.file.Files.size(_)).sum
+    }
+    // one driver-written file per append
+    val files = new TableHandle(spark, new Catalog(tmpDir("cat")), "t")
+    (1 to Catalog.LocalFiles).foreach { i => files.append(Seq(i.toLong).toDF("id")); files.flush() }
+    assert(local(files))
+    files.append(Seq(0L).toDF("id")); files.flush()
+    assert(!local(files) && files.read.count() == Catalog.LocalFiles + 1)
+    // one file written by one task
+    def oneFile(rows: Long, v: Column) = {
+      val h = new TableHandle(spark, new Catalog(tmpDir("cat")), "t")
+      h.append(spark.range(0, rows, 1, 1).select(col("id"), v.as("v"))); h.flush()
+      h
+    }
+    assert(local(oneFile(Catalog.LocalRows, lit("x"))))
+    val rows = oneFile(Catalog.LocalRows + 1, lit("x"))
+    assert(bytes(rows) < Catalog.LocalBytes && !local(rows))
+    // few rows of 4 KiB of hex each: the bytes bound
+    val wide = oneFile(1200, expr("concat_ws('', transform(sequence(1, 64), " +
+      "i -> sha2(concat(cast(id AS STRING), '-', cast(i AS STRING)), 256)))"))
+    assert(bytes(wide) > Catalog.LocalBytes && !local(wide) && wide.read.count() == 1200)
   }
 }

@@ -190,7 +190,7 @@ class TableHandleSpec extends SparkSpec {
 
     // a Spark scan filtered on the bucket prunes partitions
     // (PartitionFilters); a table this small is read on the driver
-    val plan = graft.Parity.sparkPath(spark)(h.read.where(col(TableHandle.BucketCol) === 3)
+    val plan = graft.Parity.sparkPath(h.read.where(col(TableHandle.BucketCol) === 3)
       .queryExecution.executedPlan.toString)
     assert(plan.contains("PartitionFilters") && plan.contains("_gr_bucket"))
   }
@@ -205,7 +205,7 @@ class TableHandleSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "day=2020-01-01")))
     // a Spark scan prunes; a table this small is read on the driver
-    val plan = graft.Parity.sparkPath(spark)(h.read.where(col("day") === "2020-01-02")
+    val plan = graft.Parity.sparkPath(h.read.where(col("day") === "2020-01-02")
       .queryExecution.executedPlan.toString)
     assert(plan.contains("PartitionFilters"))
     assert(h.read.where(col("day") === "2020-01-02").count() == 2)

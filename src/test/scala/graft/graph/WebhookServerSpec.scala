@@ -324,7 +324,7 @@ class WebhookServerSpec extends SparkSpec {
         // Spark path's `read.drop(key).toJSON` gives the same bytes
         val (read, jobs) = JobCounter.jobs(spark)(runner.webhookResponse("hook", keys.get(i.toLong)))
         assert(jobs == 0 && Some(r.body()) == read, s"payload $i")
-        assert(read == graft.Parity.sparkPath(spark)(
+        assert(read == graft.Parity.sparkPath(
           runner.webhookResponse("hook", keys.get(i.toLong))), s"payload $i")
       }
       val resp = runner.tableHandle("hook_responses")

@@ -8,7 +8,7 @@ import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.core.Catalog
 import graft.graph.{GraphConfigEditor, GraphDiff, GraphManifest, GraphRunner,
-  GraphScheduler, Packaging}
+  GraphScheduler, Packaging, Scheduler}
 
 /** The devkit command-line surface
   * (/root/reference/patterns/cli/main.py:63-91 wires config / create /
@@ -546,12 +546,15 @@ object Cli {
     }
   }
 
-  /** The `--due` poll: run every cron-due node, subgraph and component
-    * nodes included (catch-up rule, GraphScheduler scaladoc), and
-    * advance the last-run ledger to the poll instant. Exposed with an
-    * explicit `now` so specs drive it with an injected clock; `--due
-    * now` uses the wall clock. A poll with nothing due starts no Spark
-    * session.
+  /** The `--due` poll: one [[Scheduler]] tick over the app's last-run
+    * ledger runs every cron-due node, subgraph and component nodes
+    * included (catch-up rule, GraphScheduler scaladoc), and their
+    * downstream consumers, and advances the ledger to the poll instant.
+    * Exposed with an explicit `now` so specs drive it with an injected
+    * clock; `--due now` uses the wall clock. A poll with nothing due
+    * starts no Spark session. Follow-ups the runs request are recorded,
+    * but the poll exits before they come due: persisting them waits
+    * for a durable run log (ROADMAP direction 2).
     */
   private def triggerDue(a: Args, at: String): Unit = {
     val dir =
@@ -568,12 +571,13 @@ object Cli {
     val due = GraphScheduler.due(manifest.flatNodes(resolver), lastRuns, now)
     if (due.isEmpty) { println("No nodes due."); return }
     withRunner(dir, manifest, "graft-trigger-due", resolver) { runner =>
-      due.foreach(runner.runNode)
+      val scheduler = new Scheduler(runner, lastRuns)
+      val ran = scheduler.tick(now)
       // ledger advances to the POLL instant (not each node's cron
       // minute): nextAfter(now) is the next real firing either way,
-      // and a crash between runs re-runs at most this poll's nodes
-      GraphScheduler.saveLastRuns(ledger, lastRuns ++ due.map(_ -> now))
-      println(s"Triggered ${due.size} due node(s): ${due.mkString(", ")}")
+      // and a crash mid-poll re-runs at most this poll's nodes
+      GraphScheduler.saveLastRuns(ledger, scheduler.lastRuns)
+      println(s"Triggered ${due.size} due node(s), ran: ${ran.mkString(", ")}")
     }
   }
 

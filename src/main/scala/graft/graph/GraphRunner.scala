@@ -1,6 +1,7 @@
 package graft.graph
 
 import java.nio.file.Files
+import java.time.LocalDateTime
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType, StructType}
@@ -92,7 +93,8 @@ trait CodeNode {
   * (node.py:387-397, 483-499) that stamp the store on one change clock,
   * and a node is stale, and runs in the next wave, when an input store
   * changed after the node last started. Each run goes through one
-  * [[NodeContext]].
+  * [[NodeContext]] and keeps the follow-up it requests until a
+  * [[drain]] runs it.
   */
 final class GraphRunner(
     val spark: SparkSession,
@@ -110,8 +112,7 @@ final class GraphRunner(
 
   val catalog = new Catalog(warehouse)
   private val RequestKey = "patterns_request_key"
-  // serializes ingest with signal propagation and scheduled runs (see
-  // appendLocked and serialized)
+  // serializes ingest with drains (see appendLocked and drain)
   private val ingestLock = new Object
 
   // The one change clock. It ticks once per node run start and once per
@@ -122,6 +123,12 @@ final class GraphRunner(
   private var clock: Int = 0
   private val changedAt = mutable.Map.empty[String, Int]
   private val seenAt = mutable.Map.empty[String, Int]
+  // Requested follow-up runs by node id: not-before time, triggerDownstream.
+  private val followUps = mutable.Map.empty[String, (LocalDateTime, Boolean)]
+
+  /** Follow-up runs requested and not yet started, with their not-before times. */
+  def pendingFollowUps: Map[String, LocalDateTime] =
+    this.synchronized(followUps.view.mapValues(_._1).toMap)
 
   def tableHandle(store: String): TableHandle =
     new TableHandle(spark, catalog, store, "rw", onSignal = (t, _) => this.synchronized {
@@ -281,13 +288,13 @@ final class GraphRunner(
     * from one session fan out across the scheduler). Failures rethrow
     * the original cause after the wave's threads wind down.
     */
-  private def runWave(ids: List[String]): Unit = ids match {
-    case single :: Nil => runNode(single)
+  private def runWave(ids: List[String], now: LocalDateTime): Unit = ids match {
+    case single :: Nil => runNode(single, now)
     case many =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(many.size, 8))
       try {
         val futs = many.map(id => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = { runNode(id); () }
+          override def call(): Unit = runNode(id, now)
         }))
         futs.foreach { fut =>
           try fut.get()
@@ -299,15 +306,16 @@ final class GraphRunner(
   private def nodeById(id: String): (FunctionNode, GraphManifest) =
     byId.getOrElse(id, throw new IllegalArgumentException(s"unknown node '$id'"))
 
-  /** Run one node (manual trigger — services/trigger.py:10-22); returns
-    * the run's `requestNewRun` as (triggerDownstream, waitAtleastSeconds).
-    * With `triggerDownstream = false` (a follow-up requested so,
-    * node.py:483-499) the run's changes count as seen: every node that
-    * was not stale when the run started has its inputs muted.
-    */
-  def runNode(id: String): Option[(Boolean, Long)] = runNode(id, triggerDownstream = true)
+  /** Run one node now (manual trigger — services/trigger.py:10-22). */
+  def runNode(id: String): Unit = runNode(id, LocalDateTime.now())
 
-  private[graph] def runNode(id: String, triggerDownstream: Boolean): Option[(Boolean, Long)] = {
+  /** Run one node and keep the follow-up it requests (node.py:483-499),
+    * due its wait after `now`; a later request replaces an earlier one.
+    * With `triggerDownstream = false` (a follow-up requested so) the
+    * run's changes count as seen: every node that was not stale when
+    * the run started has its inputs muted.
+    */
+  private def runNode(id: String, now: LocalDateTime, triggerDownstream: Boolean = true): Unit = {
     val started = this.synchronized { clock += 1; seenAt(id) = clock; clock }
     val (f, m) = nodeById(id)
     val request = f.kind match {
@@ -320,10 +328,12 @@ final class GraphRunner(
       case other =>
         throw new IllegalStateException(s"node $id of kind '$other' not runnable")
     }
-    if (!triggerDownstream) this.synchronized {
-      topoOrder.filterNot(staleThrough(_, started)).foreach(seenAt(_) = clock)
+    this.synchronized {
+      if (!triggerDownstream)
+        topoOrder.filterNot(staleThrough(_, started)).foreach(seenAt(_) = clock)
+      request.foreach { case (downstream, waitSecs) =>
+        followUps(id) = (now.plusSeconds(waitSecs), downstream) }
     }
-    request
   }
 
   /** SQL node: substitute {{ table }} → temp view, {{ param }} → literal,
@@ -344,26 +354,38 @@ final class GraphRunner(
   }
 
   /** Run the whole graph once: dependency waves in order (independent
-    * nodes within a wave execute concurrently), then re-run any node
-    * that is stale (an input store changed AFTER that node last started:
-    * possible only for out-of-band writes — e.g. a code node writing to
-    * a store it does not declare as an output, so wave order could not
-    * sequence the consumer after it). Repeats until quiescent or
-    * `maxWaves`; a node still stale then is what the next
-    * `propagateOnce` runs.
+    * nodes within a wave execute concurrently), then a [[drain]], whose
+    * stale rounds re-run a consumer of an out-of-band write (a store a
+    * code node writes but does not declare, so waves cannot order it).
     */
-  def run(maxWaves: Int = 3): Unit = {
+  def run(): Unit = {
     val errors = validate()
     require(errors.isEmpty, s"graph compile errors:\n${errors.mkString("\n")}")
-    waveOrder.foreach(runWave)
-    var wave = 0
-    var stale = staleNodes()
-    while (stale.nonEmpty && wave < maxWaves) {
-      stale.foreach(runNode)
-      wave += 1
-      stale = staleNodes()
-    }
+    val now = LocalDateTime.now()
+    waveOrder.foreach(runWave(_, now))
+    drain(now)
   }
+
+  /** The one run loop; returns the ids that ran: the cron-`due` nodes,
+    * the follow-ups due at `now`, then up to three rounds of stale nodes,
+    * each in topological order. A follow-up leaves the queue when its run
+    * starts, muted if so requested unless its node is also cron-due.
+    * Under the ingest lock, so no two runs of one node read the same
+    * stream slice; it is reentrant, so a node body may ingest.
+    */
+  def drain(now: LocalDateTime, due: Seq[String] = Nil): Seq[String] =
+    ingestLock.synchronized {
+      def dueFollowUp(id: String) =
+        this.synchronized(followUps.get(id).filterNot(_._1.isAfter(now)))
+      val queued = (due ++ topoOrder.filter(dueFollowUp(_).isDefined)).distinct
+      queued.foreach { id =>
+        val followUp = this.synchronized(dueFollowUp(id).flatMap(_ => followUps.remove(id)))
+        runNode(id, now, triggerDownstream = due.contains(id) || followUp.forall(_._2))
+      }
+      // lazy: each round reads staleness after the one before has run
+      val rounds = Iterator.continually(staleNodes()).take(3).takeWhile(_.nonEmpty)
+      queued ++ rounds.flatMap { stale => stale.foreach(runNode(_, now)); stale }.toList
+    }
 
   /** The one staleness rule: an input store of `id` last changed after
     * the node's `seenAt` tick and no later than tick `through`. */
@@ -403,11 +425,30 @@ final class GraphRunner(
     * a new field or type takes the widen path.
     */
   def ingestWebhookJson(name: String, jsonBodies: Seq[String],
-      requestKey: String): Unit = {
+      requestKey: String): Unit =
+    ingest(name, jsonBodies, () => requestKey)
+
+  /** One HTTP request's body under a fresh key, returned. Keys are minted
+    * under the ingest lock, so they commit in order and a responder that
+    * streams by request key passes none over. A waited request's latch
+    * is registered before the append, and dropped if the append throws.
+    */
+  private[graph] def ingestRequest(name: String, body: String, waited: Boolean): String =
+    ingest(name, Seq(body), () => {
+      val key = f"req-${requests.incrementAndGet()}%08d"
+      if (waited) responseLatch(key)
+      key })
+  private val requests = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private def ingest(name: String, jsonBodies: Seq[String], mintKey: () => String): String = {
     import spark.implicits._
     val batch = bodyBatch(name, jsonBodies).getOrElse(inferring.json(jsonBodies.toDS()))
-    appendLocked(name,
-      batch.withColumn(RequestKey, org.apache.spark.sql.functions.lit(requestKey)))
+    ingestLock.synchronized {
+      val key = mintKey()
+      try appendLocked(name, batch.withColumn(RequestKey, org.apache.spark.sql.functions.lit(key)))
+      catch { case e: Throwable => dropResponseLatch(key); throw e }
+      key
+    }
   }
 
   /** The bodies as a local relation typed by the webhook table's
@@ -448,7 +489,7 @@ final class GraphRunner(
   }
 
   /** The one ingest append. Serialized with other ingests and with
-    * propagation: concurrent FIRST writes would race version creation
+    * drains: concurrent FIRST writes would race version creation
     * (two newVersion/setActive pairs, last one wins and the other's rows
     * land in a non-active version). JSON parsing happens before the lock
     * and response waits stay concurrent — that is what the server pool
@@ -482,8 +523,8 @@ final class GraphRunner(
   }
 
   // In-memory wake-up latches for `?wait=true` HTTP requests, keyed by
-  // request key. The WAITER registers the latch (before ingesting, so a
-  // responder running inline can never complete-before-register), and
+  // request key. The waiter's ingest registers the latch (before the
+  // append, so a responder can never complete-before-register), and
   // respondToRequest completes it with the response body if one is
   // present — a waiting edge then answers from the latch, with no table
   // read, instead of launching a parquet-scan Spark job every 50 ms for
@@ -501,6 +542,9 @@ final class GraphRunner(
 
   private[graph] def dropResponseLatch(requestKey: String): Unit =
     responseLatches.remove(requestKey)
+
+  /** Latches registered and not yet dropped (spec: 0 once every request is answered). */
+  private[graph] def responseLatchCount: Int = responseLatches.size
 
   /** respond_to_request (node.py:544-553): reply to a webhook request by
     * writing the payload row keyed by `patterns_request_key` into the
@@ -521,23 +565,4 @@ final class GraphRunner(
     // latches, so completing an absent key is a no-op, not a leak
     Option(responseLatches.get(requestKey)).foreach(_.complete(h.recordJson(record, RequestKey)))
   }
-
-  /** Run the nodes stale when called (one signal wave — G4), in
-    * topological order; returns the node ids that ran. A node this wave
-    * runs after one of its producers sees that producer's changes and
-    * is not stale again for them.
-    */
-  def propagateOnce(): Seq[String] = propagate().map(_._1)
-
-  /** [[propagateOnce]], with each run's `requestNewRun`. */
-  private[graph] def propagate(): Seq[(String, Option[(Boolean, Long)])] =
-    // serialized with ingest: a wave's stale set is read once, so two
-    // concurrent waves would each run the same stale nodes
-    serialized(staleNodes().map(id => id -> runNode(id)))
-
-  /** `f` serialized with ingest and propagation, so no two runs of one
-    * node read the same stream slice. The lock is reentrant: a node
-    * body run under it may ingest into a webhook.
-    */
-  private[graph] def serialized[T](f: => T): T = ingestLock.synchronized(f)
 }

@@ -2,7 +2,6 @@ package graft.graph
 
 import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** G2 runtime: the scheduling decision behind graph.yml `trigger:`
@@ -18,11 +17,12 @@ import scala.jdk.CollectionConverters._
   * so a poll gap longer than the cron period runs the node exactly
   * once (catch-up), never zero or N times, and a poll more frequent
   * than the period never double-fires. A node with no recorded run is
-  * immediately due (first-poll catch-up). This is the only cron rule:
-  * `graft trigger --due` polls it against its ledger file and
-  * [[Scheduler]] against an in-memory map, both over the expanded
-  * nodes ([[GraphManifest.flatNodes]]), so triggers inside subgraphs
-  * and components fire too.
+  * immediately due (first-poll catch-up). This is the only cron rule.
+  * [[Scheduler]] polls it over the expanded nodes
+  * ([[GraphManifest.flatNodes]]), so triggers inside subgraphs and
+  * components fire too, and hands the due nodes to the runner's one
+  * run loop ([[GraphRunner.drain]]); `graft trigger --due` ticks a
+  * Scheduler built over its ledger file.
   */
 object GraphScheduler {
 
@@ -62,52 +62,24 @@ object GraphScheduler {
       .map { case (id, ts) => s"$id\t$ts" }.mkString("", "\n", "\n"))
 }
 
-/** Cron + run-request scheduler loop over a GraphRunner (G2/T9): each
-  * tick runs the nodes [[GraphScheduler.due]] selects against this
-  * scheduler's in-memory last-run map (advanced to the tick instant
-  * after they ran, as `--due` advances its ledger) and any follow-up
-  * runs previously requested via `State.requestNewRun`, then propagates
-  * one signal wave to downstream consumers. A follow-up request comes
-  * back from the run that made it, a due run or a propagated one.
-  * Driven by an external clock so it is testable and embeddable (call
-  * `tick` from any timer).
+/** Cron scheduler over a GraphRunner (G2/T9): a tick is one
+  * [[GraphRunner.drain]] of the nodes [[GraphScheduler.due]] selects
+  * against the last-run ledger, which then advances to the tick for
+  * them; a tick that throws leaves it as it was. Driven by an external
+  * clock so it is testable and embeddable (call `tick` from any timer).
   */
-final class Scheduler(runner: GraphRunner) {
-  // follow-up run time + whether that run's writes propagate downstream
-  private val followUps = mutable.Map.empty[String, (LocalDateTime, Boolean)]
-  private val lastRuns = mutable.Map.empty[String, LocalDateTime]
+final class Scheduler(runner: GraphRunner,
+    private var ledger: Map[String, LocalDateTime] = Map.empty) {
 
-  def pendingFollowUps: Map[String, LocalDateTime] =
-    followUps.view.mapValues(_._1).toMap
+  /** Each cron node's last scheduled run, as the ledger to save. */
+  def lastRuns: Map[String, LocalDateTime] = ledger
+
+  def pendingFollowUps: Map[String, LocalDateTime] = runner.pendingFollowUps
 
   def tick(t: LocalDateTime): Seq[String] = {
-    val dueFollowUps = followUps.collect {
-      case (id, (at, _)) if !at.isAfter(t) => id
-    }.toList
-    // trigger_downstream=false governs the REQUESTED follow-up run, not
-    // the run that requested it (node.py request_new_run): a follow-up
-    // scheduled with false executes, but its changes count as seen by
-    // consumers that had nothing else pending, so this tick's
-    // propagation wave leaves them alone
-    val cronDue = GraphScheduler.due(runner.flatNodes, lastRuns.toMap, t)
-    // a node that is ALSO cron-due this tick runs on the schedule's
-    // authority — the follow-up's no-propagate flag must not mute it
-    val muted =
-      dueFollowUps.filter(id => !followUps(id)._2).toSet -- cronDue
-    dueFollowUps.foreach(followUps.remove)
-    val due = (cronDue ++ dueFollowUps).distinct
-    def follow(id: String, request: Option[(Boolean, Long)]): Unit =
-      request.foreach { case (triggerDownstream, waitSecs) =>
-        followUps(id) = (t.plusSeconds(waitSecs), triggerDownstream)
-      }
-    // under the runner's ingest lock, as the webhook edge's waves run:
-    // a due run and a propagated run of one node never overlap
-    runner.serialized {
-      due.foreach(id => follow(id, runner.runNode(id, triggerDownstream = !muted(id))))
-      lastRuns ++= cronDue.map(_ -> t)
-      val propagated = if (due.nonEmpty) runner.propagate() else Nil
-      propagated.foreach { case (id, request) => follow(id, request) }
-      due ++ propagated.map(_._1)
-    }
+    val due = GraphScheduler.due(runner.flatNodes, ledger, t)
+    val ran = runner.drain(t, due)
+    ledger ++= due.map(_ -> t)
+    ran
   }
 }

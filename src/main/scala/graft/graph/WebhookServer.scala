@@ -14,8 +14,8 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * `POST /webhooks/<name>` with a JSON object body:
   *  - appends the parsed body (plus a generated `patterns_request_key`
   *    column) to the webhook's same-name table,
-  *  - runs one downstream signal wave (the platform runs consumers
-  *    asynchronously; a loopback edge can afford to run them inline),
+  *  - runs one [[GraphRunner.drain]] inline (the platform runs consumers
+  *    asynchronously; a loopback edge can afford not to),
   *  - with `?wait=true`, returns the payload of the row carrying this
   *    request's key in `<name>_responses` as the HTTP response body:
   *    the body `GraphRunner.respondToRequest` hands to the request's
@@ -32,7 +32,6 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
     responseTimeoutMs: Long = 10000L) {
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val reqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
   server.createContext("/webhooks/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
@@ -68,23 +67,19 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
     if (body.isEmpty || body.head != '{') {
       respond(ex, 400, """{"error":"body must be a JSON object"}"""); return
     }
-    val key = f"req-${reqCounter.incrementAndGet()}%08d"
     val wait = Option(ex.getRequestURI.getQuery).exists(_.split('&').contains("wait=true"))
-    // register the latch BEFORE ingesting: a responder running inline in
-    // the propagation wave completes it via respondToRequest, so the
-    // waiter can never miss the wake-up
-    val latch = if (wait) Some(runner.responseLatch(key)) else None
-    runner.ingestWebhookJson(name, Seq(body), key)
-    runner.propagateOnce()
-    if (!wait) {
-      respond(ex, 202, s"""{"patterns_request_key":"$key"}"""); return
-    }
-    // at most 1 table read per waited request, never a 50 ms Spark-job
-    // poll loop: a responder that ran inline has already completed the
-    // latch with the body; otherwise one up-front read covers a node
-    // that wrote `<name>_responses` itself, then the latch is awaited
+    val key = runner.ingestRequest(name, body, waited = wait)
+    // the latch goes however the request ends, a failed drain included
     try {
-      val l = latch.get
+      runner.drain(java.time.LocalDateTime.now())
+      if (!wait) {
+        respond(ex, 202, s"""{"patterns_request_key":"$key"}"""); return
+      }
+      // at most 1 table read per waited request, never a 50 ms Spark-job
+      // poll loop: a responder that ran in the drain has already completed
+      // the latch with the body; otherwise one up-front read covers a node
+      // that wrote `<name>_responses` itself, then the latch is awaited
+      val l = runner.responseLatch(key)
       Option(l.getNow(null))
         .orElse(runner.webhookResponse(name, key))
         .orElse(

@@ -319,10 +319,14 @@ class CliSpec extends SparkSpec {
       val app = work.resolve("cronapp")
       run("create", "app", "--name", "cronapp", app.toString)
       Files.writeString(app.resolve("gen.sql"), "select 7 as answer\n")
+      Files.writeString(app.resolve("count.sql"), "select count(*) as n from {{ src }}\n")
       GraphConfigEditor(app.resolve("graph.yml"))
         .addTable("out_t")
+        .addTable("count_t")
         .addNode("gen.sql", trigger = "1 * * * *",
           outputs = Seq("result" -> "out_t"), id = "cron01")
+        .addNode("count.sql", inputs = Seq("src" -> "out_t"),
+          outputs = Seq("result" -> "count_t"), id = "count01")
         .write()
       def due(at: String): String = {
         val out = new java.io.ByteArrayOutputStream()
@@ -337,6 +341,9 @@ class CliSpec extends SparkSpec {
         app.resolve(".graft-warehouse").toString)
       assert(runner.tableHandle("out_t").read.collect().map(_.getInt(0)).toSeq
         == Seq(7))
+      // the due node's downstream consumer ran in the same poll
+      assert(runner.tableHandle("count_t").read.collect().map(_.getLong(0)).toSeq
+        == Seq(1L))
       // same period: nothing due; past the next boundary: due again
       assert(due("2026-01-01T05:30").contains("No nodes due"))
       assert(due("2026-01-01T06:01").contains("cron01"))

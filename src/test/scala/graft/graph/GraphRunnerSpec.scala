@@ -491,7 +491,7 @@ class GraphRunnerSpec extends SparkSpec {
     // stale wave reran it exactly once
     assert(consumed.get == 2)
     // consumed change signals drained: a later wave has nothing to do
-    assert(runner.propagateOnce().isEmpty)
+    assert(runner.drain(java.time.LocalDateTime.now()).isEmpty)
     assert(consumed.get == 2)
   }
 
@@ -693,6 +693,61 @@ class GraphRunnerSpec extends SparkSpec {
     assert(runs.get == 2 && sched.pendingFollowUps.isEmpty)
   }
 
+  test("a follow-up requested by a node that run() ran is run by a later tick") {
+    import java.time.LocalDateTime
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: chunker.scala
+        |    id: chunker01
+        |""".stripMargin)
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val chunker = new CodeNode {
+      def run(ctx: NodeContext): Unit =
+        if (runs.incrementAndGet() == 1) ctx.state.requestNewRun(waitAtleastSeconds = 60)
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("chunker.scala" -> chunker))
+    runner.run()
+    val sched = new Scheduler(runner)
+    assert(sched.tick(LocalDateTime.now()).isEmpty, "not before its wait")
+    assert(sched.tick(LocalDateTime.now().plusMinutes(5)) == Seq("chunker01"))
+    assert(runs.get == 2 && sched.pendingFollowUps.isEmpty)
+  }
+
+  test("a follow-up whose run throws loses only itself: the one queued behind it still runs") {
+    import java.time.LocalDateTime
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - node_file: a.scala
+        |    id: chunkera1
+        |    trigger: 0 * * * *
+        |  - node_file: b.scala
+        |    id: chunkerb1
+        |    trigger: 0 * * * *
+        |""".stripMargin)
+    val runs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def chunker(failSecond: Boolean) = new CodeNode {
+      def run(ctx: NodeContext): Unit = {
+        val n = runs.merge(ctx.nodeId, 1, _ + _)
+        if (n == 1) ctx.state.requestNewRun(waitAtleastSeconds = 60)
+        else if (failSecond) throw new IllegalStateException("follow-up failed")
+      }
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("a.scala" -> chunker(true), "b.scala" -> chunker(false)))
+    val sched = new Scheduler(runner)
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 0)) == Seq("chunkera1", "chunkerb1"))
+    assert(sched.pendingFollowUps.keySet == Set("chunkera1", "chunkerb1"))
+    // both follow-ups are due; the first one's run throws
+    intercept[IllegalStateException](sched.tick(LocalDateTime.of(2026, 1, 1, 9, 2)))
+    assert(sched.pendingFollowUps.keySet == Set("chunkerb1"))
+    assert(sched.tick(LocalDateTime.of(2026, 1, 1, 9, 3)) == Seq("chunkerb1"))
+    assert(runs.get("chunkera1") == 2 && runs.get("chunkerb1") == 2)
+    assert(sched.pendingFollowUps.isEmpty)
+  }
+
   private def streamGraph(node: CodeNode): (GraphRunner, org.apache.spark.sql.DataFrame => Unit) = {
     val dir = tmpDir("graph")
     write(dir, "graph.yml",
@@ -806,14 +861,14 @@ class GraphRunnerSpec extends SparkSpec {
     val edge = new Thread(() => {
       inBody.await()
       runner.ingestWebhookJson("hook", Seq("""{"n": 2}"""), "k2")
-      runner.propagateOnce()
+      runner.drain(java.time.LocalDateTime.now())
       release.countDown()
     })
     edge.start()
     new Scheduler(runner).tick(java.time.LocalDateTime.of(2026, 1, 1, 9, 0))
     edge.join(60000L)
     assert(!edge.isAlive)
-    runner.propagateOnce()
+    runner.drain(java.time.LocalDateTime.now())
     assert(consumed.asScala.toSeq == Seq(1L, 2L), "each hook record consumed exactly once")
     assert(runs.get == 2)
   }

@@ -20,7 +20,10 @@ class WebhookServerSpec extends SparkSpec {
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
-  test("POST ingests a row, downstream consumes it, response row returned over HTTP") {
+  /** A webhook `hook` and a responder that streams its rows by request
+    * key, writes each one's response row and records the key in `seen`.
+    */
+  private def echoRunner(): GraphRunner = {
     val dir = tmpDir("graph")
     write(dir, "graph.yml",
       """functions:
@@ -49,8 +52,12 @@ class WebhookServerSpec extends SparkSpec {
         cur.checkpoint()
       }
     }
-    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+    new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
       codeNodes = Map("responder.scala" -> responder))
+  }
+
+  test("POST ingests a row, downstream consumes it, response row returned over HTTP") {
+    val runner = echoRunner()
     val server = new WebhookServer(runner, port = 0, responseTimeoutMs = 30000)
     try {
       // fire-and-forget: 202 + request key, row landed, downstream ran
@@ -74,6 +81,67 @@ class WebhookServerSpec extends SparkSpec {
         HttpRequest.newBuilder(URI.create(server.url("hook"))).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       assert(get.statusCode() == 405)
+    } finally server.stop()
+  }
+
+  test("concurrent waited clients each get their own body: request keys commit in order") {
+    val runner = echoRunner()
+    val server = new WebhookServer(runner, port = 0, responseTimeoutMs = 10000)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futs = (0 until 4).map { c =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, HttpResponse[String])]] {
+          def call(): Seq[(Int, HttpResponse[String])] = (0 until 6).map { i =>
+            val v = 100 * c + i
+            v -> post(server.url("hook") + "?wait=true", s"""{"value": $v}""")
+          }
+        })
+      }
+      val answers = futs.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      answers.foreach { case (v, r) =>
+        assert(r.statusCode() == 200, s"value $v: ${r.body()}")
+        assert(r.body().contains(s""""echoed":$v,"""), s"value $v: ${r.body()}")
+      }
+      val keys = runner.tableHandle("hook_responses").read
+        .select("patterns_request_key").collect().map(_.getString(0)).toSeq
+      assert(keys.size == 24 && keys.distinct.size == 24, "each key answered exactly once")
+    } finally { pool.shutdown(); server.stop() }
+  }
+
+  test("a follow-up requested by a node a POST ran is run by the next drain once due") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |  - webhook: other
+        |  - node_file: c.scala
+        |    id: chunker01
+        |    inputs: {hook: hook}
+        |stores: []
+        |""".stripMargin)
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val chunker = new CodeNode {
+      def run(ctx: NodeContext): Unit = runs.incrementAndGet() match {
+        case 1 => ctx.state.requestNewRun(waitAtleastSeconds = 0)
+        case 2 => ctx.state.requestNewRun(waitAtleastSeconds = 60)
+        case _ => ()
+      }
+    }
+    val runner = new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+      codeNodes = Map("c.scala" -> chunker))
+    val server = new WebhookServer(runner)
+    try {
+      assert(post(server.url("hook"), """{"n": 1}""").statusCode() == 202)
+      assert(runs.get == 1)
+      // a POST to a webhook the node does not read drains its follow-up
+      assert(post(server.url("other"), """{"n": 2}""").statusCode() == 202)
+      assert(runs.get == 2)
+      // the next one is not due for a minute: a POST leaves it, a tick runs it
+      assert(post(server.url("other"), """{"n": 3}""").statusCode() == 202)
+      assert(runs.get == 2)
+      val sched = new Scheduler(runner)
+      assert(sched.tick(java.time.LocalDateTime.now().plusMinutes(5)) == Seq("chunker01"))
+      assert(runs.get == 3 && sched.pendingFollowUps.isEmpty)
     } finally server.stop()
   }
 
@@ -202,6 +270,9 @@ class WebhookServerSpec extends SparkSpec {
       assert(r.statusCode() == 500, r.body())
       val json = org.json4s.jackson.JsonMethods.parse(r.body())
       assert((json \ "error") == org.json4s.JString(msg))
+      // a waited request that fails the same way leaves no latch behind
+      assert(post(server.url("hook") + "?wait=true", """{"n":2}""").statusCode() == 500)
+      assert(runner.responseLatchCount == 0)
     } finally server.stop()
   }
 

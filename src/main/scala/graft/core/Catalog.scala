@@ -1,7 +1,7 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
@@ -12,7 +12,7 @@ import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -204,7 +204,11 @@ final class Catalog(val root: String) {
     * rows), they are read on the driver into a local relation: the same
     * rows, column order and types as the Spark scan, and no Spark job for
     * a `collect` or a filter/projection of it. Any larger scan is a Spark
-    * file scan, which prunes partitions and row groups.
+    * file scan, which prunes partitions and row groups. A driver read
+    * decodes only the files it has not decoded before
+    * ([[Catalog.readLocal]]'s cache): a data file is never rewritten
+    * under its name, so a second scan of a version, or of a version that
+    * links the same files, decodes nothing.
     */
   def scan(spark: SparkSession, name: String, versionId: String,
       dirs: Seq[String] = Seq("")): DataFrame = {
@@ -283,16 +287,65 @@ object Catalog {
     * disk and hold at most `LocalRows` rows by their footers. They are
     * fixed, below the crossovers measured in SCALING.md ("Driver reads
     * under fixed bounds"): the driver path reads its files one after
-    * another and decodes every row, so from about 50–100 one-row files,
-    * or 20,000–40,000 rows in one file, the Spark scan is as fast or
-    * faster. The row bound also bounds what a scan decodes into the
-    * driver heap, which compressed bytes alone do not. They are not
-    * the session's `spark.sql.autoBroadcastJoinThreshold`: that sizes
-    * joins, and raising it for them must not move large scans here.
+    * another and decodes every row of each file it has not cached, so
+    * from about 50–100 one-row files, or 20,000–40,000 rows in one file,
+    * the Spark scan is as fast or faster. The row bound also bounds what
+    * a scan decodes into the driver heap, which compressed bytes alone
+    * do not. They are not the session's
+    * `spark.sql.autoBroadcastJoinThreshold`: that sizes joins, and
+    * raising it for them must not move large scans here.
     */
   private[graft] val LocalFiles = 32
   private[graft] val LocalBytes = 4L << 20
   private[graft] val LocalRows = 10000L
+
+  /** The driver read cache's bound: what its entries may hold together,
+    * each charged its rows' `UnsafeRow` bytes and [[EntryBytes]] for its
+    * key. A fixed constant, not a setting; a file that decodes to more
+    * is never cached. */
+  private[graft] val CacheBytes = 32L << 20
+  private val EntryBytes = 1024L
+
+  /** Data files the driver path has decoded: every cache miss. */
+  private[graft] val decodedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** A data file's identity: its inode (the file key), name, size and
+    * modification time. A hard link shares it; no writer reuses a name. */
+  private final case class FileId(inode: AnyRef, name: String, size: Long, modified: FileTime)
+
+  private def fileId(p: Path, a: BasicFileAttributes): Option[FileId] =
+    Option(a.fileKey).map(FileId(_, p.getFileName.toString, a.size, a.lastModifiedTime))
+
+  /** What the reader makes of a file besides its bytes: the data and
+    * partition schemas, the file's partition values and the session's
+    * SQL settings. */
+  private final case class ReadInputs(data: StructType, partition: StructType,
+      values: Seq[Any], settings: Map[String, String])
+
+  private final case class Decoded(inputs: ReadInputs, rows: Vector[UnsafeRow], bytes: Long)
+
+  /** Each file's decoded rows, least recently used first, within
+    * [[CacheBytes]]. */
+  private object cache {
+    private val files = new java.util.LinkedHashMap[FileId, Decoded](64, 0.75f, true)
+    private var total = 0L
+
+    def get(id: FileId): Option[Decoded] = synchronized(Option(files.get(id)))
+
+    def put(id: FileId, d: Decoded): Unit = synchronized {
+      if (d.bytes <= CacheBytes) {
+        Option(files.put(id, d)).foreach(total -= _.bytes)
+        total += d.bytes
+        val lru = files.values.iterator
+        while (total > CacheBytes) { total -= lru.next().bytes; lru.remove() }
+      }
+    }
+
+    def bytes: Long = synchronized(total)
+  }
+
+  /** What the driver read cache holds now. */
+  private[graft] def cachedBytes: Long = cache.bytes
 
   /** The options of every footer read, built once: building them
     * builds a Hadoop `Configuration`, about 15 ms. */
@@ -308,8 +361,9 @@ object Catalog {
     * `HadoopFSUtils.shouldFilterOutPathName` skips them), with their
     * sizes, sorted by path, when they are within the size rule's bounds;
     * None once they pass one or when a directory is missing (the Spark
-    * scan then reports it). Footers are read only after the listing
-    * has passed the file and byte bounds, and stop at the row bound.
+    * scan then reports it). Row counts are read only after the listing
+    * has passed the file and byte bounds, and stop at the row bound: a
+    * cached file's from the cache, any other's from its footer.
     */
   private def smallFiles(root: String,
       dirs: Seq[String]): Option[Seq[(Path, BasicFileAttributes)]] = {
@@ -326,15 +380,16 @@ object Catalog {
         }
       } finally s.close()
     }
-    def footerRows(p: Path): Long = {
-      val in = new LocalInputFile(p)
-      val s = in.newStream()
-      try ParquetFileReader.readFooter(in, footerOptions, s).getBlocks.asScala.map(_.getRowCount).sum
-      finally s.close()
-    }
+    def rows(p: Path, a: BasicFileAttributes): Long =
+      fileId(p, a).flatMap(cache.get).map(_.rows.size.toLong).getOrElse {
+        val in = new LocalInputFile(p)
+        val s = in.newStream()
+        try ParquetFileReader.readFooter(in, footerOptions, s).getBlocks.asScala.map(_.getRowCount).sum
+        finally s.close()
+      }
     val dirPaths = dirs.map(Paths.get(root, _))
     if (dirPaths.forall(Files.isDirectory(_)) && dirPaths.forall(walk) &&
-        out.iterator.map(f => footerRows(f._1)).scanLeft(0L)(_ + _).forall(_ <= LocalRows))
+        out.iterator.map { case (p, a) => rows(p, a) }.scanLeft(0L)(_ + _).forall(_ <= LocalRows))
       Some(out.toSeq)
     else None
   }
@@ -346,11 +401,24 @@ object Catalog {
     * It reads as the Spark scan given `schema` does: partition columns
     * and their typed values come from the file index's partition
     * inference (`GraftShim.partitions`) and follow the data columns;
-    * every file goes through Spark's parquet reader
-    * (`ParquetFileFormat.buildReaderWithPartitionValues`, built once per
-    * scan, row-returning) under the session's conf, and each row is
-    * copied out through an `UnsafeProjection`. The reader needs no task
-    * context and starts no job.
+    * a file goes through Spark's parquet reader
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`, row-returning)
+    * under the session's conf, and each row is copied out through an
+    * `UnsafeProjection`. The reader needs no task context and starts no
+    * job.
+    *
+    * The cache contract. A file's decoded rows are kept, least recently
+    * used first, under a fixed bound on their bytes ([[CacheBytes]]),
+    * keyed by the file's identity (inode, name, size, modification
+    * time) and the reader's inputs (the schemas, the file's partition
+    * values, the session's SQL settings); a file that decodes to more
+    * than the bound is never kept. A data file is never rewritten under
+    * its name: both writers rename complete files into place under names
+    * that carry a write UUID, and `truncate`, `compact`, upsert and the
+    * widening append all write new names. So a kept entry is the file's
+    * rows for as long as its identity holds, and an upsert's hard-linked
+    * directories are read from it in the next version. The reader and
+    * the projection are built only when some file is not kept.
     */
   private[graft] def readLocal(spark: SparkSession, root: String, dirs: Seq[String],
       schema: StructType): Option[DataFrame] = {
@@ -368,14 +436,22 @@ object Catalog {
         val options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
         lazy val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
           partSchema, dataSchema, Nil, options, spark.sessionState.newHadoopConfWithOptions(options))
-        val copy = UnsafeProjection.create(out)
+        lazy val copy = UnsafeProjection.create(out)
+        val settings = conf.getAllConfs
         val rows = files.flatMap { case (f, a) =>
-          val file = PartitionedFile(values.getOrElse(hadoop(f.getParent), InternalRow.empty),
-            SparkPath.fromPath(hadoop(f)), 0L, a.size, Array.empty[String],
-            a.lastModifiedTime.toMillis, a.size)
-          val it = reader(file)
-          try it.map(r => copy(r).copy(): InternalRow).toVector
-          finally it match { case c: java.io.Closeable => c.close(); case _ => }
+          val value = values.getOrElse(hadoop(f.getParent), InternalRow.empty)
+          val inputs = ReadInputs(dataSchema, partSchema, value.toSeq(partSchema), settings)
+          val id = fileId(f, a)
+          id.flatMap(cache.get).filter(_.inputs == inputs).map(_.rows).getOrElse {
+            decodedFiles.incrementAndGet()
+            val it = reader(PartitionedFile(value, SparkPath.fromPath(hadoop(f)), 0L, a.size,
+              Array.empty[String], a.lastModifiedTime.toMillis, a.size))
+            val rows = try it.map(r => copy(r).copy()).toVector
+              finally it match { case c: java.io.Closeable => c.close(); case _ => }
+            id.foreach(cache.put(_, Decoded(inputs, rows,
+              EntryBytes + rows.iterator.map(_.getSizeInBytes.toLong).sum)))
+            rows
+          }
         }
         GraftShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(out), rows))
       }

@@ -430,15 +430,34 @@ final class GraphRunner(
 
   /** One HTTP request's body under a fresh key, returned. Keys are minted
     * under the ingest lock, so they commit in order and a responder that
-    * streams by request key passes none over. A waited request's latch
-    * is registered before the append, and dropped if the append throws.
+    * streams by request key passes none over. The runner's first key for
+    * a webhook follows the highest one its table already holds, so a
+    * runner opened over an existing warehouse mints keys above the
+    * offsets its responders persisted. A waited request's latch is
+    * registered before the append, and dropped if the append throws.
     */
   private[graph] def ingestRequest(name: String, body: String, waited: Boolean): String =
     ingest(name, Seq(body), () => {
+      if (!keyed(name)) {
+        requests.accumulateAndGet(lastRequest(name), math.max(_, _))
+        keyed += name
+      }
       val key = f"req-${requests.incrementAndGet()}%08d"
       if (waited) responseLatch(key)
       key })
   private val requests = new java.util.concurrent.atomic.AtomicLong(0L)
+  // the webhooks this runner has minted a key for (under the ingest lock)
+  private val keyed = mutable.Set.empty[String]
+  private val MintedKey = "req-([0-9]{1,18})".r
+
+  /** The highest number of a minted key in webhook `name`'s table; 0
+    * when it holds none. */
+  private def lastRequest(name: String): Long = {
+    val h = tableHandle(name)
+    if (!h.exists || !h.schema.fieldNames.contains(RequestKey)) 0L
+    else Catalog.drain(h.read.select(RequestKey)).flatMap(r => Option(r.getString(0)))
+      .collect { case MintedKey(n) => n.toLong }.foldLeft(0L)(math.max)
+  }
 
   private def ingest(name: String, jsonBodies: Seq[String], mintKey: () => String): String = {
     import spark.implicits._

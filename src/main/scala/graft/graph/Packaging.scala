@@ -158,10 +158,9 @@ object Packaging {
   * else is 404. Binds 127.0.0.1 only.
   */
 final class ComponentRegistryServer(root: String, port: Int = 0) {
-  import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+  import com.sun.net.httpserver.{HttpExchange, HttpHandler}
 
-  private val server =
-    HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
+  private val server = WebhookServer.loopback(port)
 
   server.createContext("/components/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = try {

@@ -27,11 +27,16 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * is parsed on the driver into a row of that schema and appended
   * without a Spark job; any other is parsed by Spark's JSON reader with
   * the inference rules of file ingest (`GraphRunner.ingestWebhookJson`).
+  *
+  * Replies are not held back by Nagle's algorithm: the server sets
+  * TCP_NODELAY on its connections ([[WebhookServer.loopback]]), or a
+  * keep-alive client waits out its delayed ACK, about 40 ms, on every
+  * round trip.
   */
 final class WebhookServer(runner: GraphRunner, port: Int = 0,
     responseTimeoutMs: Long = 10000L) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = WebhookServer.loopback(port)
 
   server.createContext("/webhooks/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
@@ -97,5 +102,21 @@ final class WebhookServer(runner: GraphRunner, port: Int = 0,
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length.toLong)
     ex.getResponseBody.write(bytes)
+  }
+}
+
+object WebhookServer {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** A JDK HTTP server on 127.0.0.1:`port` whose connections set
+    * TCP_NODELAY, unless `sun.net.httpserver.nodelay` is already set.
+    * The JDK writes a reply's headers and body as two segments; with
+    * Nagle's algorithm on, the body waits for the client's delayed ACK.
+    * It reads the property once, when the JVM creates its first server,
+    * so every server here is created through this.
+    */
+  private[graph] def loopback(port: Int): HttpServer = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
 }

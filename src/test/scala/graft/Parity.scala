@@ -24,6 +24,20 @@ object Parity {
     (driver, jobs)
   }
 
+  /** `read` run twice; asserts the runs agree and, off the Spark path,
+    * that the second decoded no file: its scans are served by the
+    * driver read cache. Returns the second run's value.
+    */
+  def twice[T](read: => T): T = {
+    val first = read
+    val decoded = graft.core.Catalog.decodedFiles.get
+    val second = read
+    if (!graft.core.Catalog.sparkOnly.value)
+      assert(graft.core.Catalog.decodedFiles.get == decoded, "the second read decoded files")
+    assert(first == second, s"\nfirst read:  $first\nsecond read: $second")
+    second
+  }
+
   /** A frame's schema and its rows as sorted strings: comparable values. */
   def rows(df: DataFrame): (StructType, Seq[String]) =
     (df.schema, df.collect().map(_.toString).toSeq.sorted)

@@ -117,4 +117,111 @@ class CatalogSpec extends SparkSpec {
       "i -> sha2(concat(cast(id AS STRING), '-', cast(i AS STRING)), 256)))"))
     assert(bytes(wide) > Catalog.LocalBytes && !local(wide) && wide.read.count() == 1200)
   }
+
+  // ---- the driver read cache (Catalog.readLocal) ----------------------
+
+  /** `body`'s value and the data files the driver path decoded in it. */
+  private def decodes[T](body: => T): (T, Long) = {
+    val before = Catalog.decodedFiles.get
+    val out = body
+    (out, Catalog.decodedFiles.get - before)
+  }
+
+  private def rows(h: TableHandle) = graft.Parity.rows(h.read)
+
+  test("a second scan of a version decodes no file") {
+    import spark.implicits._
+    val h = new TableHandle(spark, new Catalog(tmpDir("cache")), "t")
+    (1 to 3).foreach { i => h.append(Seq(i.toLong).toDF("id")); h.flush() }
+    val (first, n1) = decodes(rows(h))
+    assert(n1 == 3 && first._2 == Seq("[1]", "[2]", "[3]"))
+    val (second, n2) = decodes(rows(h))
+    assert(n2 == 0 && second == first)
+    assert(decodes(graft.Parity.rows(h.readVersion(h.meta.activeVersion.get)))._2 == 0)
+  }
+
+  test("after a 1-row upsert into a 16-bucket table the next read decodes only the rewritten file") {
+    import spark.implicits._
+    val h = new TableHandle(spark, new Catalog(tmpDir("cache")), "t")
+      .init(uniqueOn = Seq("k"), hashBuckets = Some(16))
+    h.append((1L to 256L).map(k => (k, s"v$k")).toDF("k", "v")); h.flush()
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(h.catalog.activePath("t").get))
+      .iterator().asScala.count(_.toString.endsWith(".parquet"))
+    assert(files == 16, "one file per bucket")
+    assert(decodes(h.read.collect())._2 == 16)
+    // the merge reads the touched bucket's file from the cache
+    assert(decodes { h.upsert(Seq((5L, "new")).toDF("k", "v")); h.flush() }._2 == 0)
+    val (after, n) = decodes(h.read.collect())
+    assert(n == 1, "the 15 hard-linked files are read from the cache")
+    assert(after.length == 256 && after.filter(_.getLong(0) == 5L).map(_.getString(1)).toSeq == Seq("new"))
+  }
+
+  test("truncate, compact, a widening append and vacuum then rewrites never serve stale rows") {
+    import spark.implicits._
+    val h = new TableHandle(spark, new Catalog(tmpDir("cache")), "t")
+    // every read on the driver path, after a read that filled the cache,
+    // equals the Spark scan of the same version
+    def check(want: Seq[String]): Unit = {
+      val got = rows(h)
+      assert(got == graft.Parity.sparkPath(rows(h)))
+      assert(got._2 == want)
+    }
+    h.append(Seq(1L, 2L).toDF("id")); h.flush()
+    check(Seq("[1]", "[2]"))
+    h.truncate()
+    check(Nil)
+    h.append(Seq(3L).toDF("id")); h.flush()
+    h.append(Seq(4L).toDF("id")); h.flush()
+    check(Seq("[3]", "[4]"))
+    assert(h.compact().isDefined)
+    check(Seq("[3]", "[4]"))
+    h.append(Seq((5L, "x")).toDF("id", "extra")); h.flush() // widens: a new version
+    check(Seq("[3,null]", "[4,null]", "[5,x]"))
+    h.catalog.vacuum("t")
+    (6L to 8L).foreach { i =>
+      h.replace(Seq((i, s"r$i")).toDF("id", "extra"))
+      check(Seq(s"[$i,r$i]"))
+      h.catalog.vacuum("t")
+    }
+  }
+
+  test("a changed session SQL setting makes the next scan decode again") {
+    import spark.implicits._
+    val h = new TableHandle(spark, new Catalog(tmpDir("cache")), "t")
+    (1 to 2).foreach { i => h.append(Seq(i.toLong).toDF("id")); h.flush() }
+    val (want, _) = decodes(rows(h))
+    assert(decodes(rows(h))._2 == 0)
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val set = spark.conf.getOption(key)
+    spark.conf.set(key, !spark.conf.get(key).toBoolean)
+    try {
+      val (got, n) = decodes(rows(h))
+      assert(n == 2 && got == want)
+      assert(decodes(rows(h))._2 == 0)
+    } finally set.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val (got, n) = decodes(rows(h))
+    assert(n == 2 && got == want)
+  }
+
+  test("scans that together decode past the cache's bound leave it within the bound") {
+    import org.apache.spark.sql.functions._
+    // 2,000 rows of 4 KiB each: about 8 MiB decoded from a few KiB on disk
+    def table(n: Long) = {
+      val h = new TableHandle(spark, new Catalog(tmpDir("cache")), "t")
+      h.append(spark.range(0, n, 1, 1).select(col("id"), expr("repeat('x', 4096)").as("v")))
+      h.flush()
+      h
+    }
+    def count(h: TableHandle) = Catalog.local(h.read).get.data.size
+    val tables = (1 to 6).map(_ => table(2000))
+    tables.foreach(h => assert(decodes(count(h)) == ((2000, 1L))))
+    assert(Catalog.cachedBytes <= Catalog.CacheBytes)
+    // the most recently read is kept, the least recently read was evicted
+    assert(decodes(count(tables.last))._2 == 0)
+    assert(decodes(count(tables.head))._2 == 1)
+    // a file that decodes to more than the bound is never kept
+    val big = table(Catalog.LocalRows)
+    assert(decodes(count(big))._2 == 1 && decodes(count(big))._2 == 1)
+    assert(Catalog.cachedBytes <= Catalog.CacheBytes)
+  }
 }

@@ -835,9 +835,9 @@ class TableHandleSpec extends SparkSpec {
         val h = init(handle(tmpDir("parity")))
         h.append(localRows(seedRows, allTypes)); h.flush()
         h.append(localRows(typedRows.take(1), allTypes)); h.flush()
-        val (got, n) = graft.JobCounter.jobs(spark)((graft.Parity.rows(h.read),
+        val (got, n) = graft.JobCounter.jobs(spark)(graft.Parity.twice((graft.Parity.rows(h.read),
           graft.Parity.rows(h.read.filter(col("l") > 2).select("s", "ts", "l")),
-          h.readRecords().map(_.toString).toSeq.sorted))
+          h.readRecords().map(_.toString).toSeq.sorted)))
         jobs += n
         got
       }
@@ -853,7 +853,7 @@ class TableHandleSpec extends SparkSpec {
         h.append(localRows(seedRows, allTypes)); h.flush()
         val (got, n) = graft.JobCounter.jobs(spark) {
           h.upsert(localRows(batchRows, allTypes), orderBy); h.flush()
-          graft.Parity.rows(h.read)
+          graft.Parity.twice(graft.Parity.rows(h.read))
         }
         jobs += n
         assert(h.recordCount == got._2.size, layout)
@@ -880,7 +880,7 @@ class TableHandleSpec extends SparkSpec {
         val h = init(handle(tmpDir("keys")))
         h.append(localRows(seed, schema)); h.flush()
         h.upsert(localRows(batch, schema), orderBy); h.flush()
-        (graft.Parity.rows(h.read.select("k", "v", "p")), h.recordCount)
+        (graft.Parity.twice(graft.Parity.rows(h.read.select("k", "v", "p"))), h.recordCount)
       }
       assert(jobs == 0, s"$layout, orderBy = $orderBy")
       if (layout == "unpartitioned")

@@ -23,7 +23,7 @@ class WebhookServerSpec extends SparkSpec {
   /** A webhook `hook` and a responder that streams its rows by request
     * key, writes each one's response row and records the key in `seen`.
     */
-  private def echoRunner(): GraphRunner = {
+  private def echoRunner(warehouse: String = tmpDir("wh")): GraphRunner = {
     val dir = tmpDir("graph")
     write(dir, "graph.yml",
       """functions:
@@ -52,7 +52,7 @@ class WebhookServerSpec extends SparkSpec {
         cur.checkpoint()
       }
     }
-    new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh"),
+    new GraphRunner(spark, GraphManifest.load(dir), warehouse,
       codeNodes = Map("responder.scala" -> responder))
   }
 
@@ -106,6 +106,46 @@ class WebhookServerSpec extends SparkSpec {
         .select("patterns_request_key").collect().map(_.getString(0)).toSeq
       assert(keys.size == 24 && keys.distinct.size == 24, "each key answered exactly once")
     } finally { pool.shutdown(); server.stop() }
+  }
+
+  test("a runner opened over an existing warehouse mints keys its responder has not passed") {
+    val warehouse = tmpDir("wh")
+    def answer(value: Int): HttpResponse[String] = {
+      val server = new WebhookServer(echoRunner(warehouse), port = 0, responseTimeoutMs = 3000)
+      try post(server.url("hook") + "?wait=true", s"""{"value": $value}""")
+      finally server.stop()
+    }
+    Seq(1, 2, 3).foreach { v =>
+      val r = answer(v)
+      assert(r.statusCode() == 200, s"value $v: ${r.body()}")
+      assert(r.body().contains(s""""echoed":$v,"""), s"value $v: ${r.body()}")
+    }
+  }
+
+  test("a keep-alive reply does not wait out the client's delayed ACK") {
+    val dir = tmpDir("graph")
+    write(dir, "graph.yml",
+      """functions:
+        |  - webhook: hook
+        |stores: []
+        |""".stripMargin)
+    val server = new WebhookServer(new GraphRunner(spark, GraphManifest.load(dir), tmpDir("wh")))
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    // the 400 path: a reply of headers and a short body, no table touched
+    def roundTrip(): Double = {
+      val t0 = System.nanoTime()
+      val r = client.send(HttpRequest.newBuilder(URI.create(server.url("hook")))
+        .POST(HttpRequest.BodyPublishers.ofString("not json")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 400, r.body())
+      (System.nanoTime() - t0) / 1e6
+    }
+    try {
+      roundTrip() // opens the connection
+      val ms = Seq.fill(20)(roundTrip()).sorted
+      info(f"median round trip ${ms(10)}%.1f ms")
+      assert(ms(10) < 20, s"round trips (ms): ${ms.mkString(", ")}")
+    } finally server.stop()
   }
 
   test("a follow-up requested by a node a POST ran is run by the next drain once due") {
@@ -334,18 +374,24 @@ class WebhookServerSpec extends SparkSpec {
       val model = scala.collection.mutable.Map(1L -> ((1L, 5L)))
       val perPost = bodies.map { case (u, v) =>
         val reads = runner.responseReads.get()
+        val decoded = graft.core.Catalog.decodedFiles.get()
         val (r, jobs) = JobCounter.jobs(spark)(
           post(url, s"""{"user_id": $u, "value": $v}"""))
         assert(r.statusCode() == 200, r.body())
         val (n, t) = model.getOrElse(u, (0L, 0L))
         model(u) = (n + 1, t + v)
         assert(r.body() == s"""{"user_id":$u,"n":${n + 1},"total":${t + v}}""")
-        (jobs, runner.responseReads.get() - reads)
+        (jobs, runner.responseReads.get() - reads, graft.core.Catalog.decodedFiles.get() - decoded)
       }
       info(s"Spark jobs per POST: ${perPost.map(_._1).mkString(", ")}")
       assert(perPost.forall(_._1 <= 1),
         s"Spark jobs per POST: ${perPost.map(_._1).mkString(", ")} (at most 1)")
       assert(perPost.forall(_._2 == 0), "answered from the latch, no table read")
+      // from the third request on: the new `hook` file and the bucket
+      // file the previous upsert wrote; every other file is cached
+      val decodes = perPost.map(_._3)
+      info(s"files decoded per POST: ${decodes.mkString(", ")}")
+      assert(decodes.tail.forall(_ <= 2), s"files decoded per POST: ${decodes.mkString(", ")} (at most 2)")
     } finally server.stop()
   }
 

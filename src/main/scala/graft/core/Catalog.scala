@@ -36,7 +36,9 @@ final case class VersionMeta(
 /** Per-table metadata document. `orderings` carries the schema roles
   * that drive streaming defaults: "monotonic" (strictly_monotonic_ordering)
   * and "created" (created_ordering) — node.py:196-204, 286-294.
-  * `uniqueOn` is the upsert key (node.py:284-297).
+  * `uniqueOn` is the upsert key (node.py:284-297). `partitionBy` is
+  * `_gr_bucket` on a hash-bucketed table, else empty; an older meta.json
+  * may name another column (read, never written) or a `clusterBy` (ignored).
   */
 final case class TableMeta(
     name: String,
@@ -50,9 +52,7 @@ final case class TableMeta(
     addMonotonicId: Option[String],
     partitionBy: List[String],
     hashBuckets: Option[Int],
-    nextSeq: Long,
-    // Option so meta.json written before this field existed still parses
-    clusterBy: Option[List[String]] = None)
+    nextSeq: Long)
 
 object TableMeta {
   def fresh(name: String): TableMeta =
@@ -63,7 +63,10 @@ object TableMeta {
 /** Versioned warehouse catalog (SURVEY.md §2.1 S6/S10).
   *
   * Layout: `<root>/<table>/meta.json` + `<root>/<table>/<versionId>/`
-  * (a parquet directory per version). The active-version pointer lives
+  * (a parquet directory per version, a `_gr_bucket=N/` directory per
+  * bucket on a hash-bucketed table; reads infer any `k=v/` partition
+  * directory, so an older engine's layouts still read). The
+  * active-version pointer lives
   * in meta.json; swaps are atomic file renames, so a crashed writer
   * never corrupts the readable state — readers always see either the
   * old or the new pointer, and version directories are immutable once
@@ -227,6 +230,8 @@ final class Catalog(val root: String) {
   } yield v.recordCount).getOrElse(0L)
 
   /** GC: delete non-active version directories older than `keepMs`.
+    * Under the table's write lock: a version a writer is still filling
+    * is recorded inactive, and would otherwise be deleted under it.
     *
     * Interaction with hardlinked upsert chains (TableHandle's bucket-
     * pruned upsert hardlinks untouched partition files from the
@@ -244,7 +249,7 @@ final class Catalog(val root: String) {
     * version prefix would corrupt the active version. This local-FS
     * implementation is the hardlink specialization of that contract.
     */
-  def vacuum(name: String, keepMs: Long = 0L): Seq[String] = {
+  def vacuum(name: String, keepMs: Long = 0L): Seq[String] = withWriteLock(name) {
     val now = System.currentTimeMillis()
     meta(name).toSeq.flatMap { m =>
       val dead = m.versions.filter(v =>

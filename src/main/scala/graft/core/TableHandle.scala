@@ -24,19 +24,21 @@ import scala.collection.mutable.ArrayBuffer
   * files (fixed bounds on files, bytes and rows) is read on the
   * driver into a local relation, so collecting it, a filter or
   * projection of it, `readRecords` and a stream slice start no job; a
-  * larger one is a Spark scan with pushdown and pruning. Upsert is a
-  * full-outer MERGE of the batch against the partition directories it
-  * touches, writing a fresh version (atomic pointer swap — SURVEY.md
+  * larger one is a Spark scan with pushdown and pruning. The one
+  * partition layout is the key hash bucket (`init(hashBuckets = n)`);
+  * a table without it is one directory. Upsert is a full-outer MERGE of
+  * the batch against the buckets its keys fall in (the whole table when
+  * unbucketed), writing a fresh version (atomic pointer swap — SURVEY.md
   * §7.4.3): on the driver for a driver-local batch whose directories
   * are within the size rule, key-shuffled by a Spark job otherwise. The
   * write path collects no rows to the driver that are not already there
-  * (an upsert names a driver-local batch's touched partitions from its
-  * rows, any other batch's with one distinct aggregate). Rows that are
-  * already there, a frame whose optimized plan is a local relation, go
-  * the other way: an append or a new version writes them on the driver
-  * with Spark's own parquet writer, one file per partition directory and
-  * no Spark job (a webhook row, a response row, a merged bucket);
-  * anything else is written by a Spark job.
+  * (an upsert names a driver-local batch's buckets from its rows, any
+  * other batch's with one distinct aggregate). Rows that are already
+  * there, a frame whose optimized plan is a local relation, go the
+  * other way: an append or a new version writes them on the driver with
+  * Spark's own parquet writer, one file per bucket directory and no
+  * Spark job (a webhook row, a response row, a merged bucket); anything
+  * else is written by a Spark job.
   */
 final class TableHandle(
     val spark: SparkSession,
@@ -53,11 +55,11 @@ final class TableHandle(
   private val pending = ArrayBuffer.empty[Pending]
 
   // ---- Table.init (node.py:269-297) ----------------------------------
-  /** `partitionBy` directory-partitions every version (date keys etc. —
-    * enables static + dynamic partition pruning on reads). `hashBuckets`
-    * adds a derived `_gr_bucket = pmod(xxhash64(uniqueOn), n)` partition
-    * so upserts rewrite only the buckets that contain incoming keys
-    * (SURVEY.md §7.4.3's 100 TB path).
+  /** `hashBuckets` partitions every version by a derived
+    * `_gr_bucket = pmod(xxhash64(uniqueOn), n)` column, so an upsert
+    * rewrites only the buckets that hold its keys (SURVEY.md §7.4.3's
+    * 100 TB path). The layout is fixed by the first `init` that sets it:
+    * a later `init` does not change a table's partition column.
     */
   def init(
       schema: Seq[(String, String)] = Nil,
@@ -68,9 +70,7 @@ final class TableHandle(
       addMonotonicId: Option[String] = None,
       strictlyMonotonicOrdering: Option[String] = None,
       createdOrdering: Option[String] = None,
-      partitionBy: Seq[String] = Nil,
-      hashBuckets: Option[Int] = None,
-      clusterBy: Seq[String] = Nil): this.type = {
+      hashBuckets: Option[Int] = None): this.type = {
     catalog.update(name) { m =>
       val orderings = m.orderings ++
         strictlyMonotonicOrdering.map("monotonic" -> _) ++
@@ -78,7 +78,6 @@ final class TableHandle(
         // add_monotonic_id implies a strictly-monotonic ordering on it
         addMonotonicId.map("monotonic" -> _) ++
         addCreated.map("created" -> _)
-      val parts = (partitionBy ++ hashBuckets.map(_ => TableHandle.BucketCol)).toList
       m.copy(
         // schema precedence: explicit field dict > named/DDL reference
         // (node.py:269-283 "a CommonModel Schema object or str name, or
@@ -91,9 +90,9 @@ final class TableHandle(
         uniqueOn = if (uniqueOn.nonEmpty) uniqueOn.toList else m.uniqueOn,
         addCreated = addCreated.orElse(m.addCreated),
         addMonotonicId = addMonotonicId.orElse(m.addMonotonicId),
-        partitionBy = if (parts.nonEmpty) parts else m.partitionBy,
+        partitionBy = if (m.partitionBy.nonEmpty) m.partitionBy
+          else hashBuckets.map(_ => BucketCol).toList,
         hashBuckets = hashBuckets.orElse(m.hashBuckets),
-        clusterBy = if (clusterBy.nonEmpty) Some(clusterBy.toList) else m.clusterBy,
         orderings = orderings)
     }
     this
@@ -173,8 +172,15 @@ final class TableHandle(
   // ---- writes (node.py:299-354, buffered per node.py:305-307,407-414) --
   def append(df: DataFrame): Unit = { requireWrite(); pending += PendAppend(df) }
 
-  def appendRecords(records: Seq[Map[String, Any]]): Unit =
-    append(inferRecords(spark, records, meta.schemaDdl))
+  def appendRecords(records: Seq[Map[String, Any]]): Unit = append(typedRecords(records))
+
+  /** A field null in every record takes the active version's recorded
+    * type (as a webhook body's does), so it cannot widen that column. */
+  private def typedRecords(records: Seq[Map[String, Any]]): DataFrame =
+    inferRecords(spark, records, meta.schemaDdl, recorded)
+
+  private def recorded: StructType =
+    storedVersion.fold(new StructType())(catalog.schema(spark, name, _))
 
   /** The JSON object `read.drop(drop).toJSON` yields for the row that
     * `appendRecords(Seq(record))` committed, rendered on the driver, no
@@ -189,7 +195,7 @@ final class TableHandle(
     import org.apache.spark.sql.internal.SQLConf
     val conf = spark.sessionState.conf
     SQLConf.withExistingConf(conf) {
-      val typed = recordSchema(Seq(record), meta.schemaDdl)
+      val typed = recordSchema(Seq(record), meta.schemaDdl, recorded)
       val row = CatalystTypeConverters.createToCatalystConverter(typed)(
         recordRow(typed, record)).asInstanceOf[InternalRow]
       // a partitioned scan lists the partition columns last
@@ -226,8 +232,7 @@ final class TableHandle(
     pending += PendUpsert(df, orderBy)
   }
 
-  def upsertRecords(records: Seq[Map[String, Any]]): Unit =
-    upsert(inferRecords(spark, records, meta.schemaDdl))
+  def upsertRecords(records: Seq[Map[String, Any]]): Unit = upsert(typedRecords(records))
 
   /** replace = reset + append: fresh version seeded with df
     * (node.py:336-345). The whole cycle is one write-lock scope so a
@@ -246,7 +251,7 @@ final class TableHandle(
     meta.activeVersion.foreach { v =>
       val schema = catalog.schema(spark, name, v)
       val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      empty.write.mode("overwrite").parquet(catalog.versionPath(name, v))
+      writeCounted(empty, catalog.versionPath(name, v), "overwrite")
       catalog.setActive(name, v, 0L, schema)
       onSignal(name, "update")
     }
@@ -282,7 +287,7 @@ final class TableHandle(
       // predicate is TRUE, so a NULL predicate keeps its row
       catalog.withWriteLock(name) {
         flush()
-        writeNewVersion(read.filter(not(coalesce(pred, lit(false)))))
+        commit(read.filter(not(coalesce(pred, lit(false)))))
       }
       onSignal(name, "update")
     } else {
@@ -318,8 +323,17 @@ final class TableHandle(
   }
 
   // ---- internals ------------------------------------------------------
-  private def requireWrite(): Unit =
+  /** Every write starts here. A table an older engine partitioned on
+    * another column than the bucket still reads but is never written: an
+    * upsert reads only the buckets its keys fall in, so it would keep a
+    * key twice. */
+  private def requireWrite(): Unit = {
     require(mode.contains("w"), s"table '$name' opened read-only")
+    val other = meta.partitionBy.filterNot(_ == BucketCol)
+    if (other.nonEmpty) throw new UnsupportedOperationException(
+      s"table '$name' is partitioned on ${other.mkString(", ")}; only the " +
+        s"$BucketCol layout of init(hashBuckets = n) can be written")
+  }
 
   private def withAutoFields(df: DataFrame, batchSeq: Long): DataFrame = {
     val m = meta
@@ -375,20 +389,19 @@ final class TableHandle(
       case Some(v) =>
         val recorded = catalog.schema(spark, name, v)
         if (sameColumns(recorded, incoming.schema)) {
-          // partitioned tables MUST append through partitionBy or the
-          // new files land flat at the version root and corrupt the
+          // bucketed tables MUST append through the bucket partition or
+          // the new files land flat at the version root and corrupt the
           // directory layout (writeCounted partitions every write)
-          val added = writeCounted(clusterLight(
-            incoming.select(recorded.fieldNames.map(col).toSeq: _*), m.clusterBy),
+          val added = writeCounted(incoming.select(recorded.fieldNames.map(col).toSeq: _*),
             catalog.versionPath(name, v), "append")
           catalog.setActive(name, v, catalog.recordCount(name) + added, recorded)
         } else {
           // widen-only schema evolution: rewrite into a fresh version
-          writeNewVersion(unionWiden(catalog.scan(spark, name, v), incoming))
+          commit(unionWiden(catalog.scan(spark, name, v), incoming))
         }
         onSignal(name, "update")
       case None =>
-        writeNewVersion(incoming)
+        commit(incoming)
         onSignal(name, "create")
     }
   }
@@ -397,40 +410,30 @@ final class TableHandle(
     * Determinism rule (SURVEY.md §4): within one upsert batch the
     * highest (partition, row) wins; across batches the later flush wins.
     *
-    * Partition-pruned: the batch's touched partitions are named the one
-    * way the parquet writer names their directories. Only the touched
-    * directories that exist are read and merged (the version root is
-    * the one directory of an unpartitioned table); every other
-    * directory's files are HARDLINKED into the new version — O(metadata),
-    * no data copy. Upsert cost is then proportional to touched
-    * partitions, not table size (the 100 TB requirement; on an object
-    * store the link step becomes a manifest entry instead). The new
-    * count is the previous one plus the merged rows that matched no
-    * existing key.
-    *
-    * The touched partitions are named from the batch BEFORE the
-    * in-batch dedup, so they cover every winner whichever duplicate
-    * wins. They are a superset only when a key's duplicates differ in a
-    * non-key partition column; that extra directory is rewritten
-    * instead of linked, with the same rows. When a partition column is
-    * neither a key nor the hash bucket, a key's old row may sit in a
-    * directory the batch does not name; the directories of the old
-    * version that hold the batch's keys are found with a semi-join over
-    * every other directory and merged too (until files carry key
-    * statistics, that scan reads all of them, whatever the batch's
-    * size). Key-partitioned and hash-bucketed tables need no such scan.
+    * Bucket-pruned: on a hash-bucketed table the batch's buckets are
+    * named the one way the parquet writer names their directories. A
+    * key's bucket is a function of the key, so every existing row of a
+    * batch key sits in a bucket the batch names. Only those bucket
+    * directories that exist are read and merged; every other bucket's
+    * files are HARDLINKED into the new version — O(metadata), no data
+    * copy. Upsert cost is then proportional to touched buckets, not
+    * table size (the 100 TB requirement; on an object store the link
+    * step becomes a manifest entry instead). An unbucketed table is one
+    * directory, read and merged whole. The new count is the previous
+    * one plus the merged rows that matched no existing key.
     *
     * Where it runs. A batch whose plan is already a local relation on
     * the driver is re-seeded from its rows (its auto-fields, e.g. the
-    * created timestamp, are evaluated once) and named without a job.
-    * When the directories it reads are within `Catalog.scan`'s size
-    * rule, the semi-join and the merge run on the driver too
+    * created timestamp, are evaluated once) and its buckets named
+    * without a job. When the directories it reads are within
+    * `Catalog.scan`'s size rule, the merge runs on the driver too
     * ([[mergeRows]], the same rows as the Spark merge) and the new
     * directories are written by [[writeLocal]]: no Spark job. Any other
-    * batch is persisted, so the naming aggregate and the merge read the
-    * same rows (a batch may carry nondeterministic columns, e.g. its
-    * monotonic id), and merged by a Spark job with the dedup inside the
-    * merge write, counted by an observation.
+    * batch into a bucketed table is persisted, so the naming aggregate
+    * and the merge read the same rows (a batch may carry
+    * nondeterministic columns, e.g. its monotonic id), and merged by a
+    * Spark job with the dedup inside the merge write, counted by an
+    * observation.
     */
   private def doUpsert(df: DataFrame, orderBy: Seq[Column]): Unit = {
     val m = meta
@@ -446,7 +449,7 @@ final class TableHandle(
     val batch = withAutoFields(df, batchSeqFor())
     storedVersion match {
       case None =>
-        writeNewVersion(deduped(batch))
+        commit(deduped(batch))
         onSignal(name, "create")
       case Some(old) =>
         val parts = m.partitionBy
@@ -461,46 +464,28 @@ final class TableHandle(
             else mergeRows(existing, incoming, orderBy, keys)
           onDriver match {
             case Some((out, rows, added)) =>
-              val sorted = m.clusterBy.filter(_.forall(out.fieldNames.contains)).fold(rows) { cs =>
-                rows.sortWith(ascending(cs.map(out.fieldIndex), out.map(_.dataType)).lt)
-              }
               commitWith(out, base, link) { path =>
-                writeLocal(spark, LocalRelation(DataTypeUtils.toAttributes(out), sorted),
+                writeLocal(spark, LocalRelation(DataTypeUtils.toAttributes(out), rows),
                   path, "overwrite", parts.filter(out.fieldNames.contains))
                 added
               }
             case None =>
-              commit(clusterLight(mergeFrames(existing, deduped(incoming), keys), m.clusterBy),
+              commit(mergeFrames(existing, deduped(incoming), keys),
                 counted = Some(col(NewRow)), base = base, link = link)
           }
         }
-        // each value cast to string in Spark, as the writer names it
+        // each bucket cast to string in Spark, as the writer names it
         val values = (rows: DataFrame) => rows.select(parts.map(col(_).cast("string")): _*)
         def named(rows: Array[Row]): Set[String] =
           rows.map(r => partitionDir(parts, parts.indices.map(r.getString))).toSet
-        // a key can move to another value of a partition column that it
-        // does not determine; the directory holding its old row is then
-        // touched too, or that row would be linked into the new version
-        def touched(incoming: DataFrame, own: Set[String]): Set[String] =
-          if (parts.forall(p => keys.contains(p) || p == BucketCol)) own
-          else {
-            val others = catalog.scan(spark, name, old, present.filterNot(own))
-            val moved = if (local.isEmpty || Catalog.local(others).isEmpty) None
-              else movedDirs(others, incoming, keys, parts)
-            own ++ moved.getOrElse(named(values(
-              others.join(incoming.select(keys.map(col): _*), keys, "left_semi"))
-              .distinct().collect()))
-          }
-        // a batch without its partition values may land in any directory
-        if (parts.isEmpty || !parts.forall(batch.columns.contains))
-          merge(local.getOrElse(batch), present.toSet)
+        if (parts.isEmpty) merge(local.getOrElse(batch), present.toSet)
         else local match {
           case Some(l) =>
             // a projection of a local relation is collected with no job
-            merge(l, touched(l, named(values(l).collect())))
+            merge(l, named(values(l).collect()))
           case None =>
             val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try merge(pinned, touched(pinned, named(values(pinned).distinct().collect())))
+            try merge(pinned, named(values(pinned).distinct().collect()))
             finally pinned.unpersist()
         }
         onSignal(name, "update")
@@ -573,28 +558,6 @@ final class TableHandle(
     }
   }
 
-  /** The directories of `others`' rows whose keys a row of `incoming`
-    * holds (the moved-key semi-join), found on the driver from their
-    * local rows; None when a projection does not fold to local rows.
-    * Keys compare as the join compares them: cast to the types the
-    * merge's join gives them, floats normalized, a NULL never matching.
-    */
-  private def movedDirs(others: DataFrame, incoming: DataFrame, keys: Seq[String],
-      parts: Seq[String]): Option[Set[String]] = {
-    val joined = mergeFrames(others, incoming, keys).schema
-    val keyCols = keys.map(k => col(k).cast(joined(k).dataType))
-    for {
-      o <- Catalog.local(others.select(keyCols ++ parts.map(col(_).cast("string")): _*))
-      i <- Catalog.local(incoming.select(keyCols: _*))
-    } yield {
-      val key = keyOf(keys.indices, o.output.map(_.dataType))
-      val keyed = (r: InternalRow) => !keys.indices.exists(r.isNullAt)
-      val want = i.data.filter(keyed).map(key(_).copy()).toSet
-      o.data.filter(r => keyed(r) && want(key(r))).map(r => partitionDir(parts,
-        parts.indices.map(j => Option(r.getUTF8String(keys.size + j)).map(_.toString).orNull))).toSet
-    }
-  }
-
   /** Full-outer merge on `keys`, incoming values winning; [[NewRow]]
     * marks the rows that matched no existing key. */
   private def mergeFrames(existing: DataFrame, incoming: DataFrame,
@@ -613,78 +576,46 @@ final class TableHandle(
       } :+ col("e._gr_old").isNull.as(NewRow): _*)
   }
 
-  /** Range-cluster + sort rows by `init(clusterBy=...)` keys before a
-    * full-version write: parquet row-group / file min-max stats become
-    * tight, near-disjoint ranges, so scans filtering on the cluster
-    * keys skip whole row groups and files (the poor man's Z-order —
-    * single-key or prefix-ordered multi-key locality). `n` overrides
-    * the range partition count (compaction's bin-packing).
-    */
-  private def clustered(df: DataFrame, clusterBy: Option[List[String]],
-      n: Option[Int] = None): DataFrame =
-    clusterBy match {
-      case Some(cols) if cols.forall(df.columns.contains) =>
-        val cs = cols.map(col)
-        val ranged = n.map(df.repartitionByRange(_, cs: _*))
-          .getOrElse(df.repartitionByRange(cs: _*))
-        ranged.sortWithinPartitions(cs: _*)
-      case _ => df
-    }
-
-  /** Shuffle-free clustering for incremental/pruned writes: sort only
-    * within the batch's partitions (a global range shuffle per append
-    * or per upsert would defeat their economics; row-group stats still
-    * tighten within each written file).
-    */
-  private def clusterLight(df: DataFrame, clusterBy: Option[List[String]]): DataFrame =
-    clusterBy match {
-      case Some(cols) if cols.forall(df.columns.contains) =>
-        df.sortWithinPartitions(cols.map(col): _*)
-      case _ => df
-    }
-
   /** Bin-pack the active version's data files into ~`targetFileBytes`
     * outputs as a NEW version (atomic swap; the old version's files are
     * retained until vacuum). Fixes the many-small-files tax of frequent
     * appends — per-file open/footer overhead and tiny row groups.
-    * Partitioned tables end with one file per partition directory
-    * (cluster keys sorted within each); unpartitioned clustered tables
-    * re-range-cluster globally; plain tables coalesce (narrow, no
-    * shuffle). Already-packed tables (file count <= target) are a
-    * NO-OP. Purely physical: record data is unchanged, so NO update
-    * signal is emitted (downstream consumers must not re-trigger) —
-    * but a DataFrame read before the compact keeps scanning the old
-    * version dir and will not see post-compact appends (a stream
-    * cursor re-resolves the active version on every read).
+    * A bucketed table ends with one file per bucket directory; an
+    * unbucketed one coalesces (narrow, no shuffle). Already-packed
+    * tables (file count <= target) are a NO-OP. One write cycle under
+    * the table's write lock, like a flush. Purely physical: record data
+    * is unchanged, so NO update signal is emitted (downstream consumers
+    * must not re-trigger) — but a DataFrame read before the compact
+    * keeps scanning the old version dir and will not see post-compact
+    * appends (a stream cursor re-resolves the active version on every
+    * read).
     * Returns the new version id, None when nothing was rewritten.
     */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): Option[String] = {
-    requireWrite()
-    flush()
-    val m = meta
-    catalog.activePath(name)
-      .map(java.nio.file.Paths.get(_))
-      .filter(java.nio.file.Files.exists(_))
-      .flatMap { path =>
-        import scala.jdk.CollectionConverters._
-        val sizes = java.nio.file.Files.walk(path).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(java.nio.file.Files.size(_)).toList
-        val nFiles = math.max(1, math.ceil(sizes.sum.toDouble / targetFileBytes).toInt)
-        if (sizes.length <= nFiles) None // already packed: skip the rewrite
-        else {
-          val df = read
-          val parts = m.partitionBy.filter(df.columns.contains)
-          val packed =
-            if (parts.nonEmpty) // one task (→ one file) per partition dir
-              clusterLight(df.repartition(nFiles, parts.map(col): _*), m.clusterBy)
-            else if (m.clusterBy.exists(_.forall(df.columns.contains)))
-              clustered(df, m.clusterBy, Some(nFiles))
-            else df.coalesce(nFiles) // narrow: no shuffle
-          Some(commit(packed))
+  def compact(targetFileBytes: Long = 128L * 1024 * 1024): Option[String] =
+    catalog.withWriteLock(name) {
+      requireWrite()
+      flush()
+      catalog.activePath(name)
+        .map(java.nio.file.Paths.get(_))
+        .filter(java.nio.file.Files.exists(_))
+        .flatMap { path =>
+          import scala.jdk.CollectionConverters._
+          val sizes = java.nio.file.Files.walk(path).iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .map(java.nio.file.Files.size(_)).toList
+          val nFiles = math.max(1, math.ceil(sizes.sum.toDouble / targetFileBytes).toInt)
+          if (sizes.length <= nFiles) None // already packed: skip the rewrite
+          else {
+            val df = read
+            val parts = meta.partitionBy.filter(df.columns.contains)
+            val packed =
+              if (parts.nonEmpty) // each bucket's rows in one task → one file
+                df.repartition(nFiles, parts.map(col): _*)
+              else df.coalesce(nFiles) // narrow: no shuffle
+            Some(commit(packed))
+          }
         }
-      }
-  }
+    }
 
   /** The one commit sequence, shared by full writes, upsert and
     * compaction: allocate a version, write `df` into it, run `link` on
@@ -707,9 +638,6 @@ final class TableHandle(
     catalog.setActive(name, v, base + n, schema)
     v
   }
-
-  private def writeNewVersion(df: DataFrame): Unit =
-    commit(clustered(df, meta.clusterBy))
 
   /** One fresh sequence per write batch: in-place appends previously
     * reused meta.nextSeq without advancing it, so consecutive appends
@@ -936,18 +864,21 @@ object TableHandle {
   }
 
   /** Schema inference from records (node.py:303-304 "If not provided the
-    * schema will be inferred"): union of keys, widen-only value types.
+    * schema will be inferred"): union of keys, widen-only value types. A
+    * field that is null in every record takes its type in `recorded`,
+    * else string.
     */
   def inferRecords(
       spark: SparkSession,
       records: Seq[Map[String, Any]],
-      declaredDdl: Option[String]): DataFrame = {
-    val schema = recordSchema(records, declaredDdl)
+      declaredDdl: Option[String],
+      recorded: => StructType = new StructType()): DataFrame = {
+    val schema = recordSchema(records, declaredDdl, recorded)
     spark.createDataFrame(records.map(recordRow(schema, _)).asJava, schema)
   }
 
   private def recordSchema(records: Seq[Map[String, Any]],
-      declaredDdl: Option[String]): StructType =
+      declaredDdl: Option[String], recorded: => StructType): StructType =
     declaredDdl.map(StructType.fromDDL).getOrElse {
       val types = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
       records.foreach(_.foreach { case (k, v) =>
@@ -958,8 +889,10 @@ object TableHandle {
           case Some(prev) => widen(prev, t)
         }
       })
+      lazy val known = recorded
       StructType(types.map { case (n, t) =>
-        StructField(n, if (t == NullType) StringType else t)
+        StructField(n, if (t != NullType) t
+          else known.find(_.name == n).fold(StringType: DataType)(_.dataType))
       }.toSeq)
     }
 

@@ -55,6 +55,34 @@ class CatalogSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(cat.versionPath("t", v2))))
   }
 
+  test("vacuum waits for a writer holding the write lock: the version it fills survives") {
+    import spark.implicits._
+    val cat = new Catalog(tmpDir("cat-vac"))
+    val h = new TableHandle(spark, cat, "t")
+    h.append(Seq(1L).toDF("id")); h.flush()
+    val replaced = h.meta.activeVersion.get
+    val allocated = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    var v = ""
+    val writer = new Thread(() => cat.withWriteLock("t") {
+      v = cat.newVersion("t")
+      Seq(1L, 2L).toDF("id").write.parquet(cat.versionPath("t", v))
+      allocated.countDown()
+      release.await()
+      cat.setActive("t", v, 2L, idSchema)
+    })
+    writer.start()
+    allocated.await()
+    val vacuumed = java.util.concurrent.CompletableFuture.supplyAsync(() => cat.vacuum("t"))
+    Thread.sleep(300)
+    assert(!vacuumed.isDone, "vacuum ran while a writer held the lock")
+    release.countDown()
+    writer.join()
+    // the writer's version is active, so only the one it replaced is dead
+    assert(vacuumed.get() == Seq(replaced) && h.meta.activeVersion.contains(v))
+    assert(h.read.as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("concurrent batch sequences are unique across threads (per-table lock)") {
     val cat = new Catalog(tmpDir("cat-conc"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -69,22 +97,75 @@ class CatalogSpec extends SparkSpec {
 
   test("a version written before schemas were recorded still reads (inferred)") {
     import spark.implicits._
-    val root = tmpDir("cat-old")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$root/t/v00000001")
-    // meta.json as written before VersionMeta carried a schema
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "t", "meta.json"),
-      """{"name":"t","activeVersion":"v00000001",""" +
-        """"versions":[{"id":"v00000001","recordCount":2,"createdAtMs":0}],""" +
-        """"uniqueOn":["id"],"orderings":{},"schemaHints":{},"partitionBy":[],"nextSeq":2}""")
-    val cat = new Catalog(root)
-    assert(cat.meta("t").get.versions.head.schemaDdl.isEmpty)
-    val h = new TableHandle(spark, cat, "t")
-    assert(h.read.schema.fieldNames.toSeq == Seq("id", "s"))
-    assert(h.read.count() == 2)
-    // the next committed version records its schema
-    h.upsert(Seq((3L, "c")).toDF("id", "s")); h.flush()
-    assert(h.meta.versions.last.schemaDdl.contains("id BIGINT,s STRING"))
-    assert(h.read.count() == 3 && h.recordCount == 3)
+    // meta.json as written before VersionMeta carried a schema, and as
+    // written when tables could declare a clusterBy
+    for (extra <- Seq("", """"clusterBy":["id"],""")) {
+      val root = tmpDir("cat-old")
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$root/t/v00000001")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "t", "meta.json"),
+        """{"name":"t","activeVersion":"v00000001",""" +
+          """"versions":[{"id":"v00000001","recordCount":2,"createdAtMs":0}],""" +
+          """"uniqueOn":["id"],"orderings":{},"schemaHints":{},"partitionBy":[],""" +
+          extra + """"nextSeq":2}""")
+      val cat = new Catalog(root)
+      assert(cat.meta("t").get.versions.head.schemaDdl.isEmpty)
+      val h = new TableHandle(spark, cat, "t")
+      assert(h.read.schema.fieldNames.toSeq == Seq("id", "s"))
+      assert(h.read.count() == 2)
+      // the next committed version records its schema
+      h.upsert(Seq((3L, "c")).toDF("id", "s")); h.flush()
+      assert(h.meta.versions.last.schemaDdl.contains("id BIGINT,s STRING"))
+      assert(h.read.count() == 3 && h.recordCount == 3, extra)
+    }
+  }
+
+  test("a version partitioned on another column reads on both paths and refuses every write") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    // typed partition values and a NULL one, as an engine that had
+    // init(partitionBy = ...) wrote them; ASCII values, since a JVM whose
+    // file-name encoding is not UTF-8 cannot name a directory after é
+    val cases = Seq(
+      "STRING" -> Seq("a", "01", null),
+      "BIGINT" -> Seq(1L, -20L, null),
+      "TIMESTAMP" -> Seq(java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789"), null),
+      "DATE" -> Seq(java.sql.Date.valueOf("2024-03-01"), java.sql.Date.valueOf("1970-01-01"), null),
+      "BOOLEAN" -> Seq(true, false, null),
+      "DECIMAL(12,3)" ->
+        Seq(new java.math.BigDecimal("123.456"), new java.math.BigDecimal("-0.001"), null))
+    for ((t, values) <- cases) {
+      val schema = StructType.fromDDL(s"id BIGINT, s STRING, p $t")
+      val rows = values.zipWithIndex.flatMap { case (v, i) =>
+        Seq(Row(i * 2L, s"x$i", v), Row(i * 2L + 1, null, v)) }
+      val h = {
+        val root = tmpDir("cat-part")
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+          .write.partitionBy("p").parquet(s"$root/t/v00000001")
+        val ddl = StructType(schema.filterNot(_.name == "p") ++ schema.filter(_.name == "p")).toDDL
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "t", "meta.json"),
+          """{"name":"t","activeVersion":"v00000001",""" +
+            s""""versions":[{"id":"v00000001","recordCount":${rows.size},"createdAtMs":0,""" +
+            s""""schemaDdl":"$ddl"}],"uniqueOn":["id"],"orderings":{},"schemaHints":{},""" +
+            """"partitionBy":["p"],"clusterBy":["s"],"nextSeq":2}""")
+        new TableHandle(spark, new Catalog(root), "t")
+      }
+      val ((read, _), jobs) = graft.Parity.same(spark) {
+        (graft.Parity.twice((graft.Parity.rows(h.read),
+          graft.Parity.rows(h.read.filter(col("id") > 2).select("p", "id")))), h.schema.toDDL)
+      }
+      assert(jobs == 0 && read._1._2.size == rows.size, t)
+      val before = h.meta
+      val batch = spark.createDataFrame(java.util.Arrays.asList(rows.take(1): _*), schema)
+      for (write <- Seq[() => Unit](() => h.append(batch), () => h.upsert(batch),
+          () => h.truncate(), () => h.compact())) {
+        val e = intercept[UnsupportedOperationException](write())
+        assert(e.getMessage.contains("partitioned on p"), e.getMessage)
+      }
+      // init cannot switch the layout to buckets under the old version
+      h.init(hashBuckets = Some(4))
+      intercept[UnsupportedOperationException](h.append(batch))
+      assert(h.meta.copy(hashBuckets = None) == before && graft.Parity.rows(h.read) == read._1)
+    }
   }
 
   test("a scan is read on the driver only within the size rule's files, bytes and rows") {

@@ -30,6 +30,11 @@ class TableHandleSpec extends SparkSpec {
     assert(df.schema("v").dataType.typeName == "double") // long widened
     assert(df.columns.toSet == Set("id", "v", "s", "note"))
     assert(df.where(col("note").isNull).count() == 1)
+    // a field null in every record keeps its recorded type
+    h.appendRecords(Seq(Map("id" -> 3, "v" -> null)))
+    h.flush()
+    assert(h.read.schema("v").dataType.typeName == "double")
+    assert(h.read.where(col("v").isNull).count() == 1)
   }
 
   test("upsert: insert-or-update on unique_on, last wins, idempotent") {
@@ -64,13 +69,27 @@ class TableHandleSpec extends SparkSpec {
 
   test("truncate keeps version and schema, deletes rows") {
     import spark.implicits._
-    val h = handle(tmpDir("tbl"))
-    h.append(Seq((1L, "a")).toDF("id", "s")); h.flush()
-    val v = h.meta.activeVersion.get
-    h.truncate()
-    assert(h.meta.activeVersion.contains(v))
-    assert(h.read.count() == 0)
-    assert(h.read.columns.toSeq == Seq("id", "s"))
+    import scala.jdk.CollectionConverters._
+    for (buckets <- Seq(None, Some(4))) {
+      val h = handle(tmpDir("tbl")).init(uniqueOn = Seq("id"), hashBuckets = buckets)
+      h.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s")); h.flush()
+      val v = h.meta.activeVersion.get
+      val (_, jobs) = graft.JobCounter.jobs(spark)(h.truncate())
+      assert(jobs == 0, s"buckets = $buckets")
+      assert(h.meta.activeVersion.contains(v) && h.recordCount == 0)
+      assert(h.read.count() == 0)
+      assert(h.read.columns.toSeq == Seq("id", "s") ++ buckets.map(_ => TableHandle.BucketCol))
+      // a bucketed version keeps its _gr_bucket=N/ layout: no data file at the root
+      val root = java.nio.file.Paths.get(h.catalog.versionPath("t", v))
+      val atRoot = java.nio.file.Files.list(root).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(atRoot == (if (buckets.isEmpty) 1 else 0), s"buckets = $buckets")
+      h.append(Seq((3L, "c")).toDF("id", "s")); h.flush()
+      h.upsert(Seq((3L, "C"), (4L, "d")).toDF("id", "s")); h.flush()
+      assert(h.read.select("id", "s").as[(Long, String)].collect().sorted.toSeq ==
+        Seq((3L, "C"), (4L, "d")), s"buckets = $buckets")
+      assert(h.recordCount == 2)
+    }
   }
 
   test("reset: pointer swap, then read uses declared schema") {
@@ -195,22 +214,6 @@ class TableHandleSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("_gr_bucket"))
   }
 
-  test("date-partitioned table: writes are dir-partitioned, filters prune") {
-    import spark.implicits._
-    val h = handle(tmpDir("tbl")).init(partitionBy = Seq("day"))
-    h.append(Seq((1L, "2020-01-01"), (2L, "2020-01-02"), (3L, "2020-01-02"))
-      .toDF("id", "day"))
-    h.flush()
-    val path = h.catalog.activePath("t").get
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "day=2020-01-01")))
-    // a Spark scan prunes; a table this small is read on the driver
-    val plan = graft.Parity.sparkPath(h.read.where(col("day") === "2020-01-02")
-      .queryExecution.executedPlan.toString)
-    assert(plan.contains("PartitionFilters"))
-    assert(h.read.where(col("day") === "2020-01-02").count() == 2)
-  }
-
   test("append with a changed schema widens into a fresh version") {
     import spark.implicits._
     val h = handle(tmpDir("tbl"))
@@ -262,27 +265,6 @@ class TableHandleSpec extends SparkSpec {
     assert(chunks.flatten.map(_("id").asInstanceOf[Long]).sorted == (1L to 10L).toList)
   }
 
-  test("upsert over 40 partitions plus the NULL partition keeps each key once") {
-    import spark.implicits._
-    val h = handle(tmpDir("wide")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
-    val base = (0 until 400).map(i => (i.toLong, Option(i % 80), s"v$i")) ++
-      Seq((1000L, Option.empty[Int], "n0"), (1001L, Option.empty[Int], "n1"))
-    h.append(base.toDF("id", "p", "s")); h.flush()
-    // updates in the 40 even partitions plus the NULL partition
-    val incoming = (0 until 140).map(i => (i.toLong * 2, Option((i * 2) % 80), s"NEW$i")) ++
-      Seq((1001L, Option.empty[Int], "NULLNEW"))
-    h.upsert(incoming.toDF("id", "p", "s")); h.flush()
-    val expected = (base ++ incoming).map(r => r._1 -> r._3).toMap
-    val rows = h.read.select("id", "s").collect().map(r => r.getLong(0) -> r.getString(1))
-    // nothing duplicated or dropped, every update applied
-    assert(rows.length == expected.size && rows.toMap == expected)
-    assert(h.recordCount == h.read.count())
-    // null partition: untouched sibling kept, touched row merged
-    val nulls = h.read.filter(col("id") >= 1000L).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[String]("s")).toMap
-    assert(nulls == Map(1000L -> "n0", 1001L -> "NULLNEW"))
-  }
-
   test("upsert into an empty bucket of a 16-bucket table commits and counts") {
     import spark.implicits._
     val h = handle(tmpDir("emptybucket")).init(uniqueOn = Seq("id"), hashBuckets = Some(16))
@@ -300,39 +282,6 @@ class TableHandleSpec extends SparkSpec {
     // every allocated version was activated: the create, then the upsert
     val m = h.meta
     assert(m.versions.map(_.id) == List(v1, m.activeVersion.get) && m.activeVersion.get != v1)
-  }
-
-  test("partition values read back with their written type") {
-    import spark.implicits._
-    val h = handle(tmpDir("ptype")).init(partitionBy = Seq("p"))
-    h.append(Seq((1L, "01"), (2L, "10")).toDF("id", "p")); h.flush()
-    val v1 = h.meta.activeVersion.get
-    assert(h.read.schema("p").dataType == org.apache.spark.sql.types.StringType)
-    assert(h.read.orderBy("id").select("p").as[String].collect().toSeq == Seq("01", "10"))
-    // a second same-typed append stays in place: no widen rewrite
-    h.append(Seq((3L, "01")).toDF("id", "p")); h.flush()
-    assert(h.meta.activeVersion.contains(v1))
-    assert(h.read.orderBy("id").select("p").as[String].collect().toSeq == Seq("01", "10", "01"))
-    assert(h.recordCount == 3)
-  }
-
-  test("upsert touching a null partition value neither duplicates nor drops rows") {
-    import spark.implicits._
-    val h = handle(tmpDir("nullpart")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
-    h.append(Seq((1L, Option("a"), "x"), (2L, Option.empty[String], "y"),
-      (3L, Option.empty[String], "z"), (4L, Option("b"), "w")).toDF("id", "p", "s"))
-    h.flush()
-    // touch the null partition (id=2) and the 'a' partition (id=5)
-    h.upsert(Seq((2L, Option.empty[String], "Y2"), (5L, Option("a"), "n"))
-      .toDF("id", "p", "s"))
-    h.flush()
-    val rows = h.read.select("id", "s").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // null-partition rows merged (not hardlinked back as duplicates),
-    // untouched siblings in the null partition survive
-    assert(h.read.count() == 5)
-    assert(rows == Map(1L -> "x", 2L -> "Y2", 3L -> "z", 4L -> "w", 5L -> "n"))
-    assert(h.recordCount == 5)
   }
 
   test("init(schemaRef = name) resolves a registered CommonModel schema") {
@@ -394,47 +343,17 @@ class TableHandleSpec extends SparkSpec {
 
   test("compact on a partitioned table leaves one file per partition dir") {
     import spark.implicits._
-    val h = handle(tmpDir("compactp")).init(partitionBy = Seq("p"))
+    val h = handle(tmpDir("compactp")).init(uniqueOn = Seq("id"), hashBuckets = Some(3))
     (0 until 4).foreach { i =>
-      h.append((0 until 10).map(j => (i * 10L + j, j % 3, s"x$i$j")).toDF("id", "p", "s"))
+      h.append((0 until 10).map(j => (i * 10L + j, s"x$i$j")).toDF("id", "s"))
       h.flush()
     }
+    assert(parquetFiles(h).size == 12, "one file per bucket per append")
     h.compact()
     val byDir = parquetFiles(h).groupBy(_.getParent.getFileName.toString)
-    assert(byDir.keySet == Set("p=0", "p=1", "p=2"))
+    assert(byDir.keySet == (0 until 3).map(b => s"${TableHandle.BucketCol}=$b").toSet)
     assert(byDir.values.forall(_.size == 1))
     assert(h.read.count() == 40 && h.recordCount == 40)
-  }
-
-  test("clusterBy writes range-clustered files with near-disjoint min/max stats") {
-    import spark.implicits._
-    val h = handle(tmpDir("clustered")).init(clusterBy = Seq("k"))
-    // shuffled input: without clustering every file would span ~the full range
-    val rows = scala.util.Random.shuffle((0 until 4000).toList)
-      .map(i => (i.toLong, s"pay$i"))
-    // AQE would coalesce this tiny write to one range partition and
-    // make the multi-file assertion vacuous
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try h.replace(rows.toDF("k", "s").repartition(8))
-    finally saved match {
-      case Some(v) => spark.conf.set(coalesceKey, v)
-      case None => spark.conf.unset(coalesceKey)
-    }
-    val files = parquetFiles(h)
-    assert(files.size > 1)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f.toString).agg(min("k"), max("k")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    // ranges must not overlap: each file's min exceeds the previous max
-    ranges.sliding(2).foreach {
-      case Seq((_, e1), (s2, _)) => assert(s2 > e1,
-        s"file ranges overlap: $ranges")
-      case _ =>
-    }
-    assert(h.read.count() == 4000)
   }
 
   test("read-only mode rejects writes") {
@@ -579,7 +498,7 @@ class TableHandleSpec extends SparkSpec {
     assert(h.read.count() == 2)
   }
 
-  test("upsert of a batch with in-batch duplicate keys equals the model: 16 buckets, and a non-key partition") {
+  test("upsert of a batch with in-batch duplicate keys equals the model over 16 buckets") {
     import spark.implicits._
     def model(rows: Seq[(Long, String, Long, String)]): Map[Long, (String, String)] =
       rows.groupBy(_._1).map { case (k, rs) => k -> { val w = rs.maxBy(_._3); (w._2, w._4) } }
@@ -589,34 +508,17 @@ class TableHandleSpec extends SparkSpec {
       rs.map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     }
     val seed = (1L to 20L).map(k => (k, s"p${k % 3}", 0L, s"v$k"))
-    // key 3 and key 25 twice; in the partitioned table their duplicates
-    // sit in different partitions (the winner moves key 3 from p0 to p9)
+    // key 3 and key 25 twice, their duplicates differing in p and v
     val batch = Seq((3L, "p0", 1L, "old3"), (3L, "p9", 2L, "new3"), (25L, "p1", 5L, "new25"),
       (25L, "p2", 1L, "old25"), (7L, "p1", 9L, "new7"))
-    val bucketed = (h: TableHandle) => h.init(uniqueOn = Seq("k"), hashBuckets = Some(16))
-    val partitioned = (h: TableHandle) => h.init(uniqueOn = Seq("k"), partitionBy = Seq("p"))
-    for ((layout, init) <- Seq("16 buckets" -> bucketed, "partitioned by p" -> partitioned);
-         local <- Seq(true, false)) {
-      val h = init(handle(tmpDir("tbl")))
+    for (local <- Seq(true, false)) {
+      val h = handle(tmpDir("tbl")).init(uniqueOn = Seq("k"), hashBuckets = Some(16))
       h.upsert(seed.toDF("k", "p", "ts", "v")); h.flush()
       val df = batch.toDF("k", "p", "ts", "v")
       h.upsert(if (local) df else df.repartition(2), orderBy = Seq($"ts")); h.flush()
       val want = model(seed) ++ model(batch)
-      assert(got(h) == want, s"$layout, local batch = $local")
+      assert(got(h) == want, s"local batch = $local")
       assert(h.recordCount == want.size)
-    }
-  }
-
-  test("upsert moving a key to another non-key partition leaves no stale row") {
-    import spark.implicits._
-    for (local <- Seq(true, false)) {
-      val h = handle(tmpDir("tbl")).init(uniqueOn = Seq("k"), partitionBy = Seq("p"))
-      h.upsert(Seq((1L, "a", "v1"), (2L, "b", "v2")).toDF("k", "p", "v")); h.flush()
-      val df = Seq((1L, "b", "v1b")).toDF("k", "p", "v")
-      h.upsert(if (local) df else df.repartition(2)); h.flush()
-      val got = h.read.select("k", "p", "v").as[(Long, String, String)].collect().sorted
-      assert(got.toSeq == Seq((1L, "b", "v1b"), (2L, "b", "v2")), s"local batch = $local")
-      assert(h.recordCount == 2)
     }
   }
 
@@ -790,7 +692,7 @@ class TableHandleSpec extends SparkSpec {
   private def localRows(rows: Seq[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType) = localAndSpread(rows, schema)._1
 
-  /** The parity case's rows, plus keys 3 to 6 in more partitions. */
+  /** The parity case's rows, plus keys 3 to 6. */
   private val seedRows: Seq[org.apache.spark.sql.Row] = typedRows ++ (3L to 6L).map { i =>
     org.apache.spark.sql.Row(i, i * 0.5, s"s$i", i % 2 == 0, null,
       java.sql.Timestamp.valueOf(s"2024-03-0$i 00:00:0$i"), java.sql.Date.valueOf(s"2024-0$i-01"),
@@ -798,7 +700,7 @@ class TableHandleSpec extends SparkSpec {
   }
 
   /** An update with NULLs (key 1 keeps its other values), a NULL key, a
-    * moved key (3: other partition values), key 5 twice (its greater
+    * key with every other value changed (3), key 5 twice (its greater
     * `d` first, so `orderBy d` and last-row pick different rows) and a
     * new key. */
   private val batchRows: Seq[org.apache.spark.sql.Row] = {
@@ -817,19 +719,11 @@ class TableHandleSpec extends SparkSpec {
 
   private val layouts: Seq[(String, TableHandle => TableHandle)] = Seq(
     "unpartitioned" -> (_.init(uniqueOn = Seq("l"))),
-    "4 hash buckets" -> (_.init(uniqueOn = Seq("l"), hashBuckets = Some(4))),
-    "clustered by d" -> (_.init(uniqueOn = Seq("l"), clusterBy = Seq("d"))),
-    // ASCII values: a JVM whose file-name encoding is not UTF-8 cannot
-    // name a directory after `s`'s é
-    "a string partition with a NULL value" -> (_.init(uniqueOn = Seq("l"), partitionBy = Seq("n"))),
-    "a timestamp partition" -> (_.init(uniqueOn = Seq("l"), partitionBy = Seq("ts"))),
-    "date, boolean and decimal partitions" ->
-      (_.init(uniqueOn = Seq("l"), partitionBy = Seq("dt", "b", "dec"))))
+    "4 hash buckets" -> (_.init(uniqueOn = Seq("l"), hashBuckets = Some(4))))
 
   test("a small table reads on the driver as the Spark scan reads it, every type and layout") {
     for ((layout, init) <- layouts) {
-      // the jobs of the reads, on the driver path first (a clustered
-      // table's seed write is a Spark job on either path)
+      // the jobs of the reads, on the driver path first
       val jobs = scala.collection.mutable.ArrayBuffer.empty[Long]
       graft.Parity.same(spark) {
         val h = init(handle(tmpDir("parity")))
@@ -873,8 +767,7 @@ class TableHandleSpec extends SparkSpec {
       Row(null, "nullkey2", "a"), Row(0.0, "a-zero", null), Row(2.5, "new", "c"))
     val dlayouts: Seq[(String, TableHandle => TableHandle)] = Seq(
       "unpartitioned" -> (_.init(uniqueOn = Seq("k"))),
-      "4 hash buckets" -> (_.init(uniqueOn = Seq("k"), hashBuckets = Some(4))),
-      "partitioned on a non-key column" -> (_.init(uniqueOn = Seq("k"), partitionBy = Seq("p"))))
+      "4 hash buckets" -> (_.init(uniqueOn = Seq("k"), hashBuckets = Some(4))))
     for ((layout, init) <- dlayouts; orderBy <- Seq(Nil, Seq(col("v")))) {
       val ((rows, _), jobs) = graft.Parity.same(spark) {
         val h = init(handle(tmpDir("keys")))
@@ -888,45 +781,6 @@ class TableHandleSpec extends SparkSpec {
           "[1.5,x,null]", "[2.5,new,c]", "[NaN,nan2,b]",
           if (orderBy.isEmpty) "[0.0,a-zero,a]" else "[0.0,negzero,c]",
           "[null,nullkey,a]", "[null,nullkey2,a]").sorted, s"orderBy = $orderBy")
-    }
-  }
-
-  test("a driver merge writes a clustered table's file in clusterBy order, NULLs first") {
-    val h = handle(tmpDir("cluster")).init(uniqueOn = Seq("l"), clusterBy = Seq("d"))
-    h.append(localRows(seedRows, allTypes)); h.flush()
-    val (_, jobs) = graft.JobCounter.jobs(spark) {
-      h.upsert(localRows(batchRows, allTypes)); h.flush()
-    }
-    assert(jobs == 0)
-    val files = parquetFiles(h)
-    assert(files.size == 1)
-    val d = spark.read.parquet(files.head.toString).select("d").collect()
-      .map(r => Option(r.get(0)).map(_.asInstanceOf[Double])).toSeq
-    assert(d.size == 9 && d == d.sorted, d)
-  }
-
-  test("an upsert into a table partitioned on a non-key column scans the others on the driver") {
-    import spark.implicits._
-    def table(): TableHandle = {
-      val h = handle(tmpDir("moved")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
-      h.append((0L until 2000L).map(i => (i, i % 20, s"v$i")).toDF("id", "p", "s")); h.flush()
-      h
-    }
-    // key 7 moves from p=7 to p=3; key 4000 is new
-    val batch = Seq((7L, 3L, "moved"), (4000L, 5L, "new")).toDF("id", "p", "s")
-    val want = (0L until 2000L).map(i => i -> ((i % 20, s"v$i"))).toMap ++
-      Map(7L -> ((3L, "moved")), 4000L -> ((5L, "new")))
-    def rows(h: TableHandle) =
-      h.read.select("id", "p", "s").as[(Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3)))
-    for (local <- Seq(true, false)) {
-      val h = table()
-      val (_, jobs) = graft.JobCounter.jobs(spark) {
-        h.upsert(if (local) batch else batch.repartition(2)); h.flush()
-      }
-      val got = rows(h)
-      assert(got.length == want.size && got.toMap == want && h.recordCount == want.size)
-      info(s"local batch = $local: $jobs Spark jobs")
-      if (local) assert(jobs == 0)
     }
   }
 

@@ -343,6 +343,12 @@ class GraphRunnerSpec extends SparkSpec {
     val resp = runner.tableHandle("hook_responses").read
     assert(resp.count() == 1)
     assert(resp.head().getAs[String]("patterns_request_key") == "r1")
+    // a null field keeps the recorded column type, so r1's body is unchanged
+    val first = runner.webhookResponse("hook", "r1")
+    assert(first.exists(_.contains("\"n\":2")), first)
+    runner.respondToRequest("hook", "r2", Map("status" -> "ok", "n" -> null))
+    assert(runner.tableHandle("hook_responses").schema("n").dataType.sql == "BIGINT")
+    assert(runner.webhookResponse("hook", "r1") == first)
   }
 
   test("a JSON null keeps the recorded type on both inference ingest paths") {
